@@ -3,7 +3,7 @@ package graft
 import java.io.PrintStream
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
-import graft.exec.{QueryManager, QueryState, ResultSet, TrinoDialect}
+import graft.exec.{QueryManager, QueryState, ResultSet, Share, TrinoDialect}
 import graft.functions.FunctionRegistry
 import graft.profile.TableDiff
 import graft.render.TsvRenderer
@@ -59,11 +59,19 @@ object Cli {
     *   ATHENA_WORKGROUP, aws-athena-workgroup.sh's selection rule).
     *   Injectable like out/err/workDir so specs can drive the
     *   non-primary branch without mutating the JVM environment.
+    *
+    * Every intermediate the command shares is released when it
+    * returns (one [[graft.exec.Share.scope]] per command).
     */
   def run(args: Array[String], spark: SparkSession,
       out: PrintStream, err: PrintStream,
       workDir: Path = Paths.get("."),
-      env: String => Option[String] = sys.env.get): Int = {
+      env: String => Option[String] = sys.env.get): Int =
+    Share.scope(spark)(dispatch(args, spark, out, err, workDir, env))
+
+  private def dispatch(args: Array[String], spark: SparkSession,
+      out: PrintStream, err: PrintStream, workDir: Path,
+      env: String => Option[String]): Int = {
     val command = args.headOption.getOrElse("")
     def arg(i: Int): String = if (args.length > i) args(i) else ""
 
@@ -108,9 +116,8 @@ object Cli {
             // the two rendered profile files the reference diffs
             // (aws-athena.sh:194-196); headless stand-in for the
             // interactive `vimdiff`: print the structured cell diff
-            val (basePath, targetPath) = TableDiff.renderPair(
+            val (basePath, targetPath, diffs) = TableDiff.vimdiff(
               spark, arg(1), arg(2), workDir.toString)
-            val diffs = TableDiff.differences(spark, arg(1), arg(2))
             out.println(TsvRenderer.aligned(ResultSet.fromDataFrame(diffs)))
             out.println(s"wrote ${basePath.getFileName} ${targetPath.getFileName}")
             0

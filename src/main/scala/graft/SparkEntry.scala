@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.catalog.{InfoSchema, Tables}
+import graft.exec.Share
 import graft.ext.{Bucketing, Curation, Decontamination, Dedup, Events, Graph, Multimodal, Packing, Sampling, Sharding, Similarity, TableLog, TextStats}
 import graft.profile.TableProfiler
 
@@ -808,7 +809,7 @@ object SparkEntry {
   // gate's hashes are unchanged), 32 at sf0.1, 100 at sf1, 316 at
   // sf10. The oracle twins derive the same value in SQL.
   // The count is MEMOIZED per (application, backing file set) — the
-  // leafCounts posture (ADVICE r11): adaptiveNlist is called at
+  // Share.memo posture (ADVICE r11): adaptiveNlist is called at
   // DataFrame-construction time inside four benchmarked queries, and
   // an un-memoized count() would charge a full scan job to every
   // timed invocation. The first input file identifies the registered
@@ -1287,7 +1288,7 @@ object SparkEntry {
   private def sharedFrame(s: SparkSession, kind: String, sfDir: String)(
       build: => DataFrame): DataFrame =
     sharedFrames.getOrElseUpdate(
-      (s.sparkContext.applicationId, kind, sfDir), Dedup.materialize(build))
+      (s.sparkContext.applicationId, kind, sfDir), Share.checkpoint(build))
 
   private def kmeansAssigned(s: SparkSession, sfDir: String): DataFrame =
     sharedFrame(s, "kmeans_assign", sfDir) {
@@ -2069,7 +2070,7 @@ object SparkEntry {
       // each would re-run the scan+tokenize doc-stats build (r15 plan
       // capture: 3 text scans). The cut is doc-count-sized.
       graft.ext.Stats.spearmanByGroup(
-        graft.ext.Dedup.shareLazy(
+        Share.lazily(
           TextStats.withDocStats(s.table("documents"))
             .select("source", "n_chars", "quality_score")),
         "source", "n_chars", "quality_score").orderBy("source")

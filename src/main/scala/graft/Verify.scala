@@ -23,16 +23,13 @@ object Verify {
     // so "no parquet" can never read as "pass".
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.foreach { case (name, fn) =>
-      // drop persisted-plan cache entries between queries (see
-      // Bench.once(): persist-shared intermediates are CacheManager-
-      // registered and strongly referenced — 294 queries of them
-      // would accumulate for the whole run, and a later query
-      // embedding an identical subplan would silently read another
-      // query's blocks instead of exercising its own plan)
-      spark.sharedState.cacheManager.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // one Share.scope per query (see Bench.once()): a later query
+      // embedding an identical subplan must exercise its own plan, not
+      // read this query's shared blocks
+      try graft.exec.Share.scope(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
         errors(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }

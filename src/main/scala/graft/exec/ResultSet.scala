@@ -34,7 +34,11 @@ object ResultSet {
     */
   def fromDataFrame(df: DataFrame): ResultSet = {
     val labels = df.columns.toSeq
-    val stringified = df.select(labels.map(c => col(c).cast(StringType)): _*)
+    // by position: a label may repeat or contain a dot, which `col`
+    // would read as a struct field
+    val positional = labels.indices.map(i => s"_$i")
+    val stringified = df.toDF(positional: _*)
+      .select(positional.map(c => col(c).cast(StringType)): _*)
     val rows = stringified.collect().toSeq.map { row =>
       labels.indices.map(i => if (row.isNullAt(i)) "" else row.getString(i))
     }

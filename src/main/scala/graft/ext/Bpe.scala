@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.exec.Share
 
 /** BPE (byte-pair-encoding) merge learning over the corpus — the
   * tokenizer-training slot of the pipeline. A BPE vocabulary is
@@ -97,7 +98,7 @@ object Bpe {
   /** Learn `rounds` BPE merges: per round, count pairs, take the
     * (count desc, pair asc) argmax — ONE driver-collected scalar row,
     * the same posture as Packing's shard offsets — merge it
-    * everywhere, repeat on the [[Dedup.materialize]]d state. Returns
+    * everywhere, repeat on the [[Share.checkpoint]]d state. Returns
     * (round, sym_a, sym_b, merge_count) — merge_count is the pair's
     * frequency BEFORE the merge, the number the trainer ranked by.
     * Stops early if no pair remains.
@@ -120,7 +121,7 @@ object Bpe {
     */
   private def train(df: DataFrame, rounds: Int, textCol: String)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var words = Dedup.materialize(wordSymbols(df, textCol))
+    var words = Share.checkpoint(wordSymbols(df, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 1
     var exhausted = false
@@ -133,7 +134,7 @@ object Bpe {
         val (a, b, n) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r, a, b, n))
-        words = Dedup.materialize(applyMerge(words, a, b))
+        words = Share.checkpoint(applyMerge(words, a, b))
         r += 1
       }
     }

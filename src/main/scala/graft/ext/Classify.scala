@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.exec.Share
 
 /** Multinomial Naive Bayes over token counts — the fastText-style
   * document classifier slot of the pipeline (quality classifiers,
@@ -40,13 +41,17 @@ object Classify {
     * multi-labeler agreement operators, whose labelers are disjoint
     * pipelines over the same corpus — one labeler's stage tail
     * back-fills cores with the next labeler's stages instead of
-    * leaving them idle.
+    * leaving them idle. Each labeler runs in the caller's
+    * [[Share.scope]], and all of them finish before the first failure
+    * is rethrown, so the scope outlives every share they make.
     */
   private def concurrently[T](fs: (() => T)*): Seq[T] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    fs.map(f => Future(f())).map(Await.result(_, Duration.Inf))
+    val running = fs.map(Share.carry(_)).map(f => Future(f()))
+    running.foreach(Await.ready(_, Duration.Inf))
+    running.map(_.value.get.get)
   }
 
   /** Laplace-smoothed per-(token, label) log-likelihoods over the
@@ -76,7 +81,7 @@ object Classify {
       .select(col(labelCol).as("label"),
         explode_outer(TextStats.tokens(col(textCol))).as("token"))
       .filter(col("token").isNotNull)
-    Dedup.shareLazy(
+    Share.lazily(
       toks.groupBy("label", "token").agg(count(lit(1)).as("c")))
   }
 
@@ -110,15 +115,6 @@ object Classify {
           .cast(DecimalType(18, 9)).as("prior"))
   }
 
-  /** Score every document against every class and keep the argmax:
-    * (idCol, actual, predicted, score) — `score` the winning class's
-    * exact decimal log-posterior rendered at 5 decimals, `predicted`
-    * NULL for zero-token documents (nothing to score; real pipelines
-    * route those to a fallback, and hiding them would be a silent
-    * drop). Here the corpus scores itself (the self-train smoke of a
-    * classifier slot); a train/apply split persists
-    * [[nbTokenLikelihoods]]/[[nbPriors]] and joins them instead.
-    */
   /** Lazily-shared per-doc (idCol, label, token, tf) counts — the ONE
     * tokenization pass the whole classifier (and, in the agreement
     * operators, the langid labeler too) derives from. Package-private
@@ -136,9 +132,18 @@ object Classify {
     // CONCURRENT jobs, and concurrent stages racing to populate a
     // lazy cache duplicate the tokenization they are meant to share —
     // a checkpoint before the fan-out computes it exactly once.
-    if (eager) Dedup.materializeWide(plan) else Dedup.shareLazy(plan)
+    if (eager) Share.checkpointWide(plan) else Share.lazily(plan)
   }
 
+  /** Score every document against every class and keep the argmax:
+    * (idCol, actual, predicted, score) — `score` the winning class's
+    * exact decimal log-posterior rendered at 5 decimals, `predicted`
+    * NULL for zero-token documents (nothing to score; real pipelines
+    * route those to a fallback, and hiding them would be a silent
+    * drop). Here the corpus scores itself (the self-train smoke of a
+    * classifier slot); a train/apply split persists
+    * [[nbTokenLikelihoods]]/[[nbPriors]] and joins them instead.
+    */
   def nbPredict(df: DataFrame, labelCol: String = "lang",
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     nbPredictFromCounts(df, docTokenCounts(df, labelCol, idCol, textCol),
@@ -231,12 +236,12 @@ object Classify {
     // consumer re-ran scan+tokenize+count), so the cut is a lazy
     // persist — one shared InMemoryRelation, no serialization barrier
     // (label rides along: functionally dependent on the doc).
-    val base = Dedup.shareLazy(
+    val base = Share.lazily(
       toks.groupBy(col(idCol), col("fold"), col("label"), col("token"))
         .agg(count(lit(1)).as("__cnt")))
     // cf has four consumers of its own (cg, ntf, tokPerFold, and the
     // scoring join) — same duplication story one level up, so same cut
-    val cf = Dedup.shareLazy(base.groupBy("fold", "label", "token")
+    val cf = Share.lazily(base.groupBy("fold", "label", "token")
       .agg(sum(col("__cnt")).as("c")))
     val cg = cf.groupBy("label", "token").agg(sum(col("c")).as("cg"))
     // per-(fold, label) TRAINING token totals = global(label) − fold's
@@ -348,11 +353,11 @@ object Classify {
     // doc-count-sized leaf; the kappa algebra below reads leaves.
     val dtc = docTokenCounts(df, labelCol, idCol, textCol, eager = true)
     val Seq(nb, heur) = concurrently(
-      () => Dedup.materialize(
+      () => Share.checkpoint(
         nbPredictFromCounts(df, dtc, labelCol, idCol, textCol)
           .filter(col("predicted").isNotNull)
           .select(col(idCol), col("predicted").as("nb_lang"))),
-      () => Dedup.materialize(TextStats.langIdFromCounts(dtc, idCol)
+      () => Share.checkpoint(TextStats.langIdFromCounts(dtc, idCol)
         .select(col(idCol), col("predicted_lang").as("heur_lang"))))
     val cm = nb.join(heur, idCol)
       .groupBy("nb_lang", "heur_lang").agg(count(lit(1)).as("c"))
@@ -411,18 +416,18 @@ object Classify {
     // algebra, not the sum the serial checkpoints would pay.
     val dtc = docTokenCounts(df, labelCol, idCol, textCol, eager = true)
     val Seq(nb, heur, chunk) = concurrently(
-      () => Dedup.materialize(
+      () => Share.checkpoint(
         nbPredictFromCounts(df, dtc, labelCol, idCol, textCol)
           .filter(col("predicted").isNotNull)
           .select(col(idCol), col("predicted").as("l1"))),
-      () => Dedup.materialize(TextStats.langIdFromCounts(dtc, idCol)
+      () => Share.checkpoint(TextStats.langIdFromCounts(dtc, idCol)
         .select(col(idCol), col("predicted_lang").as("l2"))),
-      () => Dedup.materialize(TextStats.langIdChunks(spark, df, chunkTokens)
+      () => Share.checkpoint(TextStats.langIdChunks(spark, df, chunkTokens)
         .select(col(idCol), col("majority_lang").as("l3"))))
     // tri feeds FOUR consumers (the s-aggregate plus the 3-way label
     // union); without materialization each consumer can re-run the
     // NB-training + langId + chunk-langId pipelines end to end.
-    val tri = Dedup.materialize(
+    val tri = Share.checkpoint(
       nb.join(heur, Seq(idCol)).join(chunk, Seq(idCol)))
     val pat = when(col("l1") === col("l2") && col("l2") === col("l3"), 9L)
       .when(col("l1") === col("l2") || col("l2") === col("l3") ||

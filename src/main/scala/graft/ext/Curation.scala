@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.Share
 
 /** End-to-end corpus curation decision — the operator that turns the
   * pipeline's signals (near-dup clustering, per-document quality
@@ -132,7 +133,7 @@ object Curation {
     // from the materialized per-source grid (score derivation is the
     // expensive upstream — without the cut each grid/total would
     // re-tokenize the corpus; measured 2.4× on the sf0.1 sweep)
-    val gridG = Dedup.materialize(
+    val gridG = Share.checkpoint(
       base.groupBy(col("__g"), col("__v"))
         .agg(count(lit(1)).as("__c"))
         .withColumn("__cum", sum(col("__c")).over(

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.exec.Share
 
 /** Deduplication operators for a large-scale document corpus —
   * training-data-pipeline extensions (SURVEY.md §7.5; the reference
@@ -573,7 +574,7 @@ object Dedup {
       .withColumn("__toks", array_distinct(TextStats.tokens(col("__k"))))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__blk").orderBy(col("__k"), col("id"))
-    val ranked = materialize(base.withColumn("__r", row_number().over(w)))
+    val ranked = Share.checkpoint(base.withColumn("__r", row_number().over(w)))
     val probes = ranked
       .withColumn("__rb",
         explode(sequence(col("__r") + 1, col("__r") + lit(window - 1))))
@@ -730,11 +731,11 @@ object Dedup {
     val gammaCols = fields.map { f =>
       when(col(s"__a_$f") === col(s"__b_$f"), 1).otherwise(0).as(s"__g_$f")
     }
-    val gam = materialize(
+    val gam = Share.checkpoint(
       pairs.join(aSide, "id_a").join(bSide, "id_b")
         .groupBy(gammaCols: _*).agg(count(lit(1)).as("__n")))
     def d9(s: String) = lit(new java.math.BigDecimal(s)).cast(dec189)
-    var state = materialize(df.sparkSession.range(1).select(
+    var state = Share.checkpoint(df.sparkSession.range(1).select(
       fields.map(f => d9("0.9").as(s"__m_$f")) ++
         fields.map(f => d9("0.1").as(s"__u_$f")) :+
         d9("0.1").as("__p"): _*))
@@ -772,7 +773,7 @@ object Dedup {
           sum((lit(1.0).cast(dec189) - col("__gq")) * gD(f) * nD)
             .as(s"__snf_$f")))
       val sums = scored.agg(aggCols.head, aggCols.tail: _*)
-      state = materialize(sums.select(
+      state = Share.checkpoint(sums.select(
         fields.map(f =>
           ratio9(col(s"__sgf_$f"), col("__sg")).as(s"__m_$f")) ++
           fields.map(f =>
@@ -905,149 +906,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Materialize a loop-state DataFrame with FRESH leaf statistics.
-    *
-    * `localCheckpoint()` alone truncates lineage and partitions, but
-    * its `LogicalRDD` still carries the origin plan's
-    * estimated statistics (`originStats`). Catalyst's size-only join
-    * estimate is the PRODUCT of the children's `sizeInBytes`
-    * (SizeInBytesOnlyStatsPlanVisitor.visitJoin), and each CC round
-    * joins the previous round's labels with itself (pointer jump) and
-    * with prop — so the BigInt size estimate is raised to the ~4th
-    * power every round. The value's digit count grows 4^round; by
-    * round 12 the driver spends tens of seconds in
-    * `BigInteger.multiply` on million-digit numbers (observed: 0.5 s
-    * rounds degrading to 40 s, the whole cost in stats estimation, 30
-    * tasks throughout). Rebuilding the Dataset from the checkpointed
-    * RDD through the public `createDataFrame(rdd, schema)` makes the
-    * round input a fresh leaf with default stats — the product chain
-    * resets every round and planning time stays constant. Broadcast
-    * choices are unaffected in practice: AQE re-plans each round's
-    * joins from the ACTUAL materialized sizes at runtime.
-    *
-    * (On a real cluster prefer `checkpoint` with a durable dir for
-    * executor-loss recovery; the stats reset is needed either way.)
-    */
-  /** The materialized leaf under `df`, when `df` IS a checkpointed
-    * leaf or a rename/reorder projection of one (the graph operators'
-    * id_a/id_b → a/b aliasing). None for any other plan shape.
-    */
-  private[graft] def materializedLeaf(df: DataFrame)
-      : Option[org.apache.spark.sql.execution.LogicalRDD] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.execution.LogicalRDD
-    df.queryExecution.analyzed match {
-      case l: LogicalRDD => Some(l)
-      case Project(ps, l: LogicalRDD) if ps.forall {
-          case _: Attribute => true
-          case a: Alias => a.child.isInstanceOf[Attribute]
-          case _ => false
-        } => Some(l)
-      case _ => None
-    }
-  }
-
-  // NOTE (r14): a `rewrap = false` variant (bare localCheckpoint, no
-  // Row round-trip, partitioning preserved) was built and MEASURED
-  // for the rank recurrences' edge relation and rejected — see
-  // Graph.symEdges for the numbers (hub-skew −18%; repeat-run OOM).
-  // The re-wrap below is load-bearing beyond stats reset.
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    // Fast path: a frame that IS already a checkpointed leaf gains
-    // nothing from a second checkpoint; re-materializing the shared
-    // co-purchase edge frame would copy the whole relation once per
-    // consuming operator.
-    if (materializedLeaf(df).isDefined) df else {
-      val ck = df.localCheckpoint()
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
-
-  /** Materialize a MANY-ROW intermediate once for N downstream passes:
-    * bare localCheckpoint (InternalRow-backed LogicalRDD — no
-    * [[materialize]]-style Row re-wrap, whose per-read
-    * InternalRow→Row→InternalRow copy costs ~1 s/pass on
-    * millions-of-rows frames; this helper is for exactly those), plus
-    * the TableProfiler respread: when AQE right-sized the exchange for
-    * its shuffle bytes and left the checkpoint under-parallel for its
-    * re-readers, spread it across the cores and RELEASE the first
-    * checkpoint's blocks (the respread copy is the one consumers
-    * read; keeping both pins 2× the executor storage for nothing —
-    * ADVICE r15). Values are untouched: callers must only hand this
-    * frames whose consumers are partitioning-independent.
-    */
-  /** Share a multi-consumer intermediate WITHOUT a materialization
-    * barrier: lazy persist (MEMORY_AND_DISK). The optimizer plans one
-    * InMemoryRelation that every consumer references — the duplicated
-    * scan+compute subtrees collapse structurally — but no eager job
-    * runs: the first consuming stage populates the cache and the rest
-    * read it. Chosen over [[materializeWide]] for operators whose
-    * duplicated subtree is light enough that an eager checkpoint's
-    * serialization barrier costs more than the duplication it removes
-    * (measured this round on the text-stats family: eager checkpoints
-    * REGRESSED q_js_drift 1.9→2.9 s while this form removes the same
-    * re-tokenization). Blocks are reference-tracked and dropped by the
-    * ContextCleaner once the query's frame is unreachable — nothing
-    * survives an invocation, so each bench run still computes from the
-    * parquet inputs.
-    */
-  private[graft] def shareLazy(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** [[shareLazy]] plus ONE populating job. For a shared relation whose
-    * consumers fan out as CONCURRENT jobs — broadcast-exchange subtrees
-    * run on their own thread pool, so several of them can start while
-    * the lazy cache is still empty and each recomputes the whole
-    * subtree (partition-level: whoever computes a block first caches
-    * it, nobody waits). A single count() populates every block before
-    * the fan-out; consumers then read blocks. Unlike [[materializeWide]]
-    * there is no Row re-wrap and no repartition — the cached buffers
-    * keep the plan's own partitioning — so the barrier costs exactly
-    * one pass of the shared plan, which the first racing consumer was
-    * paying anyway.
-    */
-  private[graft] def shareEager(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
-  }
-
-  private[graft] def materializeWide(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    val ck = df.localCheckpoint()
-    if (ck.queryExecution.toRdd.getNumPartitions >= parallelism) ck
-    else {
-      val re = ck.repartition(parallelism).localCheckpoint()
-      ck.queryExecution.analyzed match {
-        case l: LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
-      re
-    }
-  }
-
-  // Row counts of materialized leaves, keyed by (application, RDD id).
-  // A rename projection over a leaf has the leaf's count, and a
-  // localCheckpoint'd RDD is immutable — so the memo never goes stale
-  // within an application. Callers with non-leaf frames fall through
-  // to a plain count.
-  private val leafCounts =
-    scala.collection.concurrent.TrieMap[(String, Int), Long]()
-
-  /** `df.count()`, memoized when `df` is a materialized leaf (or a
-    * rename projection of one) — the broadcast-or-shuffle regime
-    * probes in the graph operators re-decide on the SAME shared edge
-    * frame once per consuming query otherwise, charging a full count
-    * job to every benchmarked call (ADVICE r10).
-    */
-  private[graft] def cachedCount(df: DataFrame): Long =
-    materializedLeaf(df) match {
-      case Some(l) => leafCounts.getOrElseUpdate(
-        (df.sparkSession.sparkContext.applicationId, l.rdd.id), df.count())
-      case None => df.count()
-    }
-
   /** Connected components over an undirected candidate-pair graph by
     * bounded min-label propagation: every node starts labeled with its
     * own id; each round every node takes the min of its own and its
@@ -1085,7 +943,7 @@ object Dedup {
     // this every round's join re-derives the full upstream candidate
     // generation (for nearDupClusters: the whole MinHash+LSH+verify
     // pipeline, measured ~3× the entire query's cost at 20 rounds)
-    val sym = materialize(
+    val sym = Share.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))))
     // small-graph fast path — the same size-based regime switch Spark
@@ -1140,7 +998,7 @@ object Dedup {
     // On a near-dup corpus the pair graph is orders of magnitude
     // smaller than the corpus — the loop's working set scales with
     // |edges|, not |nodes|; singletons rejoin once, after convergence.
-    var labels = materialize(
+    var labels = Share.checkpoint(
       sym.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("component")))
     var iter = 0
@@ -1165,7 +1023,7 @@ object Dedup {
       val best = least(
         coalesce(col("pcomp"), col("component")),
         coalesce(col("jcomp"), col("component")))
-      val next = materialize(labels
+      val next = Share.checkpoint(labels
         .join(prop, Seq("id"), "left")
         .join(jump, Seq("id"), "left")
         .select(col("id"),

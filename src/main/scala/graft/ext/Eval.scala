@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{abs => fabs, _}
 import org.apache.spark.sql.types.{DecimalType, LongType}
+import graft.exec.Share
 
 /** Classifier / score evaluation over corpus-scale relations — the
   * measurement half of the quality-filter loop (a pipeline that
@@ -97,7 +98,7 @@ object Eval {
     // MATERIALIZED: sc feeds the totals and the cumulative/candidate
     // build (r15 plan capture: 4 text scans — the doc-stats input
     // re-tokenized per consumer); the cut is score-grid-sized.
-    val sc = Dedup.shareLazy(df.select(score.as("__s"),
+    val sc = Share.lazily(df.select(score.as("__s"),
       when(label, 1L).otherwise(0L).as("__y"))
       .groupBy("__s")
       .agg(sum(col("__y")).as("__np"),
@@ -222,7 +223,7 @@ object Eval {
     // it, AQE's exchange reuse recovers only two of the four
     // (measured: 2 FileScans in the final plan), and each missed
     // reuse is a full corpus re-scan at 100 TB.
-    val c = Dedup.materialize(
+    val c = Share.checkpoint(
       b.withColumn("__cw", sum(col("__w")).over(wnd))
         .withColumn("__cs", sum(col("__s")).over(wnd)))
     val lft = c.select(col("bin").as("__j"),
@@ -343,7 +344,7 @@ object Eval {
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val dec9 = DecimalType(18, 9)
-    val truth = Dedup.materialize(
+    val truth = Share.checkpoint(
       Similarity.topK(corpus, queries, k, idCol, vecCol)
         .select(col("query_id"), col("neighbor_id"),
           col("rank").as("__tr")))

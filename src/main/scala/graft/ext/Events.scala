@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, TimestampType}
+import graft.exec.Share
 
 /** Batch analytics over the event stream table — tumbling-window
   * aggregation and gap-based sessionization. These are the batch
@@ -896,7 +897,7 @@ object Events {
     // the cut each consumer re-runs the full event scan + per-user
     // aggregation (measured: the q_events_rfm plan carried 4 copies
     // of the events exchange). The cut is user-count-sized rows.
-    val metrics = Dedup.materialize(perUser.crossJoin(broadcast(ref))
+    val metrics = Share.checkpoint(perUser.crossJoin(broadcast(ref))
       .withColumn("recency_us", col("__ref") - col("__last_us"))
       .drop("__ref", "__last_us"))
     val ps = Seq("q20" -> 0.2, "q40" -> 0.4, "q60" -> 0.6, "q80" -> 0.8)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.exec.Share
 
 /** Graph centrality over candidate-pair graphs — the ranking
   * companion of [[Dedup.connectedComponents]]' clustering.
@@ -30,7 +31,7 @@ import org.apache.spark.sql.expressions.Window
   * round, Dedup.scala §8.4 rule 8); each iteration is ONE equi-join
   * (edges ⋈ ranks on src) + one map-side-combined sum by dst + one
   * broadcast-class join back to the node list. Loop state is
-  * [[Dedup.materialize]]d every round (fresh leaf — rule 15). Work per
+  * [[Share.checkpoint]]d every round (fresh leaf — rule 15). Work per
   * round scales with |edges|, not |corpus|: a pair graph scales with
   * duplicates, and a domain graph with domains.
   */
@@ -92,7 +93,7 @@ object Graph {
     */
   private def symEdges(pairs: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    Dedup.materialize(
+    Share.checkpoint(
       pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst"))))
 
@@ -100,7 +101,7 @@ object Graph {
       srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val sym = symEdges(pairs, srcCol, dstCol)
-    val deg = Dedup.materialize(
+    val deg = Share.checkpoint(
       sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     // N is one driver scalar (same posture as connectedComponents'
     // regime probe) — the init and jump terms become literals shared
@@ -108,13 +109,13 @@ object Graph {
     val n = deg.count()
     val initU = 1000000000L / math.max(n, 1L)
     val jumpU = 150000000L / math.max(n, 1L)
-    var ranks = Dedup.materialize(
+    var ranks = Share.checkpoint(
       deg.select(col("node"), col("deg"), lit(initU).as("ru")))
     for (_ <- 0 until iters) {
       val sums = sym.join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("ru div deg").as("cu"))
         .groupBy("dst").agg(sum(col("cu")).as("su"))
-      ranks = Dedup.materialize(
+      ranks = Share.checkpoint(
         deg.join(sums, col("node") === col("dst"), "left")
           .select(col("node"), col("deg"),
             (lit(jumpU) + expr("(85 * coalesce(su, 0L)) div 100")).as("ru")))
@@ -149,7 +150,7 @@ object Graph {
       seedCol: String = "node"): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val sym = symEdges(pairs, srcCol, dstCol)
-    val deg = Dedup.materialize(
+    val deg = Share.checkpoint(
       sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
         .join(broadcast(seeds.select(col(seedCol).as("__s")).distinct()),
           col("node") === col("__s"), "left")
@@ -158,14 +159,14 @@ object Graph {
     require(ns >= 1, "no seed node is connected to the graph")
     val initU = 1000000000L / ns
     val jumpU = 150000000L / ns
-    var ranks = Dedup.materialize(
+    var ranks = Share.checkpoint(
       deg.select(col("node"), col("deg"), col("seed"),
         when(col("seed"), initU).otherwise(0L).as("ru")))
     for (_ <- 0 until iters) {
       val sums = sym.join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("ru div deg").as("cu"))
         .groupBy("dst").agg(sum(col("cu")).as("su"))
-      ranks = Dedup.materialize(
+      ranks = Share.checkpoint(
         deg.join(sums, col("node") === col("dst"), "left")
           .select(col("node"), col("deg"), col("seed"),
             (when(col("seed"), jumpU).otherwise(0L) +
@@ -191,7 +192,7 @@ object Graph {
     * map-side-combined (node, label) vote count + one node-partitioned
     * top-1 window (WindowGroupLimit shape) — state is exactly one
     * label row per node, and rounds are checkpointed
-    * ([[Dedup.materialize]], the pageRank posture) so the plan does
+    * ([[Share.checkpoint]], the pageRank posture) so the plan does
     * not grow with R. NOTE: construction is therefore not
     * execution-free, exactly like [[pageRank]].
     */
@@ -201,10 +202,10 @@ object Graph {
     // stats-reset materialize, no pre-partitioning — [[symEdges]]'s
     // measured skew/OOM rationale applies verbatim to the per-round
     // label fetch on m (q_communities is 5.2× per 10×, at the bar)
-    val sym = Dedup.materialize(
+    val sym = Share.checkpoint(
       pairs.select(col(srcCol).as("n"), col(dstCol).as("m"))
         .union(pairs.select(col(dstCol).as("n"), col(srcCol).as("m"))))
-    var labels = Dedup.materialize(
+    var labels = Share.checkpoint(
       sym.select(col("n").as("node")).distinct()
         .withColumn("label", col("node")))
     for (_ <- 0 until iters) {
@@ -220,7 +221,7 @@ object Graph {
       // window row — but as a map-side-combinable aggregate instead
       // of a per-node sort, and the node exchange carries one
       // partial-max row per node per task, never the vote relation.
-      labels = Dedup.materialize(votes
+      labels = Share.checkpoint(votes
         .groupBy("node")
         .agg(max_by(col("label"),
           struct(col("__c"), (-col("label")).as("__negl"))).as("label")))
@@ -263,14 +264,14 @@ object Graph {
     *
     * Scale shape: per round, two node-keyed semijoins restrict the
     * edge list and one map-side-combined count recomputes degrees;
-    * the survivor set is [[Dedup.materialize]]d every round (fresh
+    * the survivor set is [[Share.checkpoint]]d every round (fresh
     * leaf — §8.4 rule 15) so the plan never grows. Work per round is
     * |surviving edges|, monotonically shrinking.
     */
   def kCore(pairs: DataFrame, k: Int, rounds: Int = 10,
       srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val edges = Dedup.materialize(
+    val edges = Share.checkpoint(
       pairs.select(col(srcCol).as("a"), col(dstCol).as("b")))
     // Two regimes, switched on the materialized edge count like every
     // other graph operator here: in-memory peel while the per-round
@@ -285,7 +286,7 @@ object Graph {
     // exiting early is bit-identical to unrolling all `rounds`, which
     // keeps the fixed-round determinism convention intact while a
     // co-purchase core that stabilizes in 3 peels stops paying for 10.
-    if (Dedup.cachedCount(edges) <= KCoreDiskMinEdges)
+    if (Share.count(edges) <= KCoreDiskMinEdges)
       kCoreInMemory(edges, k, rounds)
     else kCoreDiskGen(edges, k, rounds)
   }
@@ -309,17 +310,17 @@ object Graph {
   // as [[kCoreDiskGen]], which keeps generations on DISK instead.
   private[graft] def kCoreInMemory(edges: DataFrame, k: Int,
       rounds: Int): DataFrame = {
-    var alive = Dedup.materialize(
+    var alive = Share.checkpoint(
       kCoreDegrees(edges).filter(col("degree") >= k).select("node"))
     var prevN = -1L
-    var n = Dedup.cachedCount(alive)
+    var n = Share.count(alive)
     var r = 1
     while (r < rounds && n != prevN) {
-      alive = Dedup.materialize(
+      alive = Share.checkpoint(
         kCoreDegrees(kCoreRestrict(edges, alive))
           .filter(col("degree") >= k).select("node"))
       prevN = n
-      n = Dedup.cachedCount(alive)
+      n = Share.count(alive)
       r += 1
     }
     kCoreDegrees(kCoreRestrict(edges, alive))
@@ -371,7 +372,7 @@ object Graph {
       }
       // cur IS the final restriction; one node-sized checkpoint lets
       // the scratch generations be deleted before returning.
-      Dedup.materialize(
+      Share.checkpoint(
         kCoreDegrees(cur)
           .select(col("node"), col("degree").as("core_degree")))
     } finally graft.EngineScratch.delete(spark, base)
@@ -455,7 +456,7 @@ object Graph {
     require(k >= 1, "k must be >= 1")
     require(maxDegree >= 1, "maxDegree must be >= 1")
     require(candBudget >= 0, "candBudget must be >= 0")
-    val e = Dedup.materialize(
+    val e = Share.checkpoint(
       pairs.select(col(srcCol).as("a"), col(dstCol).as("b")))
     val und = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
@@ -470,30 +471,32 @@ object Graph {
     // exact integer arithmetic, so it is a pure function of the data
     // that the oracle twin re-derives in SQL; every output row
     // carries n_capped_nodes so a capped run is visibly capped.
-    // memoized per materialized edge leaf (the cachedCount posture):
-    // the shared co-purchase frame feeds several graph queries, and
-    // the histogram is a pure function of the immutable leaf — one
-    // aggregate job per JVM, not one per benchmarked invocation
-    def computeHist(): (Array[(Long, Long)], Long, Long) = {
-      val rows = und.groupBy("node").agg(count(lit(1)).as("dg"))
-        .groupBy("dg").agg(count(lit(1)).as("n"),
+    // Only an INTEGRAL id type can take the pair-key packing below, so
+    // only then are the id bounds taken: casting a string id to long
+    // throws under ANSI. Memoized per checkpointed edge leaf
+    // (Share.memo): the shared co-purchase frame feeds several graph
+    // queries, and the histogram is a pure function of the immutable
+    // leaf — one aggregate job per leaf, not one per invocation.
+    val idT = e.schema("a").dataType
+    val integralId = idT match {
+      case org.apache.spark.sql.types.ByteType |
+           org.apache.spark.sql.types.ShortType |
+           org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.LongType => true
+      case _ => false
+    }
+    val (hist, minId, maxId) = Share.memo(e, DegreeHist) {
+      val byDeg = und.groupBy("node").agg(count(lit(1)).as("dg")).groupBy("dg")
+      val rows = (if (integralId) byDeg.agg(count(lit(1)).as("n"),
           min(col("node").cast("long")).as("mn"),
           max(col("node").cast("long")).as("mx"))
-        .collect()
-      // mn/mx are min/max of cast(node as long): NULL for every row
-      // when ids are non-numeric strings (the cast is null-valued) —
-      // treat a null bound as "not packable" (-1 fails the gate)
-      // instead of NPE-ing on Row.getLong (ADVICE r15).
-      (rows.map(r => (r.getLong(0), r.getLong(1))),
-        if (rows.isEmpty || rows.exists(_.isNullAt(2))) -1L
-        else rows.map(_.getLong(2)).min,
-        if (rows.isEmpty || rows.exists(_.isNullAt(3))) -1L
-        else rows.map(_.getLong(3)).max)
-    }
-    val (hist, minId, maxId) = Dedup.materializedLeaf(e) match {
-      case Some(l) => degHists.getOrElseUpdate(
-        (e.sparkSession.sparkContext.applicationId, l.rdd.id), computeHist())
-      case None => computeHist()
+        else byDeg.agg(count(lit(1)).as("n"))).collect()
+      // no bound (non-integral ids, or a degree group of null ids) is
+      // -1, which fails the packing gate
+      def bound(i: Int, pick: Seq[Long] => Long): Long =
+        if (!integralId || rows.isEmpty || rows.exists(_.isNullAt(i))) -1L
+        else pick(rows.toSeq.map(_.getLong(i)))
+      (rows.map(r => (r.getLong(0), r.getLong(1))), bound(2, _.min), bound(3, _.max))
     }
     // Total (x < y) candidate pairs if every adjacency is capped at c.
     def volume(c: Long): Long = hist.iterator.map { case (dg, n) =>
@@ -572,14 +575,6 @@ object Graph {
     // distinct ids could pack to one __xy key, and a non-canonical
     // numeric string ('007') would not round-trip the cast-back —
     // either silently changes the output vs the unpacked plan.
-    val idT = e.schema("a").dataType
-    val integralId = idT match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
     val packable = integralId && minId >= 0L && maxId < (1L << 31)
     val scored =
       if (packable)
@@ -604,7 +599,7 @@ object Graph {
       case EdgeJoinStrategy.ShuffleHash => e.hint("shuffle_hash")
       case EdgeJoinStrategy.SortMerge => e.hint("merge")
       case EdgeJoinStrategy.Auto =>
-        val nEdges = Dedup.cachedCount(e)
+        val nEdges = Share.count(e)
         if (nEdges <= BroadcastMaxEdges) broadcast(e)
         else if (nEdges <= ShuffleHashMaxEdges) e.hint("shuffle_hash")
         else e.hint("merge")
@@ -618,11 +613,9 @@ object Graph {
         lit(nCapped).as("n_capped_nodes"))
   }
 
-  // Degree histograms (+ id bounds for the pair-key packing gate) of
-  // materialized edge leaves, keyed by (application, RDD id) — see
+  // Degree histogram plus id bounds of an edge leaf — see
   // linkPrediction's memo note.
-  private val degHists = scala.collection.concurrent
-    .TrieMap[(String, Int), (Array[(Long, Long)], Long, Long)]()
+  private val DegreeHist = new Share.Key[(Array[(Long, Long)], Long, Long)]
 
   /** Default total candidate-pair budget for [[linkPrediction]]'s
     * automatic cap. 5·10⁸ pairs ≈ 12-15 GB of pre-combine shuffle —
@@ -685,7 +678,7 @@ object Graph {
       dstCol: String = "id_b", maxDegree: Int = Int.MaxValue,
       broadcastAdjacency: Option[Boolean] = None): DataFrame = {
     require(maxDegree >= 1, "maxDegree must be >= 1")
-    val eAll = Dedup.materialize(
+    val eAll = Share.checkpoint(
       pairs.select(col(srcCol).as("a"), col(dstCol).as("b")))
     // Opt-in degree cap: rank each node's forward edges by neighbor id
     // and keep the first maxDegree. row_number ≤ k plans as
@@ -714,7 +707,7 @@ object Graph {
     // shuffle equi-joins — still edge-sized exchanges, never
     // wedge-sized.
     val useBroadcast = broadcastAdjacency.getOrElse(
-      Dedup.cachedCount(eAll) <= BroadcastMaxEdges)
+      Share.count(eAll) <= BroadcastMaxEdges)
     val side =
       if (useBroadcast) (df: DataFrame) => broadcast(df)
       else (df: DataFrame) => df
@@ -839,24 +832,24 @@ object Graph {
     * Scale shape: each half-round is one edge ⋈ score join (score
     * frame keyed by node, |nodes| rows) + one map-side-combined sum —
     * work scales with |edges| per round like [[pageRank]], with
-    * [[Dedup.materialize]] checkpoints so the plan stays flat; the
+    * [[Share.checkpoint]] checkpoints so the plan stays flat; the
     * max normalizers are 1-row broadcasts.
     */
   def hits(edges: DataFrame, iters: Int = 2,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1 && iters <= 2,
       "iters must be in [1, 2] — the exact-BIGINT regime")
-    val e = Dedup.materialize(
+    val e = Share.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    var hub = Dedup.materialize(
+    var hub = Share.checkpoint(
       e.select(col("src").as("node")).distinct()
         .select(col("node"), lit(1L).as("h")))
     var auth: DataFrame = null
     for (_ <- 0 until iters) {
-      auth = Dedup.materialize(
+      auth = Share.checkpoint(
         e.join(hub, col("src") === col("node"))
           .groupBy(col("dst").as("anode")).agg(sum(col("h")).as("a")))
-      hub = Dedup.materialize(
+      hub = Share.checkpoint(
         e.join(auth, col("dst") === col("anode"))
           .groupBy(col("src").as("node")).agg(sum(col("a")).as("h")))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.exec.Share
 
 /** Exact per-group quantiles at corpus scale — the generalization of
   * the profiler's single-column median machinery
@@ -186,7 +187,7 @@ object Quantiles {
     // eval B's offsets and prune away the shard holding a position).
     // The checkpoint makes the once-only invariant STRUCTURAL: both
     // branches read the same computed rows.
-    val picked = Dedup.materialize(
+    val picked = Share.checkpoint(
       offsets.join(maybeB(pos), keyCols)
         .where(col("__pos").between(col("__offset"),
           col("__offset") + col("__stot") - 1))
@@ -421,7 +422,7 @@ object Quantiles {
     // final outlier roll-up — without the cut each re-runs the input
     // scan, the median pipeline and the join (measured −1.3 s warm on
     // q_mad_outliers at sf0.1).
-    val devs = Dedup.shareLazy(df.join(maybeB(med), groupCol)
+    val devs = Share.lazily(df.join(maybeB(med), groupCol)
       .withColumn("__dev",
         round(abs(col(valueCol).cast("double") - col("__med")), 5)))
     val mad = groupQuantiles(devs, groupCol, "__dev",

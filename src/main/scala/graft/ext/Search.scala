@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.exec.Share
 
 /** Keyword relevance search over the corpus — pipeline extension
   * (SURVEY.md §7.5): the "find the documents about X" exploration /
@@ -346,7 +347,7 @@ object Search {
     require(selectK >= 1 && selectK <= candidateK,
       "need 1 <= selectK <= candidateK")
     val queries = embeddings.filter(col(vecIdCol).isin(queryVecIds: _*))
-    val cand = Dedup.materialize(
+    val cand = Share.checkpoint(
       Similarity.topK(embeddings, queries, candidateK, vecIdCol, vecCol)
         .select(col("query_id"), col("neighbor_id"), col("score").as("rel")))
     // pairwise candidate sims, both directions (cand_id, other_id):
@@ -359,21 +360,21 @@ object Search {
       col("__v").as("__vl"))
     val r = withVec.select(col("query_id"), col("neighbor_id").as("other_id"),
       col("__v").as("__vr"))
-    val sims = Dedup.materialize(
+    val sims = Share.checkpoint(
       l.join(r, Seq("query_id")).filter(col("cand_id") =!= col("other_id"))
         .select(col("query_id"), col("cand_id"), col("other_id"),
           round(Similarity.dot(col("__vl"), col("__vr")), 5).as("sim")))
     val wPick = Window.partitionBy(col("query_id"))
       .orderBy(col("__mmr").desc, col("neighbor_id").asc)
     def pickTop(scored: DataFrame, pos: Int): DataFrame =
-      Dedup.materialize(scored
+      Share.checkpoint(scored
         .withColumn("__rn", row_number().over(wPick))
         .filter(col("__rn") === 1)
         .select(col("query_id"), lit(pos).as("pos"), col("neighbor_id"),
           col("rel"), col("__mmr")))
     var sel = pickTop(cand.withColumn("__mmr", col("rel") * 0.5), 1)
     var selAll = sel.select(col("query_id"), col("neighbor_id").as("sel_id"))
-    var rem = Dedup.materialize(
+    var rem = Share.checkpoint(
       cand.join(sel.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"), "left_anti"))
     val picks = scala.collection.mutable.ListBuffer(sel)
@@ -389,9 +390,9 @@ object Search {
           (rem("rel") * 0.5 - col("__mx") * 0.5).as("__mmr"))
       sel = pickTop(scored, p)
       picks += sel
-      selAll = Dedup.materialize(selAll.unionByName(
+      selAll = Share.checkpoint(selAll.unionByName(
         sel.select(col("query_id"), col("neighbor_id").as("sel_id"))))
-      rem = Dedup.materialize(
+      rem = Share.checkpoint(
         rem.join(sel.select("query_id", "neighbor_id"),
           Seq("query_id", "neighbor_id"), "left_anti"))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.exec.Share
 
 /** Text-analysis operators over a document corpus — the
   * training-data-pipeline extension surface (SURVEY.md §7.5; the
@@ -793,14 +794,14 @@ object TextStats {
     // scans — uni feeds the total and TWO unigram joins, bi the total
     // and the pair filter, each consumer re-running scan+tokenize);
     // the cuts are vocabulary-sized.
-    val uni = Dedup.shareLazy(staged
+    val uni = Share.lazily(staged
       .select(explode_outer(col("__t")).as("token"))
       .filter(col("token").isNotNull)
       .groupBy("token").agg(count(lit(1)).as("c1")))
     // degenerate grams (short docs yield a truncated single-token
     // "bigram", empty docs an empty string) carry no space → excluded
     // from pairs AND totals on both engines
-    val bi = Dedup.shareLazy(staged
+    val bi = Share.lazily(staged
       .select(explode_outer(Dedup.ngrams(col("__t"), 2)).as("bg"))
       .filter(col("bg").isNotNull && col("bg").contains(" "))
       .groupBy("bg").agg(count(lit(1)).as("c2")))
@@ -1064,7 +1065,7 @@ object TextStats {
     val marked = pt
       .withColumn("__stop", col("__tok").isInCollection(Stopwords))
       .withColumn("__pid", sum(when(col("__stop"), 1L).otherwise(0L)).over(wP))
-    val phrases = Dedup.materialize(
+    val phrases = Share.checkpoint(
       marked.filter(!col("__stop"))
         .groupBy(col("doc_id"), col("__pid"))
         .agg(count(lit(1)).as("__len"),
@@ -1400,11 +1401,11 @@ object TextStats {
     // consumers: pref, cont, tot, the lp join) are its roll-up — each
     // cut turns its consumers into leaf re-reads instead of repeated
     // scan+tokenize+explode subtrees.
-    val bg = Dedup.shareLazy(staged
+    val bg = Share.lazily(staged
       .select(col(idCol), explode_outer(Dedup.ngrams(col("__t"), 2)).as("bg"))
       .filter(col("bg").isNotNull && col("bg").contains(" "))
       .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("__bc")))
-    val cnt2 = Dedup.shareLazy(
+    val cnt2 = Share.lazily(
       bg.groupBy("bg").agg(sum(col("__bc")).as("c2"))
         .withColumn("a", split(col("bg"), " ").getItem(0))
         .withColumn("b", split(col("bg"), " ").getItem(1)))
@@ -1463,7 +1464,7 @@ object TextStats {
     // MATERIALIZED: gt feeds the pool roll-up, the per-group totals
     // and the token-keyed join (the r15 plan capture shows 4 text
     // scans — each consumer re-ran scan+tokenize+count without the cut)
-    val gt = Dedup.shareLazy(Dedup.spread(df, textCol)
+    val gt = Share.lazily(Dedup.spread(df, textCol)
       .select(col(groupCol).as("__g"),
         explode_outer(tokens(col(textCol))).as("__tok"))
       .filter(col("__tok").isNotNull)

@@ -38,9 +38,11 @@ object TableDiff {
     * construction — same observable attribution, earlier.
     */
   private def profileSide(spark: SparkSession, table: String,
-      ordinal: String): DataFrame =
-    try TableProfiler.profileLong(graft.catalog.Tables.table(spark, table))
-    catch { case e: Exception => throw new TableDiffException(ordinal, table, e) }
+      ordinal: String): (Seq[String], DataFrame) =
+    try {
+      val df = graft.catalog.Tables.table(spark, table)
+      (TableProfiler.numericColumns(df.schema), TableProfiler.profileLong(df))
+    } catch { case e: Exception => throw new TableDiffException(ordinal, table, e) }
 
   /** Structured diff: one row per (column_name, agg_type) in either
     * profile, with both values and an equality verdict. NULL-vs-NULL
@@ -49,8 +51,8 @@ object TableDiff {
     * reference's early exit.
     */
   def diff(spark: SparkSession, baseTable: String, targetTable: String): DataFrame =
-    diffFrom(profileSide(spark, baseTable, "second"),
-      profileSide(spark, targetTable, "third"))
+    diffFrom(profileSide(spark, baseTable, "second")._2,
+      profileSide(spark, targetTable, "third")._2)
 
   /** [[diff]] over two PRECOMPUTED long profiles — the reference's
     * actual workflow shape (profile both tables, THEN diff the
@@ -71,25 +73,29 @@ object TableDiff {
   def differences(spark: SparkSession, baseTable: String, targetTable: String): DataFrame =
     diff(spark, baseTable, targetTable).filter(!col("equal"))
 
-  /** The reference's file outputs: two aligned-text profile renders
-    * (aws-athena.sh:194-195). Returns (basePath, targetPath); outDir
-    * stands in for the reference's CWD.
+  /** The reference's whole `vimdiff` (aws-athena.sh:183-196) over ONE
+    * profile per side: writes the two aligned-text renders
+    * (`base_result.tsv` / `target_result.tsv`, aws-athena.sh:194-195)
+    * and returns their paths with the [[differences]] of the same two
+    * profiles. outDir stands in for the reference's CWD. The diff reads
+    * the profiles' shared value counts, so collect it inside the
+    * caller's [[graft.exec.Share.scope]].
     */
-  def renderPair(spark: SparkSession, baseTable: String, targetTable: String,
-      outDir: String): (Path, Path) = {
+  def vimdiff(spark: SparkSession, baseTable: String, targetTable: String,
+      outDir: String): (Path, Path, DataFrame) = {
     Files.createDirectories(Paths.get(outDir))
-    def write(table: String, file: String, ordinal: String): Path = {
-      val profiled =
-        try TableProfiler.profileTable(spark, table)
-        catch { case e: Exception => throw new TableDiffException(ordinal, table, e) }
-      val text = TsvRenderer.aligned(ResultSet.fromDataFrame(profiled))
+    def side(table: String, file: String, ordinal: String): (Path, DataFrame) = {
+      val (cols, long) = profileSide(spark, table, ordinal)
+      val text = TsvRenderer.aligned(
+        ResultSet.fromDataFrame(TableProfiler.wide(long, cols)))
       val p = Paths.get(outDir, file)
       Files.writeString(p, text + "\n")
-      p
+      (p, long)
     }
     // base fully renders (and fails) before the target — the
     // reference's sequential get_query_results ordering
-    (write(baseTable, "base_result.tsv", "second"),
-      write(targetTable, "target_result.tsv", "third"))
+    val (basePath, baseLong) = side(baseTable, "base_result.tsv", "second")
+    val (targetPath, targetLong) = side(targetTable, "target_result.tsv", "third")
+    (basePath, targetPath, diffFrom(baseLong, targetLong).filter(!col("equal")))
   }
 }

@@ -283,7 +283,7 @@ object TableProfiler {
     // the recompute would write anyway. Consumers stay
     // partitioning-independent, so the cut changes no values.
     //
-    // EAGERLY POPULATED (shareEager — persist + one count job), not
+    // EAGERLY POPULATED (Share.eagerly — persist + one count job), not
     // the r15 lazy persist and not the r13–r15 eager
     // localCheckpoint+respread: the lazy form let the stats/offsets
     // build job's CONCURRENT broadcast subtrees (boundary sketch,
@@ -294,24 +294,12 @@ object TableProfiler {
     // populates every block first (measured: lineitem 7.9→7.0 s warm),
     // costs exactly the one pass a racing consumer paid anyway, and —
     // unlike the old localCheckpoint — keeps columnar cache blocks
-    // with no Row re-wrap or respread job. Blocks are
-    // reference-tracked and freed by the ContextCleaner once the
-    // profile frame is unreachable.
-    // CONF GATE (ADVICE r13): cached blocks are NON-REPLICATED
-    // executor state; recompute-on-loss is lineage-based and cheap
-    // here, but `spark.graft.profile.materialize=none` still yields
-    // the fully uncut plan for callers that want zero block-store
-    // footprint. Values are identical either way (every consumer is
-    // partitioning-independent).
-    val vcPlan = spreadDf
+    // with no Row re-wrap or respread job. The blocks live until the
+    // caller's Share.scope closes (see graft.exec.Share).
+    val vc = graft.exec.Share.eagerly(spreadDf
       .selectExpr(s"stack(${cols.size}, $stackArgs) AS (ci, v)")
       .filter(col("v").isNotNull)
-      .groupBy("ci", "v").agg(count(lit(1)).cast(DecimalType(10, 0)).as("cnt"))
-    val vc =
-      if (df.sparkSession.conf
-        .getOption("spark.graft.profile.materialize").contains("none"))
-        vcPlan
-      else graft.ext.Dedup.shareEager(vcPlan)
+      .groupBy("ci", "v").agg(count(lit(1)).cast(DecimalType(10, 0)).as("cnt")))
     // ALL per-column single-pass exact stats — n, ndist, min, max and
     // the range-split exact decimal sum legs (see [[legCompact]] /
     // [[legWide]]: |v| < 10¹² sums compact decimal(18,6), wider values
@@ -335,7 +323,7 @@ object TableProfiler {
       sum(legCompact(col("v"), col("v")) * col("cnt")).as("s1c"),
       sum(legWide(col("v"), col("v")) * col("cnt")).as("s1w"))
     // Per-column stats land on the driver from ONE cheap aggregation
-    // job over the populated vc blocks (shareEager above computed vc
+    // job over the populated vc blocks (Share.eagerly above computed vc
     // exactly once; this pass reads blocks). The collected rows drive
     // BOTH the literal stats relation below and the median REGIME
     // decision — so the switch is a pure function of the data, chosen
@@ -560,12 +548,9 @@ object TableProfiler {
     * value-counts build plus the stats/offsets collect — so the
     * table scan cost and any data-quality raise_error (the 10²¹
     * envelope) surface AT THE CALL, not at the later collect; the
-    * returned frame reads driver-literal stats plus (by default) the
-    * materialized value-counts blocks. At-most-once per call: the
-    * scan never reruns for the same returned frame. Cluster
-    * deployments that must survive executor loss between call and
-    * collect set `spark.graft.profile.materialize=none` (see
-    * [[exactLong]]) to keep full lineage instead of pinned blocks.
+    * returned frame reads driver-literal stats plus the persisted
+    * value-counts blocks, which the caller's [[graft.exec.Share.scope]]
+    * releases: collect the frame inside that scope.
     */
   def profileLong(df: DataFrame): DataFrame = {
     val cols = numericColumns(df.schema)
@@ -577,14 +562,16 @@ object TableProfiler {
     * column per numeric column, in ordinal order) — the observable
     * output of the reference's map_agg pivot (aws-athena.sh:112-122).
     */
-  def profile(df: DataFrame): DataFrame = {
-    val cols = numericColumns(df.schema)
-    profileLong(df)
-      .groupBy("agg_type")
+  def profile(df: DataFrame): DataFrame =
+    wide(profileLong(df), numericColumns(df.schema))
+
+  /** The wide pivot of a [[profileLong]] relation whose numeric
+    * columns are `cols`, in ordinal order. */
+  def wide(long: DataFrame, cols: Seq[String]): DataFrame =
+    long.groupBy("agg_type")
       .pivot("column_name", cols)
       .agg(first("result"))
       .orderBy("agg_type")
-  }
 
   /** Profile a table by name, schema sourced from the catalog (the
     * reference reads information_schema, not the data, to decide what

@@ -59,16 +59,17 @@ object JobProbe {
     spark.sparkContext.addSparkListener(listener)
 
     for (q <- args) {
+      // one Share.scope per run (see Bench.once())
+      def run(): Unit = graft.exec.Share.scope(spark) {
+        graft.SparkEntry.queries(q)(spark, sf)
+          .write.format("noop").mode("overwrite").save()
+      }
       // warm-up run (codegen + JIT), not collected
-      spark.sharedState.cacheManager.clearCache() // see Bench.once()
-      graft.SparkEntry.queries(q)(spark, sf)
-        .write.format("noop").mode("overwrite").save()
+      run()
       stages.clear()
       collecting = true
-      spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(q)(spark, sf)
-        .write.format("noop").mode("overwrite").save()
+      run()
       val wall = (System.nanoTime() - t0) / 1e9
       // let stragglers' completion events drain
       Thread.sleep(300)

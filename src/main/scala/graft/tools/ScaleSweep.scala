@@ -42,12 +42,15 @@ object ScaleSweep {
     }
 
     def sweep(dir: String): (Map[String, Either[String, Double]], Double, Double) = {
-      graft.catalog.Tables.register(spark, dir)
-      graft.SparkEntry.prewarmIndexes(spark, dir)
-      graft.SparkEntry.buildSharedFrames(spark, dir)
+      // set-up and every run each in a Share.scope (see Bench.once())
+      graft.exec.Share.scope(spark) {
+        graft.catalog.Tables.register(spark, dir)
+        graft.SparkEntry.prewarmIndexes(spark, dir)
+        graft.SparkEntry.buildSharedFrames(spark, dir)
+      }
       val calA = calibrate()
       val times = queries.map { q =>
-        def once(): Double = {
+        def once(): Double = graft.exec.Share.scope(spark) {
           val t0 = System.nanoTime()
           graft.SparkEntry.queries(q)(spark, dir)
             .write.format("noop").mode("overwrite").save()

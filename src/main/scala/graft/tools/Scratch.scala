@@ -29,9 +29,9 @@ object Scratch {
     spark.sparkContext.setLogLevel("WARN")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val explain = sys.env.contains("SCRATCH_EXPLAIN")
-    for (q <- args) {
+    // one Share.scope per query (see Bench.once())
+    for (q <- args) graft.exec.Share.scope(spark) {
       println(s"===== $q =====")
-      spark.sharedState.cacheManager.clearCache() // see Bench.once()
       if (explain)
         println(graft.SparkEntry.queries(q)(spark, sf)
           .queryExecution.explainString(

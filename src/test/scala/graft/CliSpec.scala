@@ -112,6 +112,56 @@ class CliSpec extends AnyFunSuite {
       Files.readString(workDir.resolve("target_result.tsv")))
   }
 
+  test("vimdiff profiles each side once and prints what per-side profiles print") {
+    graft.catalog.Tables.register(spark, TestSpark.sfDir)
+    spark.sql(
+      """SELECT n_nationkey, n_name,
+        |  CASE WHEN n_nationkey = 3 THEN n_regionkey + 1 ELSE n_regionkey END AS n_regionkey
+        |FROM nation""".stripMargin).createOrReplaceTempView("nation_perturbed")
+    val outB = new ByteArrayOutputStream()
+    val workDir = Files.createTempDirectory("graft-cli-vimdiff")
+    val rc = Cli.run(
+      Array("vimdiff", "spark_catalog.default.nation", "spark_catalog.default.nation_perturbed"),
+      spark, new PrintStream(outB, true, "UTF-8"), System.err, workDir)
+    assert(rc == 0)
+    // the separate per-side renders and diff the command used to run
+    import graft.exec.ResultSet
+    import graft.profile.{TableDiff, TableProfiler}
+    import graft.render.TsvRenderer
+    def render(df: org.apache.spark.sql.DataFrame) =
+      TsvRenderer.aligned(ResultSet.fromDataFrame(df))
+    val (base, target, diffs) = graft.exec.Share.scope(spark) {
+      (render(TableProfiler.profileTable(spark, "nation")),
+        render(TableProfiler.profileTable(spark, "nation_perturbed")),
+        render(TableDiff.differences(spark, "nation", "nation_perturbed")))
+    }
+    assert(Files.readString(workDir.resolve("base_result.tsv")) == base + "\n")
+    assert(Files.readString(workDir.resolve("target_result.tsv")) == target + "\n")
+    assert(outB.toString(StandardCharsets.UTF_8) ==
+      diffs + "\nwrote base_result.tsv target_result.tsv\n")
+    assert(diffs.contains("n_regionkey"))
+  }
+
+  test("query with a dotted output label renders (the approx_percentile label)") {
+    val (rc, out, err) = capture("query",
+      "select c_mktsegment, approx_percentile(c_acctbal, 0.5) from customer group by 1 order by 1")
+    assert(rc == 0, err)
+    assert(out.linesIterator.exists(l =>
+      l.startsWith("c_mktsegment") && l.contains("approx_percentile(c_acctbal, 0.5")))
+  }
+
+  test("query with duplicate output labels keeps both columns") {
+    val (rc, out, err) = capture("query",
+      "SELECT n_name, n_name FROM nation WHERE n_nationkey = 0")
+    assert(rc == 0, err)
+    assert(out.linesIterator.exists(l => l.split(" +").toSeq == Seq("n_name", "n_name")))
+    assert(out.linesIterator.exists(l => l.split(" +").toSeq == Seq("NATION_0", "NATION_0")))
+    val rs = graft.exec.ResultSet.fromDataFrame(
+      spark.sql("SELECT 1 AS a, CAST(NULL AS INT) AS a, 3 AS `x.y`"))
+    assert(rs.labels == Seq("a", "a", "x.y"))
+    assert(rs.rows == Seq(Seq("1", "", "3")))
+  }
+
   test("vimdiff failure attributes the side, reference message (aws-athena.sh:183-190)") {
     val (rc, _, err) = capture("vimdiff",
       "spark_catalog.default.no_such_table", "spark_catalog.default.nation")

@@ -203,7 +203,11 @@ class ClientCoreSpec extends AnyFunSuite {
   test("diff renders the reference's two aligned tsv files (aws-athena.sh:194-195)") {
     Tables.register(spark, TestSpark.sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_diff").toString
-    val (b, t) = TableDiff.renderPair(spark, "supplier", "supplier", dir)
+    val (b, t, diffs) = graft.exec.Share.scope(spark) {
+      val (b, t, diffs) = TableDiff.vimdiff(spark, "supplier", "supplier", dir)
+      (b, t, diffs.count())
+    }
+    assert(diffs == 0)
     assert(b.getFileName.toString == "base_result.tsv")
     assert(t.getFileName.toString == "target_result.tsv")
     val base = java.nio.file.Files.readString(b)

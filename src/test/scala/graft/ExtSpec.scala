@@ -2943,7 +2943,7 @@ class ExtSpec extends AnyFunSuite {
     val chain = (12L until 20L).map(i => (i - 1, i))
     val edges = (core ++ chain).toDF("id_a", "id_b")
     for (k <- Seq(2, 3, 4); rounds <- Seq(3, 10)) {
-      val e = graft.ext.Dedup.materialize(
+      val e = graft.exec.Share.checkpoint(
         edges.select(col("id_a").as("a"), col("id_b").as("b")))
       val mem = graft.ext.Graph.kCoreInMemory(e, k, rounds)
         .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq

@@ -30,6 +30,21 @@ class GoldenPinSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def sf001Present =
     java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf001))
 
+  private def cacheManager = spark.sharedState.cacheManager
+
+  // Suites before this one share the session and may leave shares they
+  // made outside any scope; start from an empty CacheManager so the
+  // checks below see only what these queries leave.
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    cacheManager.clearCache()
+  }
+
+  /** `body` in a Share.scope, which must leave the CacheManager empty. */
+  private def scoped[T](body: => T): T =
+    try graft.exec.Share.scope(spark)(body)
+    finally assert(cacheManager.isEmpty, "a share outlived its scope")
+
   override def afterAll(): Unit = {
     // undo this suite's catalog registration even if a test failed or
     // the suite ran filtered
@@ -60,11 +75,24 @@ class GoldenPinSpec extends AnyFunSuite with BeforeAndAfterAll {
   pins.toSeq.sortBy(_._1).foreach { case (name, expected) =>
     test(s"$name output at sf0.01 matches its committed golden hash") {
       assume(sf001Present, s"sf0.01 corpus not present at $sf001")
-      val actual = goldenMd5(name)
+      val actual = scoped(goldenMd5(name))
       assert(actual == expected,
         s"$name sf0.01 output changed: got $actual, pinned $expected — " +
           "if the change is intentional, update the pin AND re-verify " +
           "the _check twin still passes")
     }
+  }
+
+  test("an agreement operator's shares, made across its labeler threads, end with the scope") {
+    assume(sf001Present, s"sf0.01 corpus not present at $sf001")
+    assert(scoped(SparkEntry.queries("q_label_kappa")(spark, sf001).collect()).length == 1)
+  }
+
+  test("a scope whose body throws still releases its shares") {
+    val e = intercept[IllegalStateException](scoped {
+      graft.exec.Share.eagerly(spark.range(1000).toDF("x"))
+      throw new IllegalStateException("query failed")
+    })
+    assert(e.getMessage == "query failed")
   }
 }

@@ -449,29 +449,32 @@ class PlanHygieneSpec extends AnyFunSuite {
   }
 
   test("materialize fast path recognizes a leaf and its rename projection") {
-    // Guards the Catalyst plan-shape match inside Dedup.materialize
+    // Guards the Catalyst plan-shape match inside Share.checkpoint
     // (LogicalRDD / Project-of-attributes over it): if a Spark upgrade
     // changes the analyzed shape of a checkpointed frame, every
     // shared-frame consumer silently re-checkpoints the full relation
     // — correct but defeating the optimization with no signal
-    // (ADVICE r10). The leaf's underlying RDD id must survive a
-    // second materialize, both direct and through a rename/reorder.
-    import graft.ext.Dedup
+    // (ADVICE r10). The leaf's underlying RDD must survive a second
+    // checkpoint, both direct and through a rename/reorder.
+    import graft.exec.Share
     val df = spark.range(100).selectExpr("id as a", "id % 7 as b")
-    val leaf = Dedup.materialize(df)
-    def rddId(d: org.apache.spark.sql.DataFrame): Int =
-      Dedup.materializedLeaf(d).getOrElse(
+    val leaf = Share.checkpoint(df)
+    def rdd(d: org.apache.spark.sql.DataFrame) =
+      Share.leaf(d).getOrElse(
         fail(s"not recognized as a materialized leaf:\n${d.queryExecution.analyzed}")
-      ).rdd.id
-    val id0 = rddId(leaf)
-    assert(rddId(Dedup.materialize(leaf)) == id0,
+      ).rdd
+    val rdd0 = rdd(leaf)
+    assert(rdd(Share.checkpoint(leaf)) eq rdd0,
       "re-materializing a leaf must be a no-op")
-    val renamed = Dedup.materialize(
+    val renamed = Share.checkpoint(
       leaf.select(col("b").as("id_b"), col("a").as("id_a")))
-    assert(rddId(renamed) == id0,
+    assert(rdd(renamed) eq rdd0,
       "rename/reorder projection over a leaf must not re-checkpoint")
-    // cachedCount memoizes by that RDD id and agrees with count()
-    assert(Dedup.cachedCount(leaf) == 100L)
-    assert(Dedup.cachedCount(renamed) == 100L)
+    // Share.count memoizes per leaf RDD and agrees with count()
+    assert(Share.count(leaf) == 100L)
+    assert(Share.count(renamed) == 100L)
+    val key = new Share.Key[Int]
+    assert(Share.memo(renamed, key)(7) == 7)
+    assert(Share.memo(leaf, key)(fail("a leaf's fact is computed once")) == 7)
   }
 }

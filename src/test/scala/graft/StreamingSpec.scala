@@ -753,7 +753,7 @@ class StreamingSpec extends AnyFunSuite {
     val pool = Seq((1L, "alpha beta gamma"), (2L, "zeta eta theta"))
       .toDF("doc_id", "text")
     val target = Seq((10L, "alpha beta alpha")).toDF("doc_id", "text")
-    val model = graft.ext.Dedup.materialize(
+    val model = graft.exec.Share.checkpoint(
       graft.ext.Importance.tokenLogRatios(pool, target))
     // ...apply to a STREAM the model never saw: scoreAgainst is a
     // broadcast join + per-batch roll-up, stateless, so it composes
