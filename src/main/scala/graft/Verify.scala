@@ -1,31 +1,37 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.tools.Harness
+import graft.tools.Harness.{json, obj}
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (tools/selfcheck.py).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query ...] — with query
+  * names, only those outputs and their oracle SQL are written. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val spark = Harness.session()
+    try run(spark, args(0), args(1), args.drop(2).toSeq)
+    finally spark.stop()
+  }
+
+  /** Writes `names` (every query when empty) under `outDir`. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    val picked =
+      if (names.isEmpty) SparkEntry.queries.toSeq
+      else names.map(n => n -> Harness.query(n))
     new java.io.File(outDir).mkdirs()
-    // A throwing query must leave a LOUD artifact: round 4 shipped 8
-    // analysis-broken queries that were simply absent from the
-    // correctness report because this loop only printed to stderr.
-    // Every failure now lands in _errors.json next to oracle_sql.json,
-    // so "no parquet" can never read as "pass".
+    // A throwing query must leave a LOUD artifact: analysis-broken
+    // queries were once simply absent from the correctness report
+    // because this loop only printed to stderr. Every failure lands in
+    // _errors.json next to oracle_sql.json, so "no parquet" can never
+    // read as "pass".
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // one Share.scope per query (see Bench.once()): a later query
-      // embedding an identical subplan must exercise its own plan, not
-      // read this query's shared blocks
+    picked.foreach { case (name, fn) =>
+      // one Share.scope per query: a later query embedding an identical
+      // subplan must exercise its own plan, not read this query's blocks
       try graft.exec.Share.scope(spark) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -34,30 +40,18 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    val oracles =
+      if (names.isEmpty) SparkEntry.oracleSql
+      else SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(oracles.map { case (k, v) => k -> json(v) }))
+    Files.writeString(Paths.get(s"$outDir/_errors.json"),
+      obj(errors.map { case (k, v) => k -> json(v) }))
     // Exit 0 even on failures: a non-zero exit could make the driver
     // skip the DuckDB compare for the queries that DID succeed. The
     // red signal is _errors.json (always written, empty {} when green)
     // plus the stderr banner.
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} QUERIES FAILED: ${errors.keys.mkString(", ")}")
-    spark.stop()
   }
 }

@@ -1032,8 +1032,6 @@ object Dedup {
       converged = next.filter(col("__moved")).limit(1).count() == 0L
       labels = next.drop("__moved")
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter converged=$converged t=${System.nanoTime()/1e9}")
     }
     // min-label propagation past maxIter would silently return labels
     // that DISAGREE with the exact transitive closure (and any oracle

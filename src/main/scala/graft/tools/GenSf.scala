@@ -39,12 +39,7 @@ object GenSf {
     val src = args(0)
     val dest = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     generate(spark, src, dest, copies)
     spark.stop()
   }
