@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * and when that storage is released. The only code that persists.
   *
   * == Lifetime contract ==
-  *  - [[lazily]] and [[eagerly]] register a persisted plan in the
+  *  - [[lazily]] registers a persisted plan in the
   *    session's CacheManager, which holds it STRONGLY: nothing frees it
   *    by reachability, and any later plan that canonicalizes the same
   *    (the same parquet path, say) reads its blocks — also after the
@@ -49,7 +49,7 @@ object Share {
 
   private val current = new ThreadLocal[Scope]
 
-  /** Run `body`, then unpersist every [[lazily]] / [[eagerly]] share it
+  /** Run `body`, then unpersist every [[lazily]] share it
     * made in `spark`'s CacheManager, on this thread or on a thread it
     * handed work to through [[carry]]. Scopes nest: an inner scope
     * releases only its own shares.
@@ -86,30 +86,17 @@ object Share {
     * is light enough that an eager barrier costs more than the
     * duplication it removes (measured on the text-stats family: eager
     * checkpoints REGRESSED q_js_drift 1.9→2.9 s while this form removes
-    * the same re-tokenization).
+    * the same re-tokenization). The first consumer should be a single
+    * job: CONCURRENT first consumers (broadcast-exchange subtrees run
+    * on their own thread pool) race on the empty cache — whoever
+    * computes a block first caches it, nobody waits — and each
+    * recomputes the shared plan.
     */
   def lazily(df: DataFrame): DataFrame = {
     val s = current.get
     val owned = s != null && s.owns(df)
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     if (owned) s.add(p)
-    p
-  }
-
-  /** [[lazily]] plus ONE populating job. For a shared relation whose
-    * consumers fan out as CONCURRENT jobs — broadcast-exchange subtrees
-    * run on their own thread pool, so several of them can start while
-    * the lazy cache is still empty and each recomputes the whole
-    * subtree (partition-level: whoever computes a block first caches
-    * it, nobody waits). A single count() populates every block before
-    * the fan-out; consumers then read blocks. There is no Row re-wrap
-    * and no repartition — the cached buffers keep the plan's own
-    * partitioning — so the barrier costs exactly one pass of the
-    * shared plan, which the first racing consumer was paying anyway.
-    */
-  def eagerly(df: DataFrame): DataFrame = {
-    val p = lazily(df)
-    p.count()
     p
   }
 
@@ -157,9 +144,10 @@ object Share {
     * read; keeping both pins 2× the executor storage for nothing —
     * ADVICE r15). Values are untouched: callers must only hand this
     * frames whose consumers are partitioning-independent. Measured
-    * against [[eagerly]] for the agreement operators' token counts,
-    * which concurrent labelers re-read: eagerly was slower on every
-    * run (q_label_kappa 10.4–12.0 s vs 7.1–8.8 s).
+    * against a lazy persist plus one populating count() for the
+    * agreement operators' token counts, which concurrent labelers
+    * re-read: the persist was slower on every run (q_label_kappa
+    * 10.4–12.0 s vs 7.1–8.8 s).
     */
   def checkpointWide(df: DataFrame): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism

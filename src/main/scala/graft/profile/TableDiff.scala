@@ -1,8 +1,10 @@
 package graft.profile
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.exec.ResultSet
 import graft.render.TsvRenderer
 
@@ -17,8 +19,8 @@ import graft.render.TsvRenderer
   * comparison, as a relational full-outer join of the two long-form
   * profiles on (column_name, agg_type) — an engine-side improvement
   * the survey calls out (SURVEY.md §2.3). The join inputs are 8×N-row
-  * aggregates, so the join is trivially broadcastable at any data
-  * scale.
+  * aggregates at any data scale, so the join runs on the driver
+  * ([[diffFrom]]).
   */
 object TableDiff {
 
@@ -60,13 +62,38 @@ object TableDiff {
     * materialized the per-table profiles diffs them here without
     * re-profiling. Inputs are `(column_name, agg_type, result)`
     * relations ([[TableProfiler.profileLong]]'s shape).
+    *
+    * The result is what a full-outer join on (column_name, agg_type)
+    * ordered by both keys returns, merged on the driver over the
+    * collected ≤ 8×N rows per side (a Spark join and sort of them
+    * would cost a job and two exchanges per call); `equal` is Spark's own
+    * `<=>` over that LocalRelation, so NaN, -0.0 and NULL compare as
+    * Spark compares them. A NULL key matches nothing.
     */
   def diffFrom(baseLong: DataFrame, targetLong: DataFrame): DataFrame = {
-    val base = baseLong.withColumnRenamed("result", "base_result")
-    val target = targetLong.withColumnRenamed("result", "target_result")
-    base.join(target, Seq("column_name", "agg_type"), "full_outer")
+    def rows(long: DataFrame) =
+      long.select("column_name", "agg_type", "result").collect().toSeq
+    def key(r: Row) = (r.getString(0), r.getString(1))
+    def keyed(r: Row) = !r.isNullAt(0) && !r.isNullAt(1)
+    val base = rows(baseLong)
+    val target = rows(targetLong)
+    val targetByKey = target.filter(keyed).groupBy(key)
+    val baseKeys = base.filter(keyed).map(key).toSet
+    val merged = base.flatMap { b =>
+      val matches = if (keyed(b)) targetByKey.getOrElse(key(b), Nil) else Nil
+      if (matches.isEmpty) Seq(Row(b(0), b(1), b(2), null))
+      else matches.map(t => Row(b(0), b(1), b(2), t(2)))
+    } ++ target.filterNot(t => keyed(t) && baseKeys(key(t)))
+      .map(t => Row(t(0), t(1), null, t(2)))
+    val order = TableProfiler.sparkStringOrder
+    val sorted = merged.sortBy(key)(Ordering.Tuple2(order, order))
+    val schema = StructType(Seq(
+      StructField("column_name", StringType, nullable = true),
+      StructField("agg_type", StringType, nullable = true),
+      StructField("base_result", baseLong.schema("result").dataType, nullable = true),
+      StructField("target_result", targetLong.schema("result").dataType, nullable = true)))
+    baseLong.sparkSession.createDataFrame(sorted.asJava, schema)
       .withColumn("equal", col("base_result") <=> col("target_result"))
-      .orderBy("column_name", "agg_type")
   }
 
   /** Only the differing cells (empty ⇔ profiles identical). */
@@ -77,9 +104,7 @@ object TableDiff {
     * profile per side: writes the two aligned-text renders
     * (`base_result.tsv` / `target_result.tsv`, aws-athena.sh:194-195)
     * and returns their paths with the [[differences]] of the same two
-    * profiles. outDir stands in for the reference's CWD. The diff reads
-    * the profiles' shared value counts, so collect it inside the
-    * caller's [[graft.exec.Share.scope]].
+    * profiles. outDir stands in for the reference's CWD.
     */
   def vimdiff(spark: SparkSession, baseTable: String, targetTable: String,
       outDir: String): (Path, Path, DataFrame) = {

@@ -1,8 +1,11 @@
 package graft.profile
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.catalog.{InfoSchema, Tables, TrinoTypes}
 
 /** Numeric-column table profiler — the reference's flagship pipeline.
@@ -34,9 +37,10 @@ import graft.catalog.{InfoSchema, Tables, TrinoTypes}
   *     Expand-based multi-distinct both do, which is what breaks at
   *     100 TB).
   *
-  * Both paths emit the wide 8-row shape by exploding per-statistic
-  * struct arrays over a tiny (1- or N-row) relation — no pivot
-  * aggregation layers in the plan. For the 100 TB fast path,
+  * Neither path pivots in Spark: the exact path finishes on the driver
+  * (its N per-column rows become the 8×N long relation and the wide
+  * pivot as LocalRelations), the sketch path explodes per-statistic
+  * struct arrays over its 1-row aggregate. For the 100 TB fast path,
   * [[approxProfile]] swaps distinct/median for `approx_count_distinct`
   * / `percentile_approx` sketches (constant memory, associative
   * merge) when ±ε is acceptable.
@@ -219,10 +223,10 @@ object TableProfiler {
     *
     *   unpivot (ci, value) → groupBy(ci, value) count   [one shuffle,
     *     map-side combined, key space = Σ distinct values; the result
-    *     is MATERIALIZED once and read by both jobs below]
+    *     is PERSISTED once and read by both jobs below]
     *   count / count_distinct / min / max / sum / mean  — one roll-up
-    *     over vc, evaluated inside the median machinery's eager
-    *     checkpoint job and joined back as an N-row literal relation;
+    *     over vc, collected (job 1) and fed back to job 2 as an N-row
+    *     literal relation;
     *     the sum is the range-split exact decimal Σ leg(v)·cnt of
     *     [[legCompact]]/[[legWide]] (associative →
     *     partitioning-independent); mean = Σ/n in one double division
@@ -234,6 +238,9 @@ object TableProfiler {
     *   median  — window cumsum over value order (N-way parallel sort
     *     of DISTINCT values, never raw rows), interpolated exactly as
     *     Spark's `Percentile.getPercentile`
+    *   σ and median come from ONE collected pass over vc (job 2); the
+    *     final expressions then run on the driver over the N collected
+    *     rows (see the body)
     *
     * Why not the obvious built-ins: `countDistinct`×N plans as
     * Expand×(N+1) with an (N+1)-column distinct shuffle; `percentile`
@@ -253,7 +260,6 @@ object TableProfiler {
     * hotter single value would need a wider count decimal).
     */
   private def exactLong(df: DataFrame, cols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // ci is an INT key: the value-counts relation is table-sized for
     // near-unique columns, and hashing/shuffling an int beats a
     // string at every exchange this plan reuses
@@ -266,37 +272,31 @@ object TableProfiler {
     // already scans as thousands of tasks — inserting a full-table
     // round-robin exchange there would only add I/O, so the spread
     // fires only when the scan is under-parallel.
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
+    val spark = df.sparkSession
+    val parallelism = spark.sparkContext.defaultParallelism
     // toRdd, not df.rdd — see Dedup.spread: same partition count, no
     // extra per-call deserializer RDD on top of the planned query
     val spreadDf =
       if (df.queryExecution.toRdd.getNumPartitions >= parallelism) df
       else df.repartition(parallelism)
-    // The value-counts relation is SHARED once (persist, executor
-    // block store, memory-then-disk): it has several whole-job
-    // consumers — the stats collect below and the main σ+median query
-    // — and without the cut each would recompute the raw scan + stack
-    // + shuffle (the dominant cost of the profile, and at 100 TB a
-    // full second pass over the table). Storing vc is strictly cheaper
-    // than recomputing it: it is at most table-sized (distinct
-    // (column, value) pairs), the same size class as the shuffle files
-    // the recompute would write anyway. Consumers stay
-    // partitioning-independent, so the cut changes no values.
+    // The value-counts relation is SHARED (persist, executor block
+    // store, memory-then-disk): its two whole-job consumers — the stats
+    // collect and the σ+median pass below — would otherwise each
+    // recompute the raw scan + stack + shuffle (the dominant cost of
+    // the profile, and at 100 TB a full second pass over the table).
+    // Storing vc is strictly cheaper than recomputing it: it is at most
+    // table-sized (distinct (column, value) pairs), the same size class
+    // as the shuffle files the recompute would write anyway. Consumers
+    // stay partitioning-independent, so the cut changes no values.
     //
-    // EAGERLY POPULATED (Share.eagerly — persist + one count job), not
-    // the r15 lazy persist and not the r13–r15 eager
-    // localCheckpoint+respread: the lazy form let the stats/offsets
-    // build job's CONCURRENT broadcast subtrees (boundary sketch,
-    // wanted positions) race on the unpopulated cache — partition-
-    // level, whoever computes a block first caches it and nobody
-    // waits — so the scan+stack+count subtree ran up to 3× (JobProbe
-    // r16: six 12.8 MB rescans in one lineitem profile). One count()
-    // populates every block first (measured: lineitem 7.9→7.0 s warm),
-    // costs exactly the one pass a racing consumer paid anyway, and —
-    // unlike the old localCheckpoint — keeps columnar cache blocks
-    // with no Row re-wrap or respread job. The blocks live until the
-    // caller's Share.scope closes (see graft.exec.Share).
-    val vc = graft.exec.Share.eagerly(spreadDf
+    // LAZY (Share.lazily), with no populating job of its own: the stats
+    // collect is vc's only first consumer, a plain aggregation with no
+    // concurrent broadcast subtree, so nothing races on an unpopulated
+    // cache (the race that once made the sharded median's broadcast
+    // subtrees rescan lineitem up to 3×); it populates every block and
+    // the second pass reads them. The blocks live until the Share.scope
+    // that [[profileLong]] opens closes, before the profile returns.
+    val vc = graft.exec.Share.lazily(spreadDf
       .selectExpr(s"stack(${cols.size}, $stackArgs) AS (ci, v)")
       .filter(col("v").isNotNull)
       .groupBy("ci", "v").agg(count(lit(1)).cast(DecimalType(10, 0)).as("cnt")))
@@ -305,57 +305,46 @@ object TableProfiler {
     // [[legWide]]: |v| < 10¹² sums compact decimal(18,6), wider values
     // sum decimal(27,6) with the loud 10²¹ raise_error envelope of
     // ADVICE r11) — are evaluated ONCE, as a single cheap reduce over
-    // the populated vc blocks. The main query then sees the stats as a
-    // LITERAL N-row relation (`basicLit`): the pre-r13 shape
-    // re-aggregated vc once per consumer (σ's mean broadcast, the
-    // median's n join, the final assembly — three full reduce passes
-    // over the value-counts exchange, each carrying the wide-decimal
-    // sum), which VERDICT r12 measured at ~2× on the long profile.
-    // (r13–r15 hauled the stats through the sharded median machinery's
-    // checkpoint instead; with vc eagerly populated the carrying trick
-    // buys nothing and the direct collect frees the median path to be
-    // regime-switched below.)
-    val statsAgg = vc.groupBy("ci").agg(
+    // vc, and land on the driver. The collected rows drive the σ
+    // regimes, the median ranks and the median REGIME decision — so
+    // every switch is a pure function of the data, chosen before the
+    // second pass is planned.
+    val statRows = vc.groupBy("ci").agg(
       sum(col("cnt").cast(LongType)).as("n"),
       count(lit(1)).cast(DoubleType).as("ndist"),
       min("v").as("minv"),
       max("v").as("maxv"),
       sum(legCompact(col("v"), col("v")) * col("cnt")).as("s1c"),
-      sum(legWide(col("v"), col("v")) * col("cnt")).as("s1w"))
-    // Per-column stats land on the driver from ONE cheap aggregation
-    // job over the populated vc blocks (Share.eagerly above computed vc
-    // exactly once; this pass reads blocks). The collected rows drive
-    // BOTH the literal stats relation below and the median REGIME
-    // decision — so the switch is a pure function of the data, chosen
-    // before the main query is planned.
-    val statRows = statsAgg.collect() // N rows, from the cached blocks
+      sum(legWide(col("v"), col("v")) * col("cnt")).as("s1w")).collect()
     // recombine the two sum legs exactly on the driver (decimal
     // addition; each value landed in exactly one leg). java
     // BigDecimal.add at scale 6 is the same exact arithmetic Spark's
-    // Decimal would run.
+    // Decimal would run. lo/hi are the two global 0-based median ranks
+    // per column — pure functions of n.
     val statSchema = StructType(Seq(
       StructField("ci", IntegerType, nullable = false),
       StructField("n", LongType, nullable = false),
       StructField("ndist", DoubleType, nullable = false),
       StructField("minv", DoubleType, nullable = true),
       StructField("maxv", DoubleType, nullable = true),
-      StructField("s1", DecimalType(38, 6), nullable = true)))
+      StructField("s1", DecimalType(38, 6), nullable = true),
+      StructField("lo", LongType, nullable = false),
+      StructField("hi", LongType, nullable = false)))
     val zero6 = java.math.BigDecimal.ZERO.setScale(6)
-    val litRows: Seq[org.apache.spark.sql.Row] = statRows.toSeq.map { r =>
+    val litRows: Seq[Row] = statRows.toSeq.map { r =>
       val s1c = r.getDecimal(r.fieldIndex("s1c"))
       val s1w = r.getDecimal(r.fieldIndex("s1w"))
       val s1 =
         if (s1c == null && s1w == null) null
         else Option(s1c).getOrElse(zero6).add(Option(s1w).getOrElse(zero6))
-      org.apache.spark.sql.Row(
+      val p = 0.5 * (r.getLong(r.fieldIndex("n")) - 1).toDouble
+      Row(
         r.getInt(r.fieldIndex("ci")), r.getLong(r.fieldIndex("n")),
         r.getDouble(r.fieldIndex("ndist")),
         r.getDouble(r.fieldIndex("minv")), r.getDouble(r.fieldIndex("maxv")),
-        s1)
+        s1, math.floor(p).toLong, math.ceil(p).toLong)
     }
-    import scala.jdk.CollectionConverters._
-    val basicLit = df.sparkSession
-      .createDataFrame(litRows.asJava, statSchema)
+    val basicLit = spark.createDataFrame(litRows.asJava, statSchema)
       .withColumn("m", col("s1").cast(DoubleType) / col("n"))
     // pass 2 for stddev: exact decimal sum of (v-m)^2 around the mean.
     // Precision 27 everywhere is the exact-multiply bound: (27,s)×
@@ -372,9 +361,8 @@ object TableProfiler {
     // n·range²/4 ≫ 10²⁶ whenever ultra is selected — relative <
     // 10⁻¹⁴, invisible at the display). The ultra edge (dd ≥ 10³⁹,
     // range ≳ 3·10¹⁹) FAILS LOUDLY — past the widened 10²¹ value
-    // envelope anyway. The regime of each column is now DECIDED ON
-    // THE DRIVER from the collected exact min/max (same IEEE compares
-    // the old broadcast flag columns evaluated; NaN/±Inf can't reach
+    // envelope anyway. The regime of each column is DECIDED ON THE
+    // DRIVER from the collected exact min/max (NaN/±Inf can't reach
     // here — the wide sum leg raised on them in the stats job), so a
     // single-regime profile — the common case — emits ONE
     // unconditional σ sum with no per-row regime dispatch.
@@ -386,17 +374,13 @@ object TableProfiler {
     val coarseCis =
       range.collect { case (ci, rg) if rg > 1e7 && !(rg > 3e13) => ci }.toSeq
     val ultraCis = range.collect { case (ci, rg) if rg > 3e13 => ci }.toSeq
-    def ciIn(cis: Seq[Int]): Column =
-      if (cis.isEmpty) lit(false)
-      else if (range.size == cis.size) lit(true)
-      else col("ci").isInCollection(cis)
     def gated(cis: Seq[Int], expr: Column): Column =
       if (cis.isEmpty) lit(null)
       else if (range.size == cis.size) expr
-      else when(ciIn(cis), expr).otherwise(lit(null))
+      else when(col("ci").isInCollection(cis), expr).otherwise(lit(null))
+    val aux = broadcast(basicLit.select("ci", "m", "lo", "hi"))
     val dd = (col("v") - col("m")) * (col("v") - col("m"))
-    val sq = vc
-      .join(broadcast(basicLit.select(col("ci"), col("m"))), "ci")
+    val devs = vc.join(aux, "ci")
       .withColumn("d2f",
         gated(fineCis, dd.cast(DecimalType(27, 12))).cast(DecimalType(27, 12))
           * col("cnt"))
@@ -410,73 +394,69 @@ object TableProfiler {
             "profiler range envelope exceeded: squared deviation >= 1e39 " +
               "(column range >= ~3e19) overflows the ultra decimal(27,0) " +
               "quantization")))).cast(DecimalType(27, 0)) * col("cnt"))
-      .groupBy("ci")
-      .agg(sum("d2f").as("s2f"), sum("d2c").as("s2c"),
-        sum("d2u").as("s2u"))
-    // median positions: the two global 0-based ranks per column are
-    // PURE FUNCTIONS of the collected n, so they enter as a literal
-    // (ci, __pos) relation (≤ 2 rows per column). TWO REGIMES fetch
-    // the values at those positions, switched on the collected
-    // max-per-column distinct count (data-derived, like the σ regimes
-    // above — never a local[32] constant):
+    val sigma = Seq(sum("d2f").as("s2f"), sum("d2c").as("s2c"), sum("d2u").as("s2u"))
+    // The median values at ranks lo/hi. TWO REGIMES, switched on the
+    // collected max-per-column distinct count (data-derived, like the σ
+    // regimes above — never a local[32] constant):
     //  - window regime (max ndist ≤
     //    spark.graft.profile.medianWindowMaxDistinct, default 4·10⁶):
-    //    ONE partitionBy(ci) sort-window cumsum over the cached vc —
-    //    each task sorts at most maxNdist DISTINCT values (bounded by
-    //    the gate, ~100 MB at the default), and the whole sharded
-    //    machinery (boundary sketch, shard offsets, checkpoint, prune
-    //    joins — measured at sf0.1 as ~60% of the profile's executor
-    //    time: 78 s across five stages for lineitem) disappears;
+    //    the σ sums and both median values in ONE pass — a
+    //    partitionBy(ci) cumsum over value order feeding a groupBy(ci)
+    //    on the same partitioning (one exchange), where the value at
+    //    rank q is the smallest v whose inclusive cumsum exceeds q.
+    //    Each task sorts at most maxNdist DISTINCT values (bounded by
+    //    the gate, ~100 MB at the default);
     //  - sharded regime (beyond the gate — near-unique columns at
     //    100 TB have ~10¹⁰ distinct values, which no single task may
-    //    sort): the range-sharded position-targeted lookup
-    //    (graft.ext.Quantiles.valuesAtPositions), unchanged.
+    //    sort): the σ aggregate joined with the range-sharded
+    //    position-targeted lookup (graft.ext.Quantiles.valuesAtPositions).
     // Both regimes return the value at the SAME exact global rank —
     // shard totals are exact, so the sharded lookup finds precisely
     // the full cumsum's rows — and the interpolation below is shared,
     // so the median is bit-identical under either regime (ProfilerSpec
-    // pins both against the same expected values).
-    val wantedRows: Seq[org.apache.spark.sql.Row] = statRows.toSeq.flatMap { r =>
-      val n = r.getLong(r.fieldIndex("n"))
-      val p = 0.5 * (n - 1).toDouble
-      Seq(math.floor(p).toLong, math.ceil(p).toLong).distinct
-        .map(q => org.apache.spark.sql.Row(r.getInt(r.fieldIndex("ci")), q))
-    }
-    val wantedLit = df.sparkSession.createDataFrame(wantedRows.asJava,
-      StructType(Seq(StructField("ci", IntegerType, nullable = false),
-        StructField("__pos", LongType, nullable = false))))
+    // pins both against each other).
     val maxNdist =
       if (statRows.isEmpty) 0.0
       else statRows.map(r => r.getDouble(r.fieldIndex("ndist"))).max
-    val medianWindowMax = df.sparkSession.conf
+    val medianWindowMax = spark.conf
       .getOption("spark.graft.profile.medianWindowMaxDistinct")
       .map(_.toLong).getOrElse(4000000L)
-    val hitsRaw =
+    val pass =
       if (maxNdist <= medianWindowMax.toDouble) {
-        import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("ci").orderBy("v")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        vc.withColumn("__cum", sum(col("cnt").cast(LongType)).over(w))
-          .join(broadcast(wantedLit), Seq("ci"))
-          .where(col("__cum") - col("cnt").cast(LongType) <= col("__pos") &&
-            col("__pos") <= col("__cum") - 1)
-          .select(col("ci"), col("__pos"), col("v"))
-      } else graft.ext.Quantiles
-        .valuesAtPositions(vc, Seq("ci"), "v", "cnt", wantedLit)
-    val pos = lit(0.5) * (col("n") - 1).cast(DoubleType)
-    val lower = floor(pos)
-    val higher = ceil(pos)
-    val hits = hitsRaw
-      .join(broadcast(basicLit.select(col("ci"), col("n"))), "ci")
-    val med = hits.groupBy("ci", "n")
-      .agg(
-        max(when(col("__pos") === lower.cast(LongType), col("v"))).as("lowv"),
-        max(when(col("__pos") === higher.cast(LongType), col("v"))).as("highv"))
-      .withColumn("median", round(
-        when(lower === higher, col("lowv"))
-          .otherwise(col("lowv") * (higher - pos) + col("highv") * (pos - lower)), 5))
-      .select("ci", "median")
-    val perCi = basicLit.join(sq, Seq("ci")).join(med, Seq("ci"))
+        devs.withColumn("__cum", sum(col("cnt").cast(LongType)).over(w))
+          .groupBy("ci").agg(sigma.head, sigma.tail :+
+            min(when(col("__cum") > col("lo"), col("v"))).as("lowv") :+
+            min(when(col("__cum") > col("hi"), col("v"))).as("highv"): _*)
+      } else {
+        val wanted = basicLit.select(col("ci"),
+          explode(array_distinct(array(col("lo"), col("hi")))).as("__pos"))
+        val med = graft.ext.Quantiles
+          .valuesAtPositions(vc, Seq("ci"), "v", "cnt", wanted)
+          .join(aux, "ci")
+          .groupBy("ci").agg(
+            max(when(col("__pos") === col("lo"), col("v"))).as("lowv"),
+            max(when(col("__pos") === col("hi"), col("v"))).as("highv"))
+        devs.groupBy("ci").agg(sigma.head, sigma.tail: _*).join(med, "ci")
+      }
+    // (ci, s2f, s2c, s2u, lowv, highv) in both regimes
+    val passByCi = pass.collect().map(r => r.getInt(0) -> r.toSeq.tail).toMap
+    // The rest runs on the driver: the N per-column rows (one per
+    // numeric column — columns with zero non-null values have no vc
+    // rows and get count/count_distinct 0, other stats null, the
+    // reference's observable empty semantics) become a LocalRelation,
+    // and the final expressions below are a select over it, which
+    // ConvertToLocalRelation evaluates during optimization: no job and
+    // no generated class.
+    val passFields = pass.schema.fields.toSeq.tail.map(_.copy(nullable = true))
+    val perCiSchema = StructType(statSchema.fields.toSeq.take(6)
+      .map(f => f.copy(nullable = f.name != "ci")) ++ passFields)
+    val statsByCi = litRows.map(r => r.getInt(0) -> r.toSeq.take(6)).toMap
+    val perCiRows = cols.indices.map { ci =>
+      Row.fromSeq(statsByCi.getOrElse(ci, Seq(ci, 0L, 0.0, null, null, null)) ++
+        passByCi.getOrElse(ci, passFields.map(_ => null)))
+    }
     // mean and sum display 6-decimal-quantized sums, which land
     // exactly on .5×10⁻⁵ rounding ties where double round() diverges
     // across engines (see TextStats.decAvg5) — round them with exact
@@ -505,57 +485,57 @@ object TableProfiler {
     def r5FromSu6(b: Column): Column =
       when(col("s1") < 0, lit(-1.0)).otherwise(lit(1.0)) *
         exactHalfUpQuot(b) / lit(100000.0)
-    // emit the long (column_name, agg_type, result) relation directly
-    // from the N per-column stat rows: one 8-entry struct-array explode
-    // instead of collapsing to a 64-aggregate wide row and stacking it
-    // back out — identical values (same expressions), ~8× smaller
-    // generated code in the final stage (measured: the wide collapse
-    // was the largest codegen unit in the profile plan). Columns with
-    // zero non-null values have no vc rows, so the ci domain is
-    // restored with a literal-range left join (count/count_distinct 0,
-    // other stats null — the reference's observable empty semantics).
-    val domain = df.sparkSession.range(cols.size)
-      .select(col("id").cast(IntegerType).as("ci"))
-    val full = domain.join(perCi, Seq("ci"), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
-      .withColumn("ndist", coalesce(col("ndist"), lit(0.0)))
-    val nameMap = typedLit(cols.indices.map(i => i -> cols(i)).toMap)
-    def e(label: String, value: Column) =
-      struct(lit(label).as("agg_type"), value.as("result"))
-    val entries = array(
-      e("1. count", col("n").cast(DoubleType)),
-      e("2. count_distinct", col("ndist")),
-      e("3. mean", r5FromSu6(col("n") * lit(10L))),
-      e("4. std", when(col("n") > 1,
+    // the median, interpolated exactly as Spark's
+    // `Percentile.getPercentile`
+    val pos = lit(0.5) * (col("n") - 1).cast(DoubleType)
+    val lower = floor(pos)
+    val higher = ceil(pos)
+    val median = round(
+      when(lower === higher, col("lowv"))
+        .otherwise(col("lowv") * (higher - pos) + col("highv") * (pos - lower)), 5)
+    // one result column per label, in aggLabels order
+    val results = spark.createDataFrame(perCiRows.asJava, perCiSchema).select(
+      col("n").cast(DoubleType),
+      col("ndist"),
+      r5FromSu6(col("n") * lit(10L)),
+      when(col("n") > 1,
         round(sqrt(coalesce(col("s2f").cast(DoubleType),
           col("s2c").cast(DoubleType),
-          col("s2u").cast(DoubleType) * lit(1e12)) / (col("n") - 1)), 5))),
-      e("5. min", round(col("minv"), 5)),
-      e("6. median", col("median")),
-      e("7. max", round(col("maxv"), 5)),
-      e("8. sum", r5FromSu6(lit(10L))))
-    full.select(element_at(nameMap, col("ci")).as("column_name"),
-        explode(entries).as("entry"))
-      .select(col("column_name"), col("entry.agg_type").as("agg_type"),
-        col("entry.result").as("result"))
+          col("s2u").cast(DoubleType) * lit(1e12)) / (col("n") - 1)), 5)),
+      round(col("minv"), 5),
+      median,
+      round(col("maxv"), 5),
+      r5FromSu6(lit(10L))).collect()
+    // the long (column_name, agg_type, result) relation, ci-major
+    val longRows = cols.zip(results).flatMap { case (c, r) =>
+      aggLabels.indices.map(j => Row(c, aggLabels(j), r.get(j)))
+    }
+    spark.createDataFrame(longRows.asJava, longSchema)
   }
+
+  /** The schema of [[profileLong]]. */
+  private val longSchema = StructType(Seq(
+    StructField("column_name", StringType, nullable = true),
+    StructField("agg_type", StringType, nullable = false),
+    StructField("result", DoubleType, nullable = true)))
 
   /** Long-form profile: `(column_name, agg_type, result)` — the shape
     * of the reference's UNION ALL relation (aws-athena.sh:80-110) —
-    * computed from one scan ([[exactLong]]).
+    * computed from one scan ([[exactLong]]), in column ordinal order
+    * and [[aggLabels]] order within a column.
     *
-    * EAGER contract (ADVICE r13): construction RUNS Spark jobs — the
-    * value-counts build plus the stats/offsets collect — so the
-    * table scan cost and any data-quality raise_error (the 10²¹
-    * envelope) surface AT THE CALL, not at the later collect; the
-    * returned frame reads driver-literal stats plus the persisted
-    * value-counts blocks, which the caller's [[graft.exec.Share.scope]]
-    * releases: collect the frame inside that scope.
+    * EAGER contract (ADVICE r13): the call RUNS every Spark job of the
+    * profile — the stats collect and the σ+median pass — so the table
+    * scan cost and any data-quality raise_error (the 10²¹ envelope)
+    * surface AT THE CALL. The value counts both jobs share are
+    * persisted inside a [[graft.exec.Share.scope]] of this call's own,
+    * released before it returns; the result is a driver-side
+    * LocalRelation of 8×N rows that reads nothing else.
     */
   def profileLong(df: DataFrame): DataFrame = {
     val cols = numericColumns(df.schema)
     require(cols.nonEmpty, "no numeric columns to profile")
-    exactLong(df, cols)
+    graft.exec.Share.scope(df.sparkSession)(exactLong(df, cols))
   }
 
   /** Wide profile: 8 rows (`1. count`…`8. sum`) × (agg_type + one
@@ -566,12 +546,30 @@ object TableProfiler {
     wide(profileLong(df), numericColumns(df.schema))
 
   /** The wide pivot of a [[profileLong]] relation whose numeric
-    * columns are `cols`, in ordinal order. */
-  def wide(long: DataFrame, cols: Seq[String]): DataFrame =
-    long.groupBy("agg_type")
-      .pivot("column_name", cols)
-      .agg(first("result"))
-      .orderBy("agg_type")
+    * columns are `cols`, in ordinal order: what
+    * `long.groupBy("agg_type").pivot("column_name", cols)
+    * .agg(first("result")).orderBy("agg_type")` returns, computed on
+    * the driver over the collected ≤ 8×N input rows (a Spark pivot of
+    * them would cost two aggregation jobs and a sort per call). One row per
+    * distinct agg_type, in Spark's string order; a cell is the first
+    * `result` of its (agg_type, column_name), NULL where there is none.
+    */
+  def wide(long: DataFrame, cols: Seq[String]): DataFrame = {
+    val rows = long.select("agg_type", "column_name", "result").collect().toSeq
+    val cells = rows.groupBy(r => (r.getString(0), r.getString(1)))
+      .view.mapValues(_.head.get(2)).toMap
+    val out = rows.map(_.getString(0)).distinct.sorted(sparkStringOrder)
+      .map(t => Row.fromSeq(t +: cols.map(c => cells.getOrElse((t, c), null))))
+    val resultType = long.schema("result").dataType
+    long.sparkSession.createDataFrame(out.asJava, StructType(
+      long.schema("agg_type") +: cols.map(StructField(_, resultType, nullable = true))))
+  }
+
+  /** Spark's ascending string sort (`orderBy` on a string column):
+    * NULL first, then UTF-8 byte order, which differs from
+    * `String.compareTo`'s UTF-16 order above U+FFFF. */
+  private[graft] val sparkStringOrder: Ordering[String] =
+    Ordering.by[String, Option[UTF8String]](s => Option(s).map(UTF8String.fromString))
 
   /** Profile a table by name, schema sourced from the catalog (the
     * reference reads information_schema, not the data, to decide what

@@ -3,6 +3,7 @@ package graft.tools
 import scala.collection.mutable
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -22,6 +23,8 @@ import graft.exec.Share
   * runMain graft.tools.Harness phases q...   build / plan / exec split
   * runMain graft.tools.Harness plan q...     final adaptive plan
   * }}}
+  * `stages` and `phases` also print the measured run's Janino compiles
+  * ([[compiled]]).
   */
 object Harness {
   type Query = (SparkSession, String) => DataFrame
@@ -186,17 +189,35 @@ object Harness {
     wallMs: Long, runMs: Long, cpuMs: Long, inBytes: Long,
     srBytes: Long, swBytes: Long, spillBytes: Long, ops: String)
 
+  /** One measured run split into its stages, with the number of
+    * classes Janino compiled during it. */
+  final case class Staged(wall: Double, compiles: Long, rows: Seq[StageRow])
+
+  /** `body`, with the number of Janino compilations it caused:
+    * generated classes that missed Spark's codegen cache
+    * (`spark.sql.codegen.cache.maxEntries`, 100 by default and static,
+    * so a call that generates more distinct classes than that
+    * recompiles on every repeat). The count is JVM-wide: work on other
+    * threads meanwhile is counted too. */
+  def compiled[T](body: => T): (T, Long) = {
+    def count = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = count
+    val v = body
+    (v, count - c0)
+  }
+
   private val MarkerKey = "graft.harness.marker"
 
-  /** One warm run of `q` split into its stages: wall seconds plus every
-    * stage the run completed. After a discarded warm-up, the run is
+  /** One warm run of `q` split into its stages: wall seconds, Janino
+    * compiles ([[compiled]]) and every stage the run completed. After
+    * a discarded warm-up, the run is
     * bracketed by two marker jobs; only stages completed between the
     * first marker's end and the second's are kept. The listener bus
     * delivers events in order, so warm-up stages cannot leak in and
     * trailing stages cannot be missed. Jobs are not filtered by job
     * group: labeler Futures run on pooled threads that do not inherit
     * it. */
-  def stages(spark: SparkSession, dir: String, q: Query): (Double, Seq[StageRow]) = {
+  def stages(spark: SparkSession, dir: String, q: Query): Staged = {
     val sc = spark.sparkContext
     // all listener state is confined to the listener-bus thread until
     // `done` completes
@@ -242,10 +263,10 @@ object Harness {
     sc.addSparkListener(listener)
     try {
       marker()
-      val wall = run(spark, dir, q)
+      val (wall, compiles) = compiled(run(spark, dir, q))
       marker()
       Await.result(done.future, 5.minutes)
-      (wall, rows.toSeq)
+      Staged(wall, compiles, rows.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -307,8 +328,10 @@ object Harness {
     println(line)
   }
 
-  private def printStages(name: String, wall: Double, rows: Seq[StageRow]): Unit = {
-    println(f"===== $name  warm wall=$wall%.2f s  stages=${rows.size} =====")
+  private def printStages(name: String, staged: Staged): Unit = {
+    val Staged(wall, compiles, rows) = staged
+    println(f"===== $name  warm wall=$wall%.2f s  stages=${rows.size}  " +
+      s"compiles=$compiles =====")
     println(f"${"id"}%5s ${"tasks"}%5s ${"wallMs"}%7s ${"runMs"}%7s " +
       f"${"cpuMs"}%7s ${"inMB"}%7s ${"srMB"}%7s ${"swMB"}%7s ${"spillMB"}%7s  name")
     for (r <- rows.sortBy(-_.wallMs))
@@ -321,24 +344,27 @@ object Harness {
   }
 
   // Build / plan / execute split of one warm run, plus Catalyst's
-  // tracker phases: driver-side eager planning and codegen apart from
-  // cluster execution.
+  // tracker phases and the run's Janino compiles: driver-side eager
+  // planning and codegen apart from cluster execution.
   private def printPhases(spark: SparkSession, dir: String, name: String): Unit = {
     val q = query(name)
     run(spark, dir, q)
     Share.scope(spark) {
-      val t0 = System.nanoTime()
-      val df = q(spark, dir)
-      val t1 = System.nanoTime()
-      df.queryExecution.executedPlan
-      val t2 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t3 = System.nanoTime()
+      val ((df, t0, t1, t2, t3), compiles) = compiled {
+        val t0 = System.nanoTime()
+        val df = q(spark, dir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        (df, t0, t1, t2, System.nanoTime())
+      }
       val ph = df.queryExecution.tracker.phases
         .map { case (k, v) => s"$k=${v.endTimeMs - v.startTimeMs}ms" }
         .mkString(" ")
       println(f"[phases] $name%-28s build=${(t1 - t0) / 1e9}%5.2f " +
-        f"plan=${(t2 - t1) / 1e9}%5.2f exec=${(t3 - t2) / 1e9}%6.2f  $ph")
+        f"plan=${(t2 - t1) / 1e9}%5.2f exec=${(t3 - t2) / 1e9}%6.2f " +
+        s"compiles=$compiles  $ph")
     }
   }
 
@@ -369,9 +395,7 @@ object Harness {
         try {
           setup(spark, dir)
           for (name <- names) mode match {
-            case "stages" =>
-              val (wall, rows) = stages(spark, dir, query(name))
-              printStages(name, wall, rows)
+            case "stages" => printStages(name, stages(spark, dir, query(name)))
             case "phases" => printPhases(spark, dir, name)
             case "plan" => printPlan(spark, dir, name)
           }

@@ -142,6 +142,52 @@ class CliSpec extends AnyFunSuite {
     assert(diffs.contains("n_regionkey"))
   }
 
+  /** Spark jobs started while `body` ran, counted by a listener. A
+    * marker job after `body` closes the count: the listener bus
+    * delivers in order, so once the marker's start is seen every
+    * earlier job start has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    val Marker = "graft.spec.marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = Promise[Unit]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(Marker) != null)
+          markerSeen.trySuccess(())
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(Marker, "1")
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(Marker, null)
+      Await.result(markerSeen.future, 1.minute)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a vimdiff runs at most 20 Spark jobs") {
+    graft.catalog.Tables.register(spark, TestSpark.sfDir)
+    spark.sql(
+      """SELECT n_nationkey, n_name,
+        |  CASE WHEN n_nationkey = 3 THEN n_regionkey + 1 ELSE n_regionkey END AS n_regionkey
+        |FROM nation""".stripMargin).createOrReplaceTempView("nation_perturbed")
+    val workDir = Files.createTempDirectory("graft-cli-vimdiff")
+    var rc = -1
+    val jobs = jobsOf {
+      rc = Cli.run(
+        Array("vimdiff", "spark_catalog.default.nation", "spark_catalog.default.nation_perturbed"),
+        spark, new PrintStream(new ByteArrayOutputStream()), System.err, workDir)
+    }
+    assert(rc == 0)
+    assert(jobs > 0, "no job counted: the listener saw nothing")
+    assert(jobs <= 20, s"$jobs Spark jobs for one vimdiff")
+  }
+
   test("query with a dotted output label renders (the approx_percentile label)") {
     val (rc, out, err) = capture("query",
       "select c_mktsegment, approx_percentile(c_acctbal, 0.5) from customer group by 1 order by 1")

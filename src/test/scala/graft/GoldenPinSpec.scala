@@ -90,7 +90,7 @@ class GoldenPinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a scope whose body throws still releases its shares") {
     val e = intercept[IllegalStateException](scoped {
-      graft.exec.Share.eagerly(spark.range(1000).toDF("x"))
+      graft.exec.Share.lazily(spark.range(1000).toDF("x")).count()
       throw new IllegalStateException("query failed")
     })
     assert(e.getMessage == "query failed")

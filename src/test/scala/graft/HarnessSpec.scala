@@ -25,7 +25,9 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("measure: a persist-sharing query leaves the CacheManager empty") {
     var persisted = false
     val q: Harness.Query = { (s, d) =>
-      val df = SparkEntry.queries("q_profile_orders")(s, d)
+      // a lazy share that lives until the run's scope closes (a
+      // profile releases its own before it returns)
+      val df = SparkEntry.queries("q_length_bias")(s, d)
       persisted ||= !cacheManager.isEmpty
       df
     }
@@ -99,7 +101,7 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       SparkEntry.queries("q_profile_orders")(s, d)
     }
     sc.addSparkListener(listener)
-    val (wall, rows) =
+    val Harness.Staged(wall, _, rows) =
       try Harness.stages(spark, sf, q)
       finally {
         sc.setLocalProperty(Key, null)
@@ -110,5 +112,16 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!warmStages.isEmpty && rows.nonEmpty)
     val warmLast = warmStages.asScala.map(_.intValue).max
     assert(rows.forall(_.id > warmLast), s"warm-up stage <= $warmLast leaked: ${rows.map(_.id)}")
+  }
+
+  test("stages counts no Janino compile in the warm run of a small query") {
+    val q: Harness.Query = (s, _) =>
+      s.range(1000).selectExpr("id % 7 AS k", "id * 3 AS v").groupBy("k").sum("v")
+    val staged = Harness.stages(spark, sf, q)
+    assert(staged.rows.nonEmpty)
+    assert(staged.compiles == 0, s"${staged.compiles} classes compiled on a repeat")
+    val (_, fresh) = Harness.compiled(spark.range(10)
+      .selectExpr(s"id * ${System.nanoTime() % 1000000} + 17 AS u").collect())
+    assert(fresh > 0, "a never-seen expression compiled nothing: the counter is dead")
   }
 }

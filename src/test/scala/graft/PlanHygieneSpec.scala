@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -31,10 +35,40 @@ class PlanHygieneSpec extends AnyFunSuite {
       s"no pushed filter: ${scan.metadata("PushedFilters")}")
   }
 
+  // every parquet scan under an executed plan: through AQE wrappers,
+  // query stages, cached relations and subqueries
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case f: FileSourceScanExec => Seq(f)
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec => fileScans(q.plan)
+    case m: InMemoryTableScanExec => fileScans(m.relation.cachedPlan)
+    case other => (other.children ++ other.subqueries).flatMap(fileScans)
+  }
+
   test("profiler scans read only the numeric columns") {
     Tables.register(spark, TestSpark.sfDir)
-    val df = graft.profile.TableProfiler.profileTable(spark, "lineitem")
-    scans(df).foreach { s =>
+    // the profile runs its jobs while it is built and returns a local
+    // relation, so its scans are seen in the plans it executes
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val markerSeen = scala.concurrent.Promise[Unit]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.output.exists(_.name == "flush_marker")) markerSeen.trySuccess(())
+        else executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.profile.TableProfiler.profileTable(spark, "lineitem")
+      // reports arrive in order: once this action's own report is
+      // seen, every report of the profile has been
+      spark.range(1).toDF("flush_marker").collect()
+      scala.concurrent.Await.result(markerSeen.future,
+        scala.concurrent.duration.Duration(1, "minute"))
+    } finally spark.listenerManager.unregister(listener)
+    val seen = executed.asScala.toSeq.flatMap(fileScans)
+    assert(seen.nonEmpty, "no parquet scan seen: the check would pass vacuously")
+    seen.foreach { s =>
       val fields = s.requiredSchema.fieldNames.toSet
       assert(!fields.contains("l_returnflag") && !fields.contains("l_shipdate"),
         s"non-numeric column read: $fields")

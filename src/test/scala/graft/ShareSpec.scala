@@ -41,7 +41,8 @@ class ShareSpec extends AnyFunSuite {
   test("a scope releases its shares when the body returns or throws, and nests") {
     var thrown: DataFrame = null
     intercept[IllegalStateException](Share.scope(spark) {
-      thrown = Share.eagerly(spark.range(101).toDF("x"))
+      thrown = Share.lazily(spark.range(101).toDF("x"))
+      thrown.count()
       assert(cached(thrown))
       throw new IllegalStateException("body failed")
     })
@@ -77,6 +78,23 @@ class ShareSpec extends AnyFunSuite {
       assert(cached(owned), "the scope must not release a plan it did not cache")
     } finally owned.unpersist()
     assert(!cached(owned))
+  }
+
+  test("profileLong releases its value counts before it returns, even in an open scope") {
+    spark.sharedState.cacheManager.clearCache()
+    import spark.implicits._
+    val t = Seq((1L, 0.5), (2L, 1.5), (2L, 2.5)).toDF("k", "v")
+    val long = Share.scope(spark) {
+      val long = TableProfiler.profileLong(t)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the value counts outlived the profile")
+      long
+    }
+    // the frame reads nothing the scopes released
+    val cells = long.collect().map(r => (r.getString(0), r.getString(1)) -> r.get(2)).toMap
+    assert(cells.size == 16)
+    assert(cells(("k", "1. count")) == 3.0 && cells(("k", "2. count_distinct")) == 2.0)
+    assert(cells(("v", "6. median")) == 1.5 && cells(("v", "8. sum")) == 4.5)
   }
 
   test("scopes leave checkpoints to their frames") {
