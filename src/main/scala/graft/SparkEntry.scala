@@ -808,30 +808,12 @@ object SparkEntry {
   // 10 → floor 16, EXACTLY the historical literal, so the correctness
   // gate's hashes are unchanged), 32 at sf0.1, 100 at sf1, 316 at
   // sf10. The oracle twins derive the same value in SQL.
-  // The count is MEMOIZED per (application, backing file set) — the
-  // Share.memo posture (ADVICE r11): adaptiveNlist is called at
-  // DataFrame-construction time inside four benchmarked queries, and
-  // an un-memoized count() would charge a full scan job to every
-  // timed invocation. The first input file identifies the registered
-  // corpus dir, so a ScaleSweep that registers two dirs in one JVM
-  // still gets each dir's own count.
-  private val embCounts =
-    scala.collection.concurrent.TrieMap[(String, String), Long]()
-  private def adaptiveNlist(emb: DataFrame): Int = {
-    // memoize ONLY file-backed frames: two different non-file-backed
-    // embedding frames in one JVM would otherwise share the "" key
-    // and silently reuse the first frame's count — nlist is a
-    // result-shaping parameter, not just a perf knob (ADVICE r12). A
-    // frame without input files falls through to a plain count().
-    val n = emb.inputFiles.headOption match {
-      case Some(firstFile) =>
-        val key = (emb.sparkSession.sparkContext.applicationId, firstFile)
-        embCounts.getOrElseUpdate(key, emb.count())
-      case None => emb.count()
-    }
+  // The count runs on every call: a count memoized by input path would
+  // serve a stale, result-shaping nlist after an out-of-band rewrite
+  // of that path.
+  private def adaptiveNlist(emb: DataFrame): Int =
     math.max(semDedupNlist.toDouble,
-      math.ceil(math.sqrt(n / 2.0))).toInt
-  }
+      math.ceil(math.sqrt(emb.count() / 2.0))).toInt
   private def adaptiveNlistOracle: String =
     OraclesExt.adaptiveNlistSql(semDedupNlist)
   // k-means cluster profile: 16 clusters, 2 Lloyd refinements —

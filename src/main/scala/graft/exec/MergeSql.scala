@@ -152,16 +152,8 @@ object MergeSql {
     val usingText = sql.substring(usingAt + 5, onAt).trim
     val (source, isSub, aliasText) =
       if (usingText.startsWith("(")) {
-        val close = TrinoDialect.literalMask(usingText)
-        var j = 0; var depth = 0; var end = -1
-        while (j < usingText.length && end < 0) {
-          if (!close(j)) usingText.charAt(j) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) end = j
-            case _ =>
-          }
-          j += 1
-        }
+        val end = TrinoDialect.closingParen(usingText, 0,
+          TrinoDialect.literalMask(usingText))
         if (end < 0) fail("unbalanced parentheses in USING subquery")
         (usingText.substring(1, end).trim, true,
           usingText.substring(end + 1).trim)

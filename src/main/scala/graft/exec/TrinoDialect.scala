@@ -33,11 +33,13 @@ package graft.exec
   *  - bare `VARCHAR` / `VARBINARY` type names → `STRING` / `BINARY`
   *    ([[rewriteBareTypes]]; `VARCHAR(n)` parses natively).
   *
-  * Every scanner is comment-aware: `--` line comments and
-  * slash-star block comments are masked exactly like string
-  * literals, so an
-  * apostrophe in a comment can't flip the in-string state and trigger
-  * tokens inside comments are never rewritten (ADVICE r6).
+  * Every construct is rewritten over one scanner
+  * ([[rewriteKeywords]]), which is comment-aware: `--` line comments
+  * and slash-star block comments are masked exactly like string
+  * literals, so an apostrophe in a comment can't flip the in-string
+  * state and trigger tokens inside comments are never rewritten
+  * (ADVICE r6). Nested calls follow one rule: a call's arguments are
+  * rewritten before the call itself.
   *
   * Trino's lambda syntax (`x -> f(x)`, `(s, x) -> s + x`) parses
   * natively in Spark with the same core function names
@@ -76,52 +78,26 @@ object TrinoDialect {
   }
 
   /** Rewrite every `map_agg(<args>)` call to
-    * `map_from_entries(collect_list(struct(<args>)))`, with a
-    * mask-aware balanced-paren scan (arguments may contain nested
-    * calls, string literals, and comments).
+    * `map_from_entries(collect_list(struct(<args>)))`.
     */
-  def rewriteMapAgg(sql: String): String = {
-    val lower = sql.toLowerCase
-    val lit = literalMask(sql)
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    while (i < sql.length) {
-      val at = lower.indexOf("map_agg", i)
-      val isCall = at >= 0 && !lit(at) &&
-        (at == 0 || !Character.isLetterOrDigit(sql.charAt(at - 1)) && sql.charAt(at - 1) != '_') && {
-          var j = at + "map_agg".length
-          while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-          j < sql.length && sql.charAt(j) == '('
-        }
-      if (at < 0) {
-        out.append(sql.substring(i)); i = sql.length
-      } else if (!isCall) {
-        out.append(sql.substring(i, at + "map_agg".length))
-        i = at + "map_agg".length
-      } else {
-        out.append(sql.substring(i, at))
-        val open = sql.indexOf('(', at)
-        val end = closingParen(sql, open, lit)
-        require(end > 0, s"unbalanced parentheses in map_agg call at offset $at")
-        val args = sql.substring(open + 1, end)
-        out.append(s"map_from_entries(collect_list(struct($args)))")
-        i = end + 1
-      }
+  def rewriteMapAgg(sql: String): String =
+    rewriteKeywords(sql, Seq("map_agg")) { c =>
+      if (c.isCall) c.replace(s"map_from_entries(collect_list(struct(${c.args})))")
+      else None
     }
-    out.toString
-  }
 
-  /** Index of the `)` closing the `(` at `open`, honoring nested
-    * parens, string literals, and comments; -1 if unbalanced.
+  /** Index of the bracket closing the `(` or `[` at `open`, honoring
+    * nesting, string literals, and comments; -1 if unbalanced.
     */
-  private def closingParen(sql: String, open: Int,
+  private[exec] def closingParen(sql: String, open: Int,
       lit: Array[Boolean]): Int = {
+    val (opens, closes) = if (sql.charAt(open) == '[') ('[', ']') else ('(', ')')
     var j = open; var depth = 0
     while (j < sql.length) {
-      if (!lit(j)) sql.charAt(j) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return j
-        case _ =>
+      if (!lit(j)) {
+        val c = sql.charAt(j)
+        if (c == opens) depth += 1
+        else if (c == closes) { depth -= 1; if (depth == 0) return j }
       }
       j += 1
     }
@@ -152,10 +128,10 @@ object TrinoDialect {
     * single-quoted string literal (quotes included), a `--` line
     * comment (through the newline-exclusive end), or a standard
     * non-nesting slash-star block comment (delimiters included). Lets
-    * the indexOf-driven rewrites skip matches that are DATA or
-    * commentary, not syntax — the property suite feeds literals like
-    * 'UNNEST(a)' that must survive byte-for-byte, and a `-- don't`
-    * comment must not flip the in-string state (ADVICE r6).
+    * the keyword scanner skip matches that are DATA or commentary,
+    * not syntax — the property suite feeds literals like 'UNNEST(a)'
+    * that must survive byte-for-byte, and a `-- don't` comment must
+    * not flip the in-string state (ADVICE r6).
     * Backtick-quoted identifiers (the output of [[quoteIdentifiers]])
     * are masked too, so a column literally named `varchar` or
     * `unnest` is never treated as a keyword by later rewrites.
@@ -214,47 +190,86 @@ object TrinoDialect {
       (at + kw.length == sql.length || !isWordChar(sql.charAt(at + kw.length)))
   }
 
+  /** First non-whitespace index from `from`, stepping by `step` (+1
+    * forward, −1 backward); `s.length` or −1 when only blanks remain.
+    */
+  private def skipWs(s: String, from: Int, step: Int = 1): Int = {
+    var k = from
+    while (k >= 0 && k < s.length && Character.isWhitespace(s.charAt(k))) k += step
+    k
+  }
+
+  /** One whole-word keyword found by [[rewriteKeywords]] outside the
+    * literal mask. When the scan's opener bracket follows the keyword
+    * (after optional whitespace) the hit is a call: `open`/`close`
+    * index that bracket and its partner. Otherwise both are −1.
+    */
+  private final class Hit(val sql: String, val kw: String, val at: Int,
+      val open: Int, val close: Int, rewriteArgs: => String) {
+    /** The argument text, already rewritten by the same pass. */
+    lazy val args: String = rewriteArgs
+    def isCall: Boolean = open >= 0
+    /** Index just past the call, or past the bare keyword. */
+    def end: Int = if (isCall) close + 1 else at + kw.length
+    /** Index of the last non-blank character before the keyword. */
+    def prev: Int = skipWs(sql, at - 1, -1)
+    /** Replace the whole hit with `text`; the scan resumes after it. */
+    def replace(text: String): Option[(String, Int)] = Some((text, end))
+  }
+
+  /** The one keyword/call scanner under every construct rewrite. Each
+    * whole-word occurrence of a keyword in `kws` outside the literal
+    * mask goes to `f`, which returns the replacement text and the
+    * index to resume at, or None to pass the hit through. A call's
+    * arguments are rewritten by the same pass before `f` sees them
+    * (one mask per pass, shared by the nested scans), and a
+    * passed-through call keeps its name and spacing as written. An
+    * unbalanced bracket makes no call: the text stays invalid and
+    * Spark's parser reports it.
+    */
+  private def rewriteKeywords(sql: String, kws: Iterable[String],
+      opener: Char = '(')(f: Hit => Option[(String, Int)]): String = {
+    val lit = literalMask(sql)
+    def scan(from: Int, until: Int): String = {
+      val out = new java.lang.StringBuilder(until - from)
+      var i = from
+      while (i < until) {
+        kws.find(kw => !lit(i) && isKeywordAt(sql, i, kw)) match {
+          case None => out.append(sql.charAt(i)); i += 1
+          case Some(kw) =>
+            val o = skipWs(sql, i + kw.length)
+            val c = if (o < until && sql.charAt(o) == opener)
+              closingParen(sql, o, lit) else -1
+            val isCall = c > 0 && c < until
+            val hit = new Hit(sql, kw, i, if (isCall) o else -1,
+              if (isCall) c else -1, scan(o + 1, c))
+            f(hit) match {
+              case Some((text, next)) => out.append(text); i = next
+              case None =>
+                if (isCall) out.append(sql, i, o + 1).append(hit.args)
+                  .append(sql.charAt(c))
+                else out.append(sql, i, hit.end)
+                i = hit.end
+            }
+        }
+      }
+      out.toString
+    }
+    scan(0, sql.length)
+  }
+
   /** Trino `ARRAY[e1, e2]` literals → Spark `array(e1, e2)` —
     * Trino's bracket syntax (used for multi-percentile argument lists
     * and IN-list-style constants) has no Spark spelling; the function
-    * form does. Nested literals (`ARRAY[ARRAY[1]]`) convert in one
-    * pass via a bracket stack; map subscripts (`kv['c']`) and Trino's
-    * paren TYPE syntax (`CAST(x AS ARRAY(varchar))`) are untouched
-    * (neither is an `ARRAY[` keyword-bracket pair).
+    * form does. Nested literals (`ARRAY[ARRAY[1]]`) convert
+    * inside-out; map subscripts (`kv['c']`) and Trino's paren TYPE
+    * syntax (`CAST(x AS ARRAY(varchar))`) are untouched (neither is
+    * an `ARRAY[` keyword-bracket pair).
     */
-  def rewriteArrayLiteral(sql: String): String = {
-    val lit = literalMask(sql)
-    val out = new StringBuilder(sql.length)
-    // stack entry per open '[': true = this bracket was an ARRAY[
-    var stack = List.empty[Boolean]
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (lit(i)) { out.append(c); i += 1 }
-      else if (isKeywordAt(sql, i, "array") && !lit(i) && {
-        var j = i + 5
-        while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-        j < sql.length && sql.charAt(j) == '[' && !lit(j)
-      }) {
-        out.append("array(")
-        i += 5
-        while (Character.isWhitespace(sql.charAt(i))) i += 1
-        i += 1 // consume the '['
-        stack = true :: stack
-      } else {
-        c match {
-          case '[' => stack = false :: stack; out.append(c)
-          case ']' =>
-            val isArr = stack.headOption.contains(true)
-            if (stack.nonEmpty) stack = stack.tail
-            out.append(if (isArr) ')' else ']')
-          case _ => out.append(c)
-        }
-        i += 1
-      }
+  def rewriteArrayLiteral(sql: String): String =
+    rewriteKeywords(sql, Seq("array"), opener = '[') { c =>
+      if (c.isCall) c.replace(s"array(${c.args})") else None
     }
-    out.toString
-  }
 
   /** Trino's WEIGHTED `approx_percentile(x, w, percentage)` and
     * `approx_percentile(x, w, percentage, accuracy)` →
@@ -267,44 +282,13 @@ object TrinoDialect {
     * array-percentage form, after [[rewriteArrayLiteral]]) parse
     * natively in Spark and pass through untouched.
     */
-  def rewriteApproxPercentile(sql: String): String = {
-    val lower = sql.toLowerCase
-    val lit = literalMask(sql)
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    while (i < sql.length) {
-      val at = lower.indexOf("approx_percentile", i)
-      if (at < 0) { out.append(sql.substring(i)); i = sql.length }
-      else if (lit(at) || !isKeywordAt(sql, at, "approx_percentile")) {
-        out.append(sql.substring(i, at + 17)); i = at + 17
-      } else {
-        var j = at + 17
-        while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-        if (j >= sql.length || sql.charAt(j) != '(') {
-          out.append(sql.substring(i, at + 17)); i = at + 17
-        } else {
-          val end = closingParen(sql, j, lit)
-          require(end > 0, s"unbalanced parentheses in approx_percentile at offset $at")
-          val args = splitTopLevel(sql.substring(j + 1, end))
-          if (args.length == 3 || args.length == 4) {
-            // nested calls inside the swapped args still rewrite;
-            // a 4th (accuracy) argument is dropped
-            val a = args.map(rewriteApproxPercentile)
-            out.append(sql.substring(i, at))
-            out.append(s"percentile(${a(0)},${a(2)},${a(1)})")
-            i = end + 1
-          } else {
-            // Spark-native form: byte-identical passthrough; the scan
-            // continues INTO the argument list, so nested calls are
-            // still visited
-            out.append(sql.substring(i, at + 17))
-            i = at + 17
-          }
-        }
-      }
+  def rewriteApproxPercentile(sql: String): String =
+    rewriteKeywords(sql, Seq("approx_percentile")) { c =>
+      val a = if (c.isCall) splitTopLevel(c.args) else Nil
+      if (a.length == 3 || a.length == 4)
+        c.replace(s"percentile(${a(0)},${a(2)},${a(1)})")
+      else None
     }
-    out.toString
-  }
 
   /** Trino `UNNEST(...)` → Spark's generator table functions, all
     * four Trino forms:
@@ -328,67 +312,36 @@ object TrinoDialect {
     * correlated table-function reference; Trino correlates
     * implicitly).
     */
-  def rewriteUnnest(sql: String): String = {
-    val lower = sql.toLowerCase
-    val lit = literalMask(sql)
-    val out = new StringBuilder(sql.length)
-    def skipWs(k0: Int): Int = {
-      var k = k0
-      while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-      k
-    }
-    var i = 0
-    while (i < sql.length) {
-      val at = lower.indexOf("unnest", i)
-      if (at < 0) { out.append(sql.substring(i)); i = sql.length }
-      else if (lit(at) || !isKeywordAt(sql, at, "unnest") || {
-        val j = skipWs(at + 6)
-        j >= sql.length || sql.charAt(j) != '(' || lit(j)
-      }) {
-        out.append(sql.substring(i, at + 6)); i = at + 6
-      } else {
-        val open = skipWs(at + 6)
-        val close = closingParen(sql, open, lit)
-        require(close > 0, s"unbalanced parentheses in UNNEST at offset $at")
-        val args = splitTopLevel(sql.substring(open + 1, close))
-          .map(_.trim).map(rewriteUnnest) // nested calls still rewrite
+  def rewriteUnnest(sql: String): String =
+    rewriteKeywords(sql, Seq("unnest")) { c =>
+      if (!c.isCall) None else {
+        val args = splitTopLevel(c.args).map(_.trim)
         // optional WITH ORDINALITY — consumed, not passed through
-        var rest = skipWs(close + 1)
-        var ordinality = false
-        if (isKeywordAt(sql, rest, "with")) {
-          val j2 = skipWs(rest + 4)
-          if (isKeywordAt(sql, j2, "ordinality")) {
-            ordinality = true
-            rest = skipWs(j2 + "ordinality".length)
+        val after = skipWs(sql, c.end)
+        val ord = skipWs(sql, after + 4)
+        val ordinality = isKeywordAt(sql, after, "with") &&
+          isKeywordAt(sql, ord, "ordinality")
+        val rest = if (ordinality) skipWs(sql, ord + "ordinality".length) else after
+        val p = c.prev
+        val lateral = p >= 0 &&
+          (sql.charAt(p) == ',' || isKeywordAt(sql, p - 3, "join"))
+        val call =
+          if (args.length == 1 && !ordinality) s"explode(${args.head})"
+          else {
+            val sizes = args.map(a => s"size($a)")
+            val n = if (sizes.length == 1) sizes.head
+                    else sizes.mkString("greatest(", ", ", ")")
+            val zipped =
+              if (ordinality) args :+ s"slice(sequence(0, $n), 2, $n)"
+              else args
+            s"inline(arrays_zip(${zipped.mkString(", ")}))"
           }
-        }
-        // LATERAL when preceded by a comma or a JOIN keyword
-        var p = at - 1
-        while (p >= 0 && Character.isWhitespace(sql.charAt(p))) p -= 1
-        val needsLateral = p >= 0 && (sql.charAt(p) == ',' ||
-          (p >= 3 && sql.regionMatches(true, p - 3, "join", 0, 4) &&
-            isKeywordAt(sql, p - 3, "join")))
-        out.append(sql.substring(i, at))
-        if (needsLateral) out.append("LATERAL ")
-        if (args.length == 1 && !ordinality) {
-          out.append(s"explode(${args.head})")
-        } else {
-          val sizes = args.map(a => s"size($a)")
-          val n = if (sizes.length == 1) sizes.head
-                  else sizes.mkString("greatest(", ", ", ")")
-          val zipped =
-            if (ordinality) args :+ s"slice(sequence(0, $n), 2, $n)"
-            else args
-          out.append(s"inline(arrays_zip(${zipped.mkString(", ")}))")
-        }
-        // alias (and everything after) passes through verbatim; a
+        // the alias (and everything after) passes through verbatim; a
         // single separating space replaces the consumed span
-        if (rest < sql.length && rest > close + 1) out.append(' ')
-        i = rest
+        val sep = if (rest < sql.length && rest > c.end) " " else ""
+        Some(((if (lateral) "LATERAL " else "") + call + sep, rest))
       }
     }
-    out.toString
-  }
 
   /** Trino `TRY(CAST(x AS t))` / `TRY(TRY_CAST(x AS t))` →
     * Spark `try_cast(x AS t)` — the dominant TRY idiom in hand-written
@@ -399,62 +352,22 @@ object TrinoDialect {
     * Bare `TRY_CAST(x AS t)` parses natively in Spark and is not
     * touched by this rewrite.
     */
-  def rewriteTry(sql: String): String = {
-    val lower = sql.toLowerCase
-    val lit = literalMask(sql)
-    val out = new StringBuilder(sql.length)
-    def skipWs(k0: Int): Int = {
-      var k = k0
-      while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-      k
-    }
-    var i = 0
-    while (i < sql.length) {
-      val at = lower.indexOf("try", i)
-      val isCall = at >= 0 && !lit(at) && isKeywordAt(sql, at, "try") && {
-        val j = skipWs(at + 3)
-        j < sql.length && sql.charAt(j) == '(' && !lit(j)
-      }
-      if (at < 0) { out.append(sql.substring(i)); i = sql.length }
-      else if (!isCall) {
-        out.append(sql.substring(i, at + 3)); i = at + 3
-      } else {
-        val open = skipWs(at + 3)
-        val close = closingParen(sql, open, lit)
-        require(close > 0, s"unbalanced parentheses in TRY at offset $at")
-        val inner = sql.substring(open + 1, close).trim
-        val innerLower = inner.toLowerCase
-        val castPrefix =
-          if (innerLower.startsWith("cast")) Some(4)
-          else if (innerLower.startsWith("try_cast")) Some(8)
-          else None
-        val castBody = castPrefix.flatMap { pl =>
-          val innerLit = literalMask(inner)
-          val po = {
-            var k = pl
-            while (k < inner.length && Character.isWhitespace(inner.charAt(k))) k += 1
-            k
-          }
-          if (po < inner.length && inner.charAt(po) == '(' &&
-              closingParen(inner, po, innerLit) == inner.length - 1)
-            Some(inner.substring(po + 1, inner.length - 1))
-          else None
-        }
-        castBody match {
-          case Some(body) =>
-            out.append(sql.substring(i, at))
-            out.append(s"try_cast($body)")
-            i = close + 1
-          case None =>
-            throw new IllegalArgumentException(
-              s"TRY(...) is only supported around a single CAST/TRY_CAST " +
-                s"(offset $at): Spark has no general error-tolerant wrapper; " +
-                "use the try_* function family explicitly")
-        }
+  def rewriteTry(sql: String): String =
+    rewriteKeywords(sql, Seq("try")) { c =>
+      if (!c.isCall) None else {
+        val inner = c.args.trim
+        val castBody = Seq("cast", "try_cast").find(isKeywordAt(inner, 0, _))
+          .map(kw => skipWs(inner, kw.length))
+          .filter(po => po < inner.length && inner.charAt(po) == '(' &&
+            closingParen(inner, po, literalMask(inner)) == inner.length - 1)
+          .map(po => inner.substring(po + 1, inner.length - 1))
+        castBody.map(body => c.replace(s"try_cast($body)")).getOrElse(
+          throw new IllegalArgumentException(
+            s"TRY(...) is only supported around a single CAST/TRY_CAST " +
+              s"(offset ${c.at}): Spark has no general error-tolerant wrapper; " +
+              "use the try_* function family explicitly"))
       }
     }
-    out.toString
-  }
 
   /** Trino `ROW` → Spark, both positions:
     *
@@ -466,120 +379,48 @@ object TrinoDialect {
     * after `AS` is a type, anywhere else it is the constructor —
     * exactly where Trino's grammar allows each.
     */
-  def rewriteRow(sql: String): String = {
-    val lower = sql.toLowerCase
-    val lit = literalMask(sql)
-    def convertType(t: String): String = {
-      // inside a type, every row(...) is a nested row TYPE
-      val tl = t.toLowerCase
-      val at = tl.indexOf("row")
-      if (at < 0) t
-      else if (!isKeywordAt(t, at, "row") || {
-        var j = at + 3
-        while (j < t.length && Character.isWhitespace(t.charAt(j))) j += 1
-        j >= t.length || t.charAt(j) != '('
-      }) t.substring(0, at + 3) + convertType(t.substring(at + 3))
-      else {
-        val open = t.indexOf('(', at)
-        val close = closingParen(t, open, literalMask(t))
-        require(close > 0, "unbalanced parentheses in ROW type")
-        val fields = splitTopLevel(t.substring(open + 1, close)).map { f =>
-          val ft = f.trim
-          val sp = ft.indexWhere(Character.isWhitespace)
-          require(sp > 0, s"ROW type field needs 'name type': <$ft>")
-          s"${ft.substring(0, sp)}: ${convertType(ft.substring(sp + 1).trim)}"
-        }
-        t.substring(0, at) + s"STRUCT<${fields.mkString(", ")}>" +
-          convertType(t.substring(close + 1))
+  def rewriteRow(sql: String): String =
+    rewriteKeywords(sql, Seq("row")) { c =>
+      if (!c.isCall) None
+      else if (isKeywordAt(sql, c.prev - 1, "as")) c.replace(rowType(c))
+      else c.replace(s"struct(${c.args})")
+    }
+
+  /** The `STRUCT<name: T, ...>` spelling of the row type `c`. Inside a
+    * type every `ROW(...)` is a nested row type, converted from the
+    * field list AS WRITTEN: a converted `STRUCT<..>`'s commas are not
+    * brackets [[splitTopLevel]] could see.
+    */
+  private def rowType(c: Hit): String = {
+    val fields = splitTopLevel(c.sql.substring(c.open + 1, c.close)).map { f =>
+      val ft = f.trim
+      val sp = ft.indexWhere(Character.isWhitespace)
+      require(sp > 0, s"ROW type field needs 'name type': <$ft>")
+      val tpe = ft.substring(sp + 1).trim
+      s"${ft.substring(0, sp)}: " + rewriteKeywords(tpe, Seq("row")) { t =>
+        if (t.isCall) t.replace(rowType(t)) else None
       }
     }
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    while (i < sql.length) {
-      val at = lower.indexOf("row", i)
-      val isCall = at >= 0 && !lit(at) && isKeywordAt(sql, at, "row") && {
-        var j = at + 3
-        while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-        j < sql.length && sql.charAt(j) == '(' && !lit(j)
-      }
-      if (at < 0) { out.append(sql.substring(i)); i = sql.length }
-      else if (!isCall) {
-        out.append(sql.substring(i, at + 3)); i = at + 3
-      } else {
-        // type position iff the previous keyword is AS
-        var p = at - 1
-        while (p >= 0 && Character.isWhitespace(sql.charAt(p))) p -= 1
-        val isType = p >= 1 && isKeywordAt(sql, p - 1, "as")
-        val open = sql.indexOf('(', at)
-        val close = closingParen(sql, open, lit)
-        require(close > 0, s"unbalanced parentheses in ROW at offset $at")
-        out.append(sql.substring(i, at))
-        if (isType) out.append(convertType(sql.substring(at, close + 1)))
-        else // nested ROW constructors in the args still rewrite
-          out.append(s"struct(${rewriteRow(sql.substring(open + 1, close))})")
-        i = close + 1
-      }
-    }
-    out.toString
+    s"STRUCT<${fields.mkString(", ")}>"
   }
 
-  /** Trino's lambda-predicate function NAMES → Spark's:
-    * `any_match(a, f)` → `exists(a, f)`, `all_match(a, f)` →
-    * `forall(a, f)`, `none_match(a, f)` → `(NOT exists(a, f))` —
-    * the lambda bodies themselves pass through (shared grammar).
+  /** Trino function names whose Spark spelling differs, for calls
+    * only, one pair per line. A `NOT ` prefix negates the call:
+    * `none_match(a, f)` → `(NOT exists(a, f))`.
+    *
+    * The `*_match` names are Trino's lambda predicates
+    * ([[rewriteMatchFns]]; the lambda bodies themselves pass through,
+    * shared grammar). The rest are scalar/aggregate names whose Spark
+    * equivalent has IDENTICAL argument order and semantics
+    * ([[rewriteScalarFns]]). Names that LOOK renameable but are not
+    * stay out: `contains` (Trino array-contains vs Spark
+    * string-contains), `codepoint` (non-BMP), `to_unixtime` (double
+    * vs long), `date_diff` (argument reorder, not a rename).
     */
-  /** Rename every CALL of function `from` to `to` (call = the name
-    * followed by `(` outside literals/comments, not a substring of a
-    * longer identifier); with `negate`, additionally wrap the call as
-    * `(NOT to(...))`. The shared engine of [[rewriteMatchFns]] and
-    * [[rewriteScalarFns]].
-    */
-  private def renameCall(s: String, from: String, to: String,
-      negate: Boolean): String = {
-      val lower = s.toLowerCase
-      val lit = literalMask(s)
-      val out = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val at = lower.indexOf(from, i)
-        val isCall = at >= 0 && !lit(at) && isKeywordAt(s, at, from) && {
-          var j = at + from.length
-          while (j < s.length && Character.isWhitespace(s.charAt(j))) j += 1
-          j < s.length && s.charAt(j) == '(' && !lit(j)
-        }
-        if (at < 0) { out.append(s.substring(i)); i = s.length }
-        else if (!isCall) {
-          out.append(s.substring(i, at + from.length)); i = at + from.length
-        } else if (!negate) {
-          out.append(s.substring(i, at)).append(to)
-          i = at + from.length
-        } else {
-          val open = s.indexOf('(', at)
-          val close = closingParen(s, open, lit)
-          require(close > 0, s"unbalanced parentheses in $from at offset $at")
-          out.append(s.substring(i, at))
-          out.append(s"(NOT $to${s.substring(open, close + 1)})")
-          i = close + 1
-        }
-      }
-      out.toString
-  }
-
-  def rewriteMatchFns(sql: String): String =
-    renameCall(
-      renameCall(
-        renameCall(sql, "any_match", "exists", negate = false),
-        "all_match", "forall", negate = false),
-      "none_match", "exists", negate = true)
-
-  /** Trino scalar/aggregate function names whose Spark equivalent has
-    * IDENTICAL argument order and semantics — a pure rename, one pair
-    * per line. Names that LOOK renameable but are not stay out:
-    * `contains` (Trino array-contains vs Spark string-contains),
-    * `codepoint` (non-BMP), `to_unixtime` (double vs long),
-    * `date_diff` (argument reorder, not a rename).
-    */
-  private val ScalarRenames: Seq[(String, String)] = Seq(
+  private val Renames: Map[String, String] = Map(
+    "any_match" -> "exists",
+    "all_match" -> "forall",
+    "none_match" -> "NOT exists",
     "approx_distinct" -> "approx_count_distinct",
     "strpos" -> "instr",
     "arbitrary" -> "any_value",
@@ -587,65 +428,66 @@ object TrinoDialect {
     "levenshtein_distance" -> "levenshtein",
     "starts_with" -> "startswith")
 
-  def rewriteScalarFns(sql: String): String =
-    ScalarRenames.foldLeft(sql) { case (s, (from, to)) =>
-      renameCall(s, from, to, negate = false)
+  /** Rename every call of a function in `names` per [[Renames]]. */
+  private def renameCalls(sql: String, names: Iterable[String]): String =
+    rewriteKeywords(sql, names) { c =>
+      if (!c.isCall) None
+      else Renames(c.kw) match {
+        case s"NOT $to" => c.replace(s"(NOT $to(${c.args}))")
+        case to => c.replace(to + sql.substring(c.at + c.kw.length, c.open + 1) +
+          c.args + ")")
+      }
     }
+
+  /** `any_match(a, f)` → `exists(a, f)`, `all_match(a, f)` →
+    * `forall(a, f)`, `none_match(a, f)` → `(NOT exists(a, f))`.
+    */
+  def rewriteMatchFns(sql: String): String =
+    renameCalls(sql, Renames.keys.filter(_.endsWith("_match")))
+
+  /** The same-semantics scalar/aggregate renames of [[Renames]]. */
+  def rewriteScalarFns(sql: String): String =
+    renameCalls(sql, Renames.keys.filterNot(_.endsWith("_match")))
 
   /** Bare Trino type names with no Spark spelling: `VARCHAR` (no
     * length) → `STRING`, `VARBINARY` → `BINARY`. `VARCHAR(n)` parses
-    * natively in Spark and is untouched (the `(`-lookahead guard).
+    * natively in Spark and is untouched.
     */
-  def rewriteBareTypes(sql: String): String = {
-    def replaceKw(s: String, kw: String, to: String,
-        guardParen: Boolean): String = {
-      val lower = s.toLowerCase
-      val m = literalMask(s)
-      val out = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val at = lower.indexOf(kw, i)
-        if (at < 0) { out.append(s.substring(i)); i = s.length }
-        else if (m(at) || !isKeywordAt(s, at, kw) || (guardParen && {
-          var j = at + kw.length
-          while (j < s.length && Character.isWhitespace(s.charAt(j))) j += 1
-          j < s.length && s.charAt(j) == '('
-        })) {
-          out.append(s.substring(i, at + kw.length)); i = at + kw.length
-        } else {
-          out.append(s.substring(i, at)).append(to)
-          i = at + kw.length
-        }
-      }
-      out.toString
+  def rewriteBareTypes(sql: String): String =
+    rewriteKeywords(sql, Seq("varchar", "varbinary")) { c =>
+      if (c.kw == "varchar" && c.isCall) None
+      else Some((if (c.kw == "varchar") "STRING" else "BINARY", c.at + c.kw.length))
     }
-    replaceKw(replaceKw(sql, "varchar", "STRING", guardParen = true),
-      "varbinary", "BINARY", guardParen = false)
-  }
+
+  private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
 
   /** Resolve `catalog.schema.table` names in the engine's default
     * namespace to bare view names — the SQL-text twin of
     * Tables.table's programmatic resolution (the engine's tables are
     * session views, which Spark SQL can only address by bare name).
     * Names in other namespaces are left for Spark to reject, matching
-    * Tables.table's validation.
+    * Tables.table's validation. String literals and comments are
+    * data, not names, and stay as written.
     */
   def resolveDefaultNamespace(sql: String,
       catalog: String = graft.catalog.Tables.DefaultCatalog,
-      schema: String = graft.catalog.Tables.DefaultSchema): String =
-    sql.replaceAll(
-      s"\\b${java.util.regex.Pattern.quote(catalog)}\\.${java.util.regex.Pattern.quote(schema)}\\.([A-Za-z_][A-Za-z0-9_]*)",
-      "$1")
+      schema: String = graft.catalog.Tables.DefaultSchema): String = {
+    val prefix = s"$catalog.$schema."
+    rewriteKeywords(sql, Seq(catalog)) { c =>
+      val name = c.at + prefix.length
+      if (!sql.startsWith(prefix, c.at)) None
+      else Ident.findPrefixOf(sql.substring(name)).map(t => (t, name + t.length))
+    }
+  }
 
   /** Full translation for the reference's generated query shapes plus
     * the most common hand-written Athena constructs (array literals,
     * weighted approx_percentile, all four UNNEST forms, TRY(CAST),
-    * bare VARCHAR/VARBINARY).
+    * bare VARCHAR/VARBINARY, renamed functions).
     */
   def translate(sql: String): String =
     resolveDefaultNamespace(
-      rewriteScalarFns(
-      rewriteMatchFns(
+      renameCalls(
         rewriteBareTypes(
           rewriteRow(
             rewriteTry(
@@ -653,5 +495,6 @@ object TrinoDialect {
                 rewriteApproxPercentile(
                   rewriteArrayLiteral(
                     rewriteMapAgg(
-                      quoteIdentifiers(sql)))))))))))
+                      quoteIdentifiers(sql)))))))),
+        Renames.keys))
 }

@@ -446,28 +446,20 @@ object Similarity {
   // performance knob with zero correctness surface.
   private[graft] val ScreenCandidateCutoff = 4e7.toLong
 
-  // Histogram scan memoized per (application, index dir) — the
-  // adaptiveNlist/Share.memo posture: the estimate is read at
-  // DataFrame-construction time inside benchmarked queries, and the
-  // probed relation is immutable for the life of an index dir.
-  private val candVolumes =
-    scala.collection.concurrent.TrieMap[(String, String), Long]()
-
   /** Estimated within-cell candidate volume of a [[writeCellIndex]]
     * index: Σ over cells of c·(c−1)/2 of the probed-copy histogram —
     * an upper bound on candidate pairs (the min-shared-cell rule
     * dedups multi-cell pairs) and EXACTLY the quantity whose memory
     * traffic the SQ8 screen exists to cut. One column-pruned scan of
-    * the partition column, memoized per index dir.
+    * the partition column on every call, so an index dir rewritten
+    * out of band is estimated afresh.
     */
   def estimatedCellCandidates(spark: org.apache.spark.sql.SparkSession,
       dir: String): Long =
-    candVolumes.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      spark.read.parquet(s"$dir/probed")
-        .groupBy(col("cell")).agg(count(lit(1)).as("c"))
-        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
-        .head().getLong(0)
-    })
+    spark.read.parquet(s"$dir/probed")
+      .groupBy(col("cell")).agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
+      .head().getLong(0)
 
   /** Mining regime for the within-cell candidate join: pinned plain /
     * pinned SQ8-screened, or measured selection between them.

@@ -70,45 +70,6 @@ object TableProfiler {
       .filter(f => TrinoTypes.isNumeric(f.dataType))
       .map(_.name)
 
-  /** Semantics of the 8 statistics (exact path — see [[exactLong]]
-    * for the plan shape):
-    *
-    *  - count / count_distinct are exact and unrounded
-    *    (aws-athena.sh:81-85); the cast to double is lossless below
-    *    2^53 rows.
-    *  - mean/std/min/median/max/sum display at 5 decimals
-    *    (aws-athena.sh:87-100).
-    *  - median is EXACT rather than the reference's
-    *    `approx_percentile` (aws-athena.sh:96): Trino's t-digest,
-    *    Spark's GK sketch and any oracle all disagree on approximate
-    *    quantiles, so exactness is the only portable semantics
-    *    (SURVEY.md §7.6). The sketch variant lives in
-    *    [[approxProfile]].
-    *  - sum/mean accumulate in exact decimal: double addition is not
-    *    associative, so a shuffle-order-dependent double sum can flip
-    *    the 5th decimal at scale; decimal accumulation is exact and
-    *    deterministic regardless of partitioning. The sum is
-    *    RANGE-SPLIT into two exact legs (see [[legCompact]] /
-    *    [[legWide]]): |v| < 10¹² quantizes at decimal(18,6) — 18
-    *    digits keeps the per-row cast on Spark's compact-long Decimal
-    *    path (VERDICT r12: declaring (27,6) forced per-row BigDecimal
-    *    everywhere, ~2× on the long profile) — and wider values at
-    *    decimal(27,6) with a loud raise_error guard at the |v| < 10²¹
-    *    envelope. Scale 6 out-scales the 5-decimal display rounding.
-    *  - std is the two-pass sample standard deviation around the
-    *    exact mean (see [[exactLong]]).
-    */
-  /** The six non-sketch stats, ALL partition-independent — no
-    * order-dependent double accumulation (`avg`/`stddev_samp` are
-    * banned here for the same reason as in the exact path, see the
-    * object scaladoc): mean and sum reuse the exact decimal-sum +
-    * integer HALF-AWAY rounding of [[exactLong]] (bit-identical to
-    * the exact profile, which ProfilerSpec asserts with `==`), and
-    * std is a single-pass variance over decimal-quantized Σx and Σx²
-    * — deterministic under ANY partitioning; for ill-conditioned
-    * columns (|mean| ≫ σ, where the single-pass cancellation loses
-    * digits) the exact two-pass profile is the reference answer.
-    */
   /** Range-split exact decimal sum, shared by [[baseStats]] and
     * [[exactLong]]: the two legs of `Σ decimal(v)` with the same
     * 10⁻⁶ quantization but regime-matched precision.
@@ -148,6 +109,48 @@ object TableProfiler {
             "overflows the exact decimal(27,6) sum (got "),
           cmpV.cast(StringType), lit(")")))))
 
+  /** `10·s1 / b` rounded to 5 decimals, where `s1` is an exact
+    * decimal(38,6) sum: the mean for `b = 10·n`, the sum for `b = 10`.
+    * The quantized sums land exactly on
+    * .5×10⁻⁵ rounding ties, where double round() diverges across
+    * engines (see TextStats.decAvg5), so this rounds with exact integer
+    * HALF-AWAY-FROM-ZERO instead, over su6 = the scale-6 integer units
+    * of `s1` as decimal(38,0), NOT Long: key-column sums at large scale
+    * exceed Long/10⁶ (the sf1 sweep threw on the cast).
+    *
+    * HALF_UP(|su6| / b) = (|su6|·2 + b) div (2b), computed ENTIRELY in
+    * exact decimal arithmetic. The earlier double-division form broke
+    * at quotients ≥ 2⁵² (the sf0.1 wide-key mean landed on an exact
+    * k.5·10⁻⁵ tie whose 9·10²² numerator rounds 1 ulp high as a double
+    * — DuckDB's floor saw k+1, Spark's x−0.5 trick saw k; BOTH double
+    * pipelines are unreliable there, and they disagreed). pmod
+    * subtracts the exact remainder, so the decimal division is
+    * integer-valued and exact (quotient < 10²⁶ under the 10²¹ value
+    * envelope — far inside decimal(38,6)); the one double conversion
+    * happens on that exact integer, which both engines round
+    * identically by IEEE nearest. Shared by [[baseStats]] and
+    * [[exactLong]], which ProfilerSpec holds `==` to each other.
+    */
+  private def round5(s1: Column, b: Column): Column = {
+    val su6 = (s1 * lit(1000000L)).cast(DecimalType(38, 0))
+    val x = (abs(su6) * 2 + b).cast(DecimalType(38, 0))
+    val y = (b * 2).cast(DecimalType(38, 0))
+    when(s1 < 0, lit(-1.0)).otherwise(lit(1.0)) *
+      ((x - pmod(x, y)) / y).cast(DoubleType) / lit(100000.0)
+  }
+
+  /** The six non-sketch stats, ALL partition-independent — no
+    * order-dependent double accumulation (`avg`/`stddev_samp` are
+    * banned here for the same reason as in the exact path, see the
+    * object scaladoc): mean and sum reuse the exact decimal sum and
+    * the integer HALF-AWAY rounding ([[round5]]) of [[exactLong]]
+    * (bit-identical to the exact profile, which ProfilerSpec asserts
+    * with `==`), and
+    * std is a single-pass variance over decimal-quantized Σx and Σx²
+    * — deterministic under ANY partitioning; for ill-conditioned
+    * columns (|mean| ≫ σ, where the single-pass cancellation loses
+    * digits) the exact two-pass profile is the reference answer.
+    */
   private def baseStats(cols: Seq[String]): Seq[Column] =
     cols.zipWithIndex.flatMap { case (c, i) =>
       val x = col(c)
@@ -167,29 +170,16 @@ object TableProfiler {
       // x² quantized at 10⁻⁶ then summed exactly; decimal(38,6) keeps
       // 32 integer digits of headroom before the sum can overflow
       val s2 = sum((x * x).cast(DecimalType(38, 6)))
-      // decimal(38,0) su6 + exact-decimal HALF_UP division — see
-      // exactLong's notes (the double-division floor broke at
-      // quotients ≥ 2⁵²; this stays in decimal until one final
-      // exact-integer→double conversion)
-      val su6 = (s1 * lit(1000000L)).cast(DecimalType(38, 0))
-      def exactHalfUpQuot(b: Column): Column = {
-        val xx = (abs(su6) * 2 + b).cast(DecimalType(38, 0))
-        val yy = (b * 2).cast(DecimalType(38, 0))
-        ((xx - pmod(xx, yy)) / yy).cast(DoubleType)
-      }
-      def r5FromSu6(b: Column): Column =
-        when(s1 < 0, lit(-1.0)).otherwise(lit(1.0)) *
-          exactHalfUpQuot(b) / lit(100000.0)
       val m = s1.cast(DoubleType) / n
       val variance = (s2.cast(DoubleType) - (m * m) * n) / (n - 1)
       Seq(
         n.cast(DoubleType).as(s"c${i}_1"),
-        r5FromSu6(n * lit(10L)).as(s"c${i}_3"),
+        round5(s1, n * lit(10L)).as(s"c${i}_3"),
         when(n > 1, round(sqrt(greatest(variance, lit(0.0))), 5))
           .as(s"c${i}_4"),
         round(min(x).cast(DoubleType), 5).as(s"c${i}_5"),
         round(max(x).cast(DoubleType), 5).as(s"c${i}_7"),
-        r5FromSu6(lit(10L)).as(s"c${i}_8"))
+        round5(s1, lit(10L)).as(s"c${i}_8"))
     }
 
   /** One row with all 8×N stats as columns `c<i>_<j>` (sketch-based
@@ -457,34 +447,6 @@ object TableProfiler {
       Row.fromSeq(statsByCi.getOrElse(ci, Seq(ci, 0L, 0.0, null, null, null)) ++
         passByCi.getOrElse(ci, passFields.map(_ => null)))
     }
-    // mean and sum display 6-decimal-quantized sums, which land
-    // exactly on .5×10⁻⁵ rounding ties where double round() diverges
-    // across engines (see TextStats.decAvg5) — round them with exact
-    // integer HALF-AWAY-FROM-ZERO instead. su6 = scale-6 integer
-    // units of the exact decimal sum.
-    // decimal(38,0), NOT Long: key-column sums at large scale exceed
-    // Long/10⁶ (the sf1 sweep threw on the cast); the integer
-    // HALF-AWAY arithmetic below is exact either way.
-    val su6 = (col("s1") * lit(1000000L)).cast(DecimalType(38, 0))
-    // HALF_UP(|su6| / b) = (|su6|·2 + b) div (2b), computed ENTIRELY
-    // in exact decimal arithmetic. The earlier double-division form
-    // broke at quotients ≥ 2⁵² (the sf0.1 wide-key mean landed on an
-    // exact k.5·10⁻⁵ tie whose 9·10²² numerator rounds 1 ulp high as
-    // a double — DuckDB's floor saw k+1, Spark's x−0.5 trick saw k;
-    // BOTH double pipelines are unreliable there, and they disagreed).
-    // pmod subtracts the exact remainder, so the decimal division is
-    // integer-valued and exact (quotient < 10²⁶ under the 10²¹ value
-    // envelope — far inside decimal(38,6)); the one double conversion
-    // happens on that exact integer, which both engines round
-    // identically by IEEE nearest.
-    def exactHalfUpQuot(b: Column): Column = {
-      val x = (abs(su6) * 2 + b).cast(DecimalType(38, 0))
-      val y = (b * 2).cast(DecimalType(38, 0))
-      ((x - pmod(x, y)) / y).cast(DoubleType)
-    }
-    def r5FromSu6(b: Column): Column =
-      when(col("s1") < 0, lit(-1.0)).otherwise(lit(1.0)) *
-        exactHalfUpQuot(b) / lit(100000.0)
     // the median, interpolated exactly as Spark's
     // `Percentile.getPercentile`
     val pos = lit(0.5) * (col("n") - 1).cast(DoubleType)
@@ -497,7 +459,7 @@ object TableProfiler {
     val results = spark.createDataFrame(perCiRows.asJava, perCiSchema).select(
       col("n").cast(DoubleType),
       col("ndist"),
-      r5FromSu6(col("n") * lit(10L)),
+      round5(col("s1"), col("n") * lit(10L)),
       when(col("n") > 1,
         round(sqrt(coalesce(col("s2f").cast(DoubleType),
           col("s2c").cast(DoubleType),
@@ -505,7 +467,7 @@ object TableProfiler {
       round(col("minv"), 5),
       median,
       round(col("maxv"), 5),
-      r5FromSu6(lit(10L))).collect()
+      round5(col("s1"), lit(10L))).collect()
     // the long (column_name, agg_type, result) relation, ci-major
     val longRows = cols.zip(results).flatMap { case (c, r) =>
       aggLabels.indices.map(j => Row(c, aggLabels(j), r.get(j)))
@@ -523,6 +485,34 @@ object TableProfiler {
     * of the reference's UNION ALL relation (aws-athena.sh:80-110) —
     * computed from one scan ([[exactLong]]), in column ordinal order
     * and [[aggLabels]] order within a column.
+    *
+    * Semantics of the 8 statistics (see [[exactLong]]
+    * for the plan shape):
+    *
+    *  - count / count_distinct are exact and unrounded
+    *    (aws-athena.sh:81-85); the cast to double is lossless below
+    *    2^53 rows.
+    *  - mean/std/min/median/max/sum display at 5 decimals
+    *    (aws-athena.sh:87-100).
+    *  - median is EXACT rather than the reference's
+    *    `approx_percentile` (aws-athena.sh:96): Trino's t-digest,
+    *    Spark's GK sketch and any oracle all disagree on approximate
+    *    quantiles, so exactness is the only portable semantics
+    *    (SURVEY.md §7.6). The sketch variant lives in
+    *    [[approxProfile]].
+    *  - sum/mean accumulate in exact decimal: double addition is not
+    *    associative, so a shuffle-order-dependent double sum can flip
+    *    the 5th decimal at scale; decimal accumulation is exact and
+    *    deterministic regardless of partitioning. The sum is
+    *    RANGE-SPLIT into two exact legs (see [[legCompact]] /
+    *    [[legWide]]): |v| < 10¹² quantizes at decimal(18,6) — 18
+    *    digits keeps the per-row cast on Spark's compact-long Decimal
+    *    path (VERDICT r12: declaring (27,6) forced per-row BigDecimal
+    *    everywhere, ~2× on the long profile) — and wider values at
+    *    decimal(27,6) with a loud raise_error guard at the |v| < 10²¹
+    *    envelope. Scale 6 out-scales the 5-decimal display rounding.
+    *  - std is the two-pass sample standard deviation around the
+    *    exact mean (see [[exactLong]]).
     *
     * EAGER contract (ADVICE r13): the call RUNS every Spark job of the
     * profile — the stats collect and the σ+median pass — so the table

@@ -20,7 +20,8 @@ class DialectPropertySpec extends AnyFunSuite {
     "map_agg_like", "approx_percentile_ish")
   private val literal = Gen.oneOf(
     "'plain'", "'it''s'", "'ARRAY[1]'", "'map_agg(x)'", "'UNNEST(a)'",
-    "'approx_percentile(x, w, p)'", "'\"quoted\"'", "''")
+    "'approx_percentile(x, w, p)'", "'\"quoted\"'", "''",
+    "'spark_catalog.default.orders'")
   private val fragment: Gen[String] = Gen.oneOf(
     ident,
     literal,
@@ -88,6 +89,8 @@ class DialectPropertySpec extends AnyFunSuite {
     "rewriteRow" -> TrinoDialect.rewriteRow,
     "rewriteMatchFns" -> TrinoDialect.rewriteMatchFns,
     "rewriteBareTypes" -> TrinoDialect.rewriteBareTypes,
+    "rewriteScalarFns" -> TrinoDialect.rewriteScalarFns,
+    "resolveDefaultNamespace" -> (s => TrinoDialect.resolveDefaultNamespace(s)),
     "translate" -> TrinoDialect.translate)
 
   test("string-literal contents survive every rewrite byte-for-byte") {

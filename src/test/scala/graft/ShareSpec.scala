@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.exec.Share
+import graft.ext.Similarity
 import graft.profile.TableProfiler
 
 /** The lifetime contract of [[graft.exec.Share]]: a scope releases the
@@ -36,6 +37,20 @@ class ShareSpec extends AnyFunSuite {
     Files.move(path, root.resolve("old"))
     Files.move(root.resolve("next"), path, StandardCopyOption.ATOMIC_MOVE)
     assert(rowCount() == 1000.0)
+  }
+
+  test("a cell-candidate estimate reads an index dir rewritten out of band afresh") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-cells")
+    def write(cellSize: Int, to: java.nio.file.Path): Unit =
+      Seq.fill(cellSize)(7).toDF("cell").write.parquet(to.toString)
+    write(3, dir.resolve("probed"))
+    assert(Similarity.estimatedCellCandidates(spark, dir.toString) == 3L)
+    write(10, dir.resolve("next"))
+    Files.move(dir.resolve("probed"), dir.resolve("old"))
+    Files.move(dir.resolve("next"), dir.resolve("probed"),
+      StandardCopyOption.ATOMIC_MOVE)
+    assert(Similarity.estimatedCellCandidates(spark, dir.toString) == 45L)
   }
 
   test("a scope releases its shares when the body returns or throws, and nests") {

@@ -227,6 +227,18 @@ class TrinoParitySpec extends AnyFunSuite {
     assert(r.rows == Seq(Seq("true", "true", "true")))
   }
 
+  test("dialect: a none_match nested in a none_match lambda is rewritten too") {
+    // the inner call sits in the outer call's arguments; Spark has no
+    // none_match, so an unrewritten inner call fails analysis. Both
+    // polarities of the inner predicate pin the inner negation.
+    Tables.register(spark, TestSpark.sfDir)
+    val qm = new QueryManager(spark)
+    val r = qm.queryTrino(
+      "SELECT none_match(ARRAY[ARRAY[1,2]], x -> none_match(x, y -> y > 5)) AS a, " +
+        "none_match(ARRAY[ARRAY[1,2]], x -> none_match(x, y -> y < 5)) AS b")
+    assert(r.rows == Seq(Seq("false", "true")))
+  }
+
   test("dialect: ROW constructors and ROW types become struct/STRUCT") {
     assert(TrinoDialect.rewriteRow("SELECT ROW(1, 'a') r") ==
       "SELECT struct(1, 'a') r")
