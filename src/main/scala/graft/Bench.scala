@@ -1,7 +1,8 @@
 package graft
+import graft.queries.{Catalog, QueryDef}
 import graft.tools.Harness
 import graft.tools.Harness.{json, obj}
-/** The benchmark: every SparkEntry.queries entry under
+/** The benchmark: every catalog query under
   * [[Harness.measure]], printed as one JSON line. */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -22,7 +23,7 @@ object Bench {
     val sampleCounts = scala.collection.mutable.LinkedHashMap[String, Int]()
     // which probe governs each query, for the normalized timings
     val blockOf = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val results = SparkEntry.queries.toSeq.zipWithIndex.map { case ((name, fn), i) =>
+    val results = Catalog.all.zipWithIndex.map { case (QueryDef(name, fn, _), i) =>
       if (i % Block == 0) calBlocks += ((i, Harness.probe(spark, 2000000L)))
       blockOf(name) = calBlocks.size - 1
       val m = Harness.measure(spark, sfDir, fn)

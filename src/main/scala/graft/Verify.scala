@@ -1,9 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.queries.{Catalog, QueryDef}
 import graft.tools.Harness
 import graft.tools.Harness.{json, obj}
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
+/** Correctness dump: each catalog query's result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare (tools/selfcheck.py).
   *
   * Usage: runMain graft.Verify <sfDir> <outDir> [query ...] — with query
@@ -20,8 +21,7 @@ object Verify {
   def run(spark: SparkSession, sfDir: String, outDir: String,
       names: Seq[String]): Unit = {
     val picked =
-      if (names.isEmpty) SparkEntry.queries.toSeq
-      else names.map(n => n -> Harness.query(n))
+      if (names.isEmpty) Catalog.all else names.map(Catalog.named)
     new java.io.File(outDir).mkdirs()
     // A throwing query must leave a LOUD artifact: analysis-broken
     // queries were once simply absent from the correctness report
@@ -29,7 +29,7 @@ object Verify {
     // _errors.json next to oracle_sql.json, so "no parquet" can never
     // read as "pass".
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    picked.foreach { case (name, fn) =>
+    picked.foreach { case QueryDef(name, fn, _) =>
       // one Share.scope per query: a later query embedding an identical
       // subplan must exercise its own plan, not read this query's blocks
       try graft.exec.Share.scope(spark) {
@@ -40,9 +40,7 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    val oracles =
-      if (names.isEmpty) SparkEntry.oracleSql
-      else SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
+    val oracles = picked.flatMap(d => d.oracle.map(d.name -> _))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       obj(oracles.map { case (k, v) => k -> json(v) }))
     Files.writeString(Paths.get(s"$outDir/_errors.json"),

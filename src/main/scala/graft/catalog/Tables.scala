@@ -32,6 +32,12 @@ object Tables {
   val DefaultCatalog = "spark_catalog"
   val DefaultSchema  = "default"
 
+  /** Whether `catalog.schema` is the default namespace. Spark and Trino
+    * compare identifiers case-insensitively, so this does too.
+    */
+  def inDefaultNamespace(catalog: String, schema: String): Boolean =
+    catalog.equalsIgnoreCase(DefaultCatalog) && schema.equalsIgnoreCase(DefaultSchema)
+
   // Idempotence guard: re-registering identical views is cheap but
   // re-reads 10 parquet footers per query; skip when unchanged.
   @volatile private var registered: Option[(SparkSession, String)] = None
@@ -101,7 +107,7 @@ object Tables {
       // The reference forwards the full 3-part name to the engine,
       // which fails for an unknown catalog/schema — silently dropping
       // the qualifier would resolve wrong_cat.wrong_db.t to t.
-      require(cat == DefaultCatalog && db == DefaultSchema,
+      require(inDefaultNamespace(cat, db),
         s"unknown catalog or schema: $cat.$db (expected $DefaultCatalog.$DefaultSchema)")
       spark.table(tbl)
     } else spark.table(name)

@@ -1,7 +1,7 @@
 package graft.exec
 
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Executors}
 import java.util.concurrent.atomic.AtomicReference
 import scala.annotation.tailrec
 import org.apache.spark.sql.SparkSession
@@ -36,9 +36,12 @@ final class QueryExecutionException(msg: String) extends RuntimeException(msg)
   *    is server-side, aws-athena.sh:54-56).
   *  - [[results]] returns the stringly [[ResultSet]] (VarCharValue
   *    model, aws-athena.sh:44-48).
-  *  - [[awaitTerminal]] is the poll loop; the reference sleeps 1 s per
-  *    check (aws-athena.sh:58) — in-process we default to 10 ms, the
-  *    state machine (not the latency) being the contract.
+  *  - [[status]] is what the reference polls, sleeping 1 s per check
+  *    (aws-athena.sh:58). In-process, [[awaitTerminal]] blocks until
+  *    the terminal transition instead, the state machine (not the
+  *    latency) being the contract.
+  *  - Every manager runs its queries on one worker pool per JVM, so a
+  *    manager per statement (the Cli) leaves no idle pool behind.
   *
   * Each query's `workGroup` tags the execution with a config namespace
   * (ATHENA_WORKGROUP routing, aws-athena.sh:8,27).
@@ -49,19 +52,21 @@ final class QueryManager(spark: SparkSession,
   /** State transitions go through an AtomicReference CAS so a cancel
     * racing the worker thread can never be overwritten: terminal
     * states (CANCELLED included — aws-athena.sh:54-56) are final.
+    * Whichever side wins the terminal CAS releases `done`.
     */
   private final class Execution(
       val id: String,
       val sql: String,
       val workGroup: String) {
     val state = new AtomicReference[QueryState](QueryState.Queued)
+    val done = new CountDownLatch(1)
     @volatile var result: Option[ResultSet] = None
+
+    def finish(from: QueryState, to: QueryState): Boolean =
+      state.compareAndSet(from, to) && { done.countDown(); true }
   }
 
   private val executions = new ConcurrentHashMap[String, Execution]()
-  private val pool = Executors.newCachedThreadPool { r =>
-    val t = new Thread(r, "graft-query"); t.setDaemon(true); t
-  }
 
   /** Submit a SQL query; returns the execution id (echoed by the
     * reference at aws-athena.sh:36). Parse/analysis errors throw here,
@@ -72,7 +77,7 @@ final class QueryManager(spark: SparkSession,
     val id = UUID.randomUUID().toString
     val exec = new Execution(id, sql, workGroup)
     executions.put(id, exec)
-    pool.submit(new Runnable {
+    QueryManager.pool.submit(new Runnable {
       def run(): Unit = {
         // Job group is attached BEFORE the Queued->Running CAS, so by
         // the time any observer can see RUNNING, cancelJobGroup(id)
@@ -83,11 +88,11 @@ final class QueryManager(spark: SparkSession,
             try {
               val rs = ResultSet.fromDataFrame(df)
               exec.result = Some(rs) // publish before the state flips
-              exec.state.compareAndSet(QueryState.Running, QueryState.Succeeded)
+              exec.finish(QueryState.Running, QueryState.Succeeded)
             } catch {
               case e: Throwable =>
                 // CAS keeps CANCELLED if a cancel won the race.
-                exec.state.compareAndSet(QueryState.Running,
+                exec.finish(QueryState.Running,
                   QueryState.Failed(Option(e.getMessage).getOrElse(e.toString)))
             }
           } // else: cancelled while queued — never runs
@@ -107,21 +112,18 @@ final class QueryManager(spark: SparkSession,
   private def cancelLoop(exec: Execution): Unit = exec.state.get() match {
     case s if s.terminal => () // terminal states are final
     case s =>
-      if (exec.state.compareAndSet(s, QueryState.Cancelled))
+      if (exec.finish(s, QueryState.Cancelled))
         spark.sparkContext.cancelJobGroup(exec.id)
       else cancelLoop(exec)
   }
 
   def cancel(id: String): Unit = cancelLoop(execution(id))
 
-  /** Poll until terminal (the aws-athena.sh:39-60 loop). */
-  def awaitTerminal(id: String, pollMillis: Long = 10L): QueryState = {
-    var s = status(id)
-    while (!s.terminal) {
-      TimeUnit.MILLISECONDS.sleep(pollMillis)
-      s = status(id)
-    }
-    s
+  /** Block until terminal (the aws-athena.sh:39-60 loop's exit). */
+  def awaitTerminal(id: String): QueryState = {
+    val exec = execution(id)
+    exec.done.await()
+    exec.state.get()
   }
 
   /** Results of a SUCCEEDED execution. FAILED surfaces its
@@ -156,15 +158,18 @@ final class QueryManager(spark: SparkSession,
     query(TrinoDialect.translate(sql), workGroup)
 
   /** The `file` command (aws-athena.sh:146-157): suffix-validated
-    * SQL-file source.
+    * SQL-file source, Trino dialect like the Cli's `file`.
     */
   def queryFile(path: String, workGroup: String = defaultWorkGroup): ResultSet = {
     require(path.endsWith(".sql"), "Specify files with a .sql extension")
-    val sql = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    query(sql, workGroup)
+    queryTrino(java.nio.file.Files.readString(java.nio.file.Paths.get(path)), workGroup)
   }
 
   def workGroupOf(id: String): String = execution(id).workGroup
+}
+
+object QueryManager {
+  private val pool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-query"); t.setDaemon(true); t
+  }
 }

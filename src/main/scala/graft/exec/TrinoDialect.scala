@@ -1,5 +1,7 @@
 package graft.exec
 
+import graft.catalog.Tables
+
 /** Minimal Trino→Spark SQL dialect shim for the reference's own query
   * shapes (SURVEY.md §7.6 item 5). The reference emits Trino-dialect
   * SQL (/root/reference/aws-athena.sh:73-122) whose only
@@ -459,26 +461,25 @@ object TrinoDialect {
       else Some((if (c.kw == "varchar") "STRING" else "BINARY", c.at + c.kw.length))
     }
 
-  private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
+  // `.schema.table` after a catalog name
+  private val SchemaTable = """\.([A-Za-z_][A-Za-z0-9_]*)\.([A-Za-z_][A-Za-z0-9_]*)""".r
 
   /** Resolve `catalog.schema.table` names in the engine's default
-    * namespace to bare view names — the SQL-text twin of
+    * namespace (Tables.inDefaultNamespace, so in any case) to bare
+    * view names, the table part as written — the SQL-text twin of
     * Tables.table's programmatic resolution (the engine's tables are
     * session views, which Spark SQL can only address by bare name).
     * Names in other namespaces are left for Spark to reject, matching
     * Tables.table's validation. String literals and comments are
     * data, not names, and stay as written.
     */
-  def resolveDefaultNamespace(sql: String,
-      catalog: String = graft.catalog.Tables.DefaultCatalog,
-      schema: String = graft.catalog.Tables.DefaultSchema): String = {
-    val prefix = s"$catalog.$schema."
-    rewriteKeywords(sql, Seq(catalog)) { c =>
-      val name = c.at + prefix.length
-      if (!sql.startsWith(prefix, c.at)) None
-      else Ident.findPrefixOf(sql.substring(name)).map(t => (t, name + t.length))
+  def resolveDefaultNamespace(sql: String): String =
+    rewriteKeywords(sql, Seq(Tables.DefaultCatalog)) { c =>
+      val rest = c.at + c.kw.length
+      SchemaTable.findPrefixMatchOf(sql.substring(rest))
+        .filter(m => Tables.inDefaultNamespace(sql.substring(c.at, rest), m.group(1)))
+        .map(m => (m.group(2), rest + m.end))
     }
-  }
 
   /** Full translation for the reference's generated query shapes plus
     * the most common hand-written Athena constructs (array literals,

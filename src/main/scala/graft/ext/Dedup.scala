@@ -1140,9 +1140,13 @@ object Dedup {
     * per-field golden frames join back cluster-keyed.
     */
   def goldenRecords(df: DataFrame, idCol: String, keyCol: String,
-      fields: Seq[String], window: Int, blockLen: Int): DataFrame = {
+      fields: Seq[String], window: Int, blockLen: Int,
+      mNum: Int = 9, mDen: Int = 10,
+      upper: BigDecimal = BigDecimal("3.0"),
+      lower: BigDecimal = BigDecimal("0.0")): DataFrame = {
     require(fields.nonEmpty, "need at least one survivorship field")
-    val matches = linkageScores(df, idCol, keyCol, fields, window, blockLen)
+    val matches = linkageScores(df, idCol, keyCol, fields, window, blockLen,
+      mNum, mDen, upper, lower)
       .filter(col("verdict") === "match")
       .select("id_a", "id_b")
     val cc = connectedComponents(df.select(col(idCol).as("id")), matches)

@@ -249,7 +249,8 @@ object TableProfiler {
     * assumed < 10¹⁰ (decimal(10,0) — far beyond any real corpus; a
     * hotter single value would need a wider count decimal).
     */
-  private def exactLong(df: DataFrame, cols: Seq[String]): DataFrame = {
+  private def exactLong(df: DataFrame, cols: Seq[String],
+      medianWindowMax: Long): DataFrame = {
     // ci is an INT key: the value-counts relation is table-sized for
     // near-unique columns, and hashing/shuffling an int beats a
     // string at every exchange this plan reuses
@@ -388,8 +389,8 @@ object TableProfiler {
     // The median values at ranks lo/hi. TWO REGIMES, switched on the
     // collected max-per-column distinct count (data-derived, like the σ
     // regimes above — never a local[32] constant):
-    //  - window regime (max ndist ≤
-    //    spark.graft.profile.medianWindowMaxDistinct, default 4·10⁶):
+    //  - window regime (max ndist ≤ medianWindowMax, by default
+    //    MedianWindowMaxDistinct = 4·10⁶):
     //    the σ sums and both median values in ONE pass — a
     //    partitionBy(ci) cumsum over value order feeding a groupBy(ci)
     //    on the same partitioning (one exchange), where the value at
@@ -408,9 +409,6 @@ object TableProfiler {
     val maxNdist =
       if (statRows.isEmpty) 0.0
       else statRows.map(r => r.getDouble(r.fieldIndex("ndist"))).max
-    val medianWindowMax = spark.conf
-      .getOption("spark.graft.profile.medianWindowMaxDistinct")
-      .map(_.toLong).getOrElse(4000000L)
     val pass =
       if (maxNdist <= medianWindowMax.toDouble) {
         val w = Window.partitionBy("ci").orderBy("v")
@@ -522,10 +520,20 @@ object TableProfiler {
     * released before it returns; the result is a driver-side
     * LocalRelation of 8×N rows that reads nothing else.
     */
-  def profileLong(df: DataFrame): DataFrame = {
+  def profileLong(df: DataFrame): DataFrame = profileLong(df, MedianWindowMaxDistinct)
+
+  /** The largest per-column distinct count whose median the window
+    * regime sorts in one task (see [[exactLong]]).
+    */
+  private val MedianWindowMaxDistinct = 4000000L
+
+  /** [[profileLong]] with the median regime's gate as an argument, so a
+    * spec can force the sharded regime on a small table.
+    */
+  private[graft] def profileLong(df: DataFrame, medianWindowMax: Long): DataFrame = {
     val cols = numericColumns(df.schema)
     require(cols.nonEmpty, "no numeric columns to profile")
-    graft.exec.Share.scope(df.sparkSession)(exactLong(df, cols))
+    graft.exec.Share.scope(df.sparkSession)(exactLong(df, cols, medianWindowMax))
   }
 
   /** Wide profile: 8 rows (`1. count`…`8. sum`) × (agg_type + one

@@ -1,4 +1,4 @@
-package graft
+package graft.queries
 
 /** DuckDB-dialect oracle SQL builders, twinned 1:1 with the Spark
   * queries in [[SparkEntry.queries]]. The driver executes these against

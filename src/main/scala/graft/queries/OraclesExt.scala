@@ -1,4 +1,4 @@
-package graft
+package graft.queries
 
 /** DuckDB-dialect oracle twins for the extension operators
   * (graft.ext.* — SURVEY.md §7.5). Same portability rules as

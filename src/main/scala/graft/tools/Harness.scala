@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
+import graft.queries.Catalog
 import graft.exec.Share
 
 /** The one measurement harness: the only code that builds a
@@ -287,10 +288,6 @@ object Harness {
   def obj(fields: Iterable[(String, String)]): String =
     fields.map { case (k, v) => s"${json(k)}:$v" }.mkString("{", ",", "}")
 
-  /** The named SparkEntry query; an unknown name is rejected. */
-  def query(name: String): Query = SparkEntry.queries.getOrElse(name,
-    throw new IllegalArgumentException(s"unknown query: $name"))
-
   // Measured scaling point: the named queries at two scale factors in
   // one JVM, each dir set up and calibrated before and after its block;
   // cross-dir ratios are only meaningful up to the calibration drift.
@@ -302,7 +299,7 @@ object Harness {
       // a throwing query records an err marker and the sweep goes on —
       // at the big scale one overflow must not cost the whole run
       val times = names.map { name =>
-        val t = measure(spark, dir, query(name)).best
+        val t = measure(spark, dir, Catalog.named(name).build).best
         t match {
           case Right(s) => println(f"[sweep] $dir%-20s $name%-28s $s%8.2f s")
           case Left(e) => println(s"[sweep] $dir $name FAILED: $e")
@@ -347,7 +344,7 @@ object Harness {
   // tracker phases and the run's Janino compiles: driver-side eager
   // planning and codegen apart from cluster execution.
   private def printPhases(spark: SparkSession, dir: String, name: String): Unit = {
-    val q = query(name)
+    val q = Catalog.named(name).build
     run(spark, dir, q)
     Share.scope(spark) {
       val ((df, t0, t1, t2, t3), compiles) = compiled {
@@ -375,7 +372,7 @@ object Harness {
   // initial plan below the adaptive one; read the top section.)
   private def printPlan(spark: SparkSession, dir: String, name: String): Unit =
     Share.scope(spark) {
-      val df = query(name)(spark, dir)
+      val df = Catalog.named(name).build(spark, dir)
       df.collect()
       println(s"===== $name =====")
       println(df.queryExecution.executedPlan.toString)
@@ -385,17 +382,17 @@ object Harness {
     val modes = Set("stages", "phases", "plan")
     args.toList match {
       case "sweep" :: out :: small :: big :: names if names.nonEmpty =>
-        names.foreach(query)
+        names.foreach(Catalog.named)
         val spark = session()
         try sweep(spark, out, small, big, names) finally spark.stop()
       case mode :: names if modes(mode) && names.nonEmpty && sys.env.contains("SPARK_GRAFT_SF_DIR") =>
-        names.foreach(query)
+        names.foreach(Catalog.named)
         val dir = sys.env("SPARK_GRAFT_SF_DIR")
         val spark = session()
         try {
           setup(spark, dir)
           for (name <- names) mode match {
-            case "stages" => printStages(name, stages(spark, dir, query(name)))
+            case "stages" => printStages(name, stages(spark, dir, Catalog.named(name).build))
             case "phases" => printPhases(spark, dir, name)
             case "plan" => printPlan(spark, dir, name)
           }

@@ -112,6 +112,25 @@ class CliSpec extends AnyFunSuite {
       Files.readString(workDir.resolve("target_result.tsv")))
   }
 
+  test("the default namespace matches in any case: query and vimdiff") {
+    val (rc, out, err) = capture("query",
+      "select count(*) as n from SPARK_CATALOG.DEFAULT.orders")
+    assert(rc == 0, err)
+    val n = spark.table("orders").count()
+    assert(out.linesIterator.exists(_.trim == n.toString), out)
+    val workDir = Files.createTempDirectory("graft-cli-vimdiff-case")
+    val outB = new ByteArrayOutputStream(); val errB = new ByteArrayOutputStream()
+    val rc2 = Cli.run(
+      Array("vimdiff", "SPARK_CATALOG.default.region", "spark_catalog.DEFAULT.region"),
+      spark, new PrintStream(outB, true, "UTF-8"), new PrintStream(errB, true, "UTF-8"), workDir)
+    assert(rc2 == 0, errB.toString(StandardCharsets.UTF_8))
+    assert(Files.readString(workDir.resolve("base_result.tsv")) ==
+      Files.readString(workDir.resolve("target_result.tsv")))
+    // the diff render is its header alone, then the files line
+    val lines = outB.toString(StandardCharsets.UTF_8).linesIterator.toSeq
+    assert(lines.size == 2 && lines(1) == "wrote base_result.tsv target_result.tsv", lines)
+  }
+
   test("vimdiff profiles each side once and prints what per-side profiles print") {
     graft.catalog.Tables.register(spark, TestSpark.sfDir)
     spark.sql(

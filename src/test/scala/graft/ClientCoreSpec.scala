@@ -90,6 +90,25 @@ class ClientCoreSpec extends AnyFunSuite {
     assert(qm.queryFile(p.toString).rows == Seq(Seq("42")))
   }
 
+  test("queryFile translates Trino SQL like the file command") {
+    val p = java.nio.file.Files.createTempFile("graft", ".sql")
+    java.nio.file.Files.writeString(p, "select cardinality(ARRAY[1, 2]) as n")
+    assert(qm.queryFile(p.toString).rows == Seq(Seq("2")))
+  }
+
+  test("sequential Cli queries share one worker pool") {
+    import scala.jdk.CollectionConverters._
+    def workers() = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "graft-query" && t.isAlive).toSet
+    val before = workers()
+    val sink = new java.io.PrintStream(new java.io.ByteArrayOutputStream(), true, "UTF-8")
+    for (i <- 1 to 50)
+      assert(Cli.run(Array("query", s"SELECT $i AS x"), spark, sink, sink,
+        java.nio.file.Paths.get(".")) == 0)
+    val added = workers() -- before
+    assert(added.size <= 4, s"${added.size} new idle graft-query threads")
+  }
+
   test("workgroup report fidelity (aws-athena-workgroup.sh)") {
     val reg = new WorkGroupRegistry
     reg.register(WorkGroup("analytics", "ENABLED",

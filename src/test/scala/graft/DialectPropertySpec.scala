@@ -21,10 +21,15 @@ class DialectPropertySpec extends AnyFunSuite {
   private val literal = Gen.oneOf(
     "'plain'", "'it''s'", "'ARRAY[1]'", "'map_agg(x)'", "'UNNEST(a)'",
     "'approx_percentile(x, w, p)'", "'\"quoted\"'", "''",
-    "'spark_catalog.default.orders'")
+    "'spark_catalog.default.orders'", "'SPARK_CATALOG.DEFAULT.orders'")
+  // qualified names in the default namespace, in the cases a user types
+  private val qualified = Gen.oneOf("spark_catalog.default.orders",
+    "SPARK_CATALOG.DEFAULT.orders", "Spark_Catalog.Default.Orders",
+    "SPARK_CATALOG.default.orders")
   private val fragment: Gen[String] = Gen.oneOf(
     ident,
     literal,
+    qualified,
     ident.map(i => s""""$i""""),           // double-quoted identifier
     ident.map(i => s"kv['$i']"),           // map subscript
     Gen.oneOf("ARRAY[1, 2]", "ARRAY[ARRAY[0.5], ARRAY[1.5]]"),
@@ -112,6 +117,20 @@ class DialectPropertySpec extends AnyFunSuite {
       val once = fn(sql)
       assert(fn(once) == once, s"$name not idempotent on <$sql> -> <$once>")
     }
+  }
+
+  test("default-namespace names resolve in any case, outside literals") {
+    val Quoted = "'(?:[^']|'')*'".r
+    for (i <- 0 until 300) {
+      val out = TrinoDialect.translate(sample(i))
+      assert(!Quoted.replaceAllIn(out, "''").toLowerCase.contains("spark_catalog.default."),
+        s"unresolved default-namespace name in <$out>")
+    }
+    assert(TrinoDialect.resolveDefaultNamespace("SELECT * FROM Spark_Catalog.DEFAULT.Orders")
+      == "SELECT * FROM Orders")
+    for (other <- Seq("other.default.orders", "spark_catalog.other.orders"))
+      assert(TrinoDialect.resolveDefaultNamespace(s"SELECT * FROM $other") ==
+        s"SELECT * FROM $other")
   }
 
   test("translate never throws on generated inputs") {

@@ -143,11 +143,8 @@ class ProfilerSpec extends AnyFunSuite {
     Tables.register(spark, TestSpark.sfDir)
     val t = spark.table("lineitem")
     val win = TableProfiler.profileLong(t).collect()
-    spark.conf.set("spark.graft.profile.medianWindowMaxDistinct", "1")
-    try {
-      val sharded = TableProfiler.profileLong(t).collect()
-      assert(win.toSeq == sharded.toSeq)
-    } finally spark.conf.unset("spark.graft.profile.medianWindowMaxDistinct")
+    val sharded = TableProfiler.profileLong(t, medianWindowMax = 1L).collect()
+    assert(win.toSeq == sharded.toSeq)
   }
 
   test("approxProfile agrees with exact profile on count/min/max/mean/sum") {
