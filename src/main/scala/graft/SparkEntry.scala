@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.Tables
 import graft.profile.TableProfiler
-import graft.queries.{Catalog, Common, CurationQueries, DedupQueries, GraphQueries, ModelQueries, ProfileQueries, SearchQueries, TableFormatQueries, VectorQueries}
+import graft.queries.Catalog
 
 /** Driver contract — see SURVEY.md §7.
   *
@@ -29,48 +29,26 @@ object SparkEntry {
   val oracleSql: Map[String, String] =
     Catalog.all.flatMap(d => d.oracle.map(d.name -> _)).toMap
 
-  /** Build every persisted index for `sfDir` (idempotent). Bench calls
-    * this in its untimed setup, same category as view registration.
+  /** Build every family's persisted indexes for `sfDir` (idempotent).
+    * Bench calls this in its untimed setup, same category as view
+    * registration.
     */
   def prewarmIndexes(spark: SparkSession, sfDir: String): Unit = {
     Tables.register(spark, sfDir)
-    VectorQueries.ivfIndexDir(spark, sfDir)
-    SearchQueries.searchIndexDir(spark, sfDir)
-    TableFormatQueries.bloomSkipDir(spark, sfDir)
-    VectorQueries.ivfPqIndexDir(spark, sfDir)
-    DedupQueries.nearDupIndexDir(spark, sfDir)
-    TableFormatQueries.tableLogDemoDir(spark, sfDir)
-    TableFormatQueries.mergeSqlDir(spark, sfDir)
-    TableFormatQueries.mergeSqlCompositeDir(spark, sfDir)
-    TableFormatQueries.mergeSqlBySourceDir(spark, sfDir)
-    TableFormatQueries.tableLogSkipDir(spark, sfDir)
-    TableFormatQueries.tableLogEvolveDir(spark, sfDir)
-    TableFormatQueries.tableCompactionDir(spark, sfDir)
-    Common.cellIndexDir(spark, sfDir)
+    Catalog.families.foreach(_.indexes.foreach(_(spark, sfDir)))
   }
 
-  /** Force-build every shared frame for `sfDir`, returning
+  /** Force-build every family's shared frames for `sfDir`, returning
     * `(name, seconds)` per build. Bench records these as explicit
     * `setup_*` entries so the one-time construction cost (k-means
     * assignment, curation verdicts, DSIR weights, diff profiles) is
     * attributed in the artifact instead of hiding in an unrecorded
     * first run (ADVICE r6).
     */
-  def buildSharedFrames(s: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    def timed(name: String)(f: => DataFrame): (String, Double) = {
+  def buildSharedFrames(s: SparkSession, sfDir: String): Seq[(String, Double)] =
+    Catalog.families.flatMap(_.setupFrames).map { case (name, build) =>
       val t0 = System.nanoTime()
-      f.queryExecution // materialize is eager; touch to be explicit
+      build(s, sfDir).queryExecution // materialize is eager; touch to be explicit
       (name, (System.nanoTime() - t0) / 1e9)
     }
-    Seq(
-      timed("setup_kmeans_assign") { VectorQueries.kmeansAssigned(s, sfDir) },
-      timed("setup_curate_full") { CurationQueries.curateFullVerdicts(s, sfDir) },
-      timed("setup_neardup_clusters") { DedupQueries.nearDupClustersShared(s, sfDir) },
-      timed("setup_importance") { CurationQueries.importanceWeightsShared(s, sfDir) }) ++
-    ProfileQueries.diffTables.map { t =>
-      timed(s"setup_profile_long_$t") { ProfileQueries.profileLongShared(s, sfDir, t) }
-    } ++ Seq(
-      timed("setup_logreg_weights") { ModelQueries.logregWeightsShared(s, sfDir) },
-      timed("setup_copurchase_edges") { GraphQueries.coPurchaseEdges(s, sfDir) })
-  }
 }

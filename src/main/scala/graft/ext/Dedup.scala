@@ -50,6 +50,14 @@ object Dedup {
     */
   val NgramStopShingleCap: Long = 50L
 
+  /** Fellegi–Sunter m-probability and match / non-match score bounds:
+    * [[linkageScores]]' defaults AND its oracle twins' parameters.
+    */
+  val LinkageMNum: Int = 9
+  val LinkageMDen: Int = 10
+  val LinkageUpper: BigDecimal = BigDecimal("3.0")
+  val LinkageLower: BigDecimal = BigDecimal("0.0")
+
   /** [[connectedComponents]] collects the edge list and runs exact
     * union-find on the driver when the graph has at most this many
     * undirected edges. Sized for the DRIVER-HEAP footprint, not the
@@ -627,9 +635,9 @@ object Dedup {
     */
   def linkageScores(df: DataFrame, idCol: String, keyCol: String,
       fields: Seq[String], window: Int, blockLen: Int,
-      mNum: Int = 9, mDen: Int = 10,
-      upper: BigDecimal = BigDecimal("3.0"),
-      lower: BigDecimal = BigDecimal("0.0")): DataFrame = {
+      mNum: Int = LinkageMNum, mDen: Int = LinkageMDen,
+      upper: BigDecimal = LinkageUpper,
+      lower: BigDecimal = LinkageLower): DataFrame = {
     require(fields.nonEmpty, "need at least one comparison field")
     require(mNum >= 1 && mNum < mDen,
       s"m must be a proper fraction, got $mNum/$mDen")
@@ -1140,13 +1148,9 @@ object Dedup {
     * per-field golden frames join back cluster-keyed.
     */
   def goldenRecords(df: DataFrame, idCol: String, keyCol: String,
-      fields: Seq[String], window: Int, blockLen: Int,
-      mNum: Int = 9, mDen: Int = 10,
-      upper: BigDecimal = BigDecimal("3.0"),
-      lower: BigDecimal = BigDecimal("0.0")): DataFrame = {
+      fields: Seq[String], window: Int, blockLen: Int): DataFrame = {
     require(fields.nonEmpty, "need at least one survivorship field")
-    val matches = linkageScores(df, idCol, keyCol, fields, window, blockLen,
-      mNum, mDen, upper, lower)
+    val matches = linkageScores(df, idCol, keyCol, fields, window, blockLen)
       .filter(col("verdict") === "match")
       .select("id_a", "id_b")
     val cc = connectedComponents(df.select(col(idCol).as("id")), matches)

@@ -1,15 +1,18 @@
 package graft.queries
 
 /** Every query the engine ships, family by family. A new query is one
-  * [[QueryDef]] in its family's `defs`.
+  * [[QueryDef]] in its family's `defs`; an index or shared frame it
+  * needs built in set-up goes in the same family's `indexes` or
+  * `setupFrames`.
   */
 object Catalog {
+  val families: Seq[QueryFamily] = Seq(ProfileQueries, SqlQueries,
+    EventQueries, TextQueries, DedupQueries, VectorQueries, SearchQueries,
+    GraphQueries, StatsQueries, ModelQueries, CurationQueries,
+    TableFormatQueries, MultimodalQueries)
+
   val all: Seq[QueryDef] = {
-    val defs = Seq(ProfileQueries.defs, SqlQueries.defs, EventQueries.defs,
-      TextQueries.defs, DedupQueries.defs, VectorQueries.defs,
-      SearchQueries.defs, GraphQueries.defs, StatsQueries.defs,
-      ModelQueries.defs, CurationQueries.defs, TableFormatQueries.defs,
-      MultimodalQueries.defs).flatten
+    val defs = families.flatMap(_.defs)
     val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
     require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
     defs

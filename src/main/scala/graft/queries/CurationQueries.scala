@@ -8,7 +8,7 @@ import Common._
 /** Corpus curation: quality gates, sampling and splits, mixtures,
   * packing, decontamination and importance resampling.
   */
-object CurationQueries {
+object CurationQueries extends QueryFamily {
 
   /** Sampling / packing parameters — passed to BOTH the Spark queries
     * and the OraclesExt twin builders, so the two engines cannot
@@ -69,6 +69,10 @@ object CurationQueries {
       graft.ext.Importance.importanceWeights(docs,
         docs.filter(col("lang") === dsirTargetLang))
     }
+
+  override val indexes = Seq(cellIndexDir)
+  override val setupFrames = Seq("setup_curate_full" -> curateFullVerdicts,
+    "setup_importance" -> importanceWeightsShared)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 — exact canary/secret audit: literal substring hits with

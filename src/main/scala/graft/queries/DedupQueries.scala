@@ -9,7 +9,7 @@ import Common._
   * MinHash/SimHash and span dedup, clusters and survivorship, and
   * record linkage.
   */
-object DedupQueries {
+object DedupQueries extends QueryFamily {
 
   // fuzzy dedup: keep candidate pairs with edit ratio <= 1/5
   private val fuzzyRatioNum = 1
@@ -22,10 +22,6 @@ object DedupQueries {
   private val snmBlockLen = 4
   // Fellegi–Sunter comparison vector over the part candidate pairs
   private val linkageFields = Seq("p_brand", "p_type", "p_size")
-  // Fellegi–Sunter m-probability 9/10 and the match / non-match
-  // score bounds
-  private val (linkageMNum, linkageMDen) = (9, 10)
-  private val (linkageUpper, linkageLower) = ("3.0", "0.0")
   // Fellegi–Sunter EM rounds (each is one CTE pass over <= 2^F rows)
   private val linkageEmIters = 5
   // duplicated-span detection: positional n-gram size + min distinct
@@ -51,6 +47,9 @@ object DedupQueries {
     sharedFrame(s, "neardup_clusters", sfDir) {
       Dedup.nearDupClusters(s.table("documents"))
     }
+
+  override val indexes = Seq(nearDupIndexDir)
+  override val setupFrames = Seq("setup_neardup_clusters" -> nearDupClustersShared)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 extensions — deduplication family over `documents`.
@@ -195,10 +194,10 @@ object DedupQueries {
     // exact-decimal log-likelihood-ratio score, 3-way verdict.
     QueryDef("q_linkage_score", withTables { s =>
       Dedup.linkageScores(s.table("part"), "p_partkey", "p_name",
-        linkageFields, snmWindow, snmBlockLen, linkageMNum, linkageMDen,
-        BigDecimal(linkageUpper), BigDecimal(linkageLower))
+        linkageFields, snmWindow, snmBlockLen)
     }, Some(OraclesExt.linkageScores(linkageFields, snmWindow, snmBlockLen,
-      linkageMNum, linkageMDen, linkageUpper, linkageLower))),
+      Dedup.LinkageMNum, Dedup.LinkageMDen, Dedup.LinkageUpper.toString,
+      Dedup.LinkageLower.toString))),
     // Fellegi–Sunter EM: estimate per-field m/u probabilities and the
     // match proportion from the blocked candidate pairs themselves —
     // the unsupervised calibration behind q_linkage_score's weights.
@@ -212,8 +211,8 @@ object DedupQueries {
     // entity with majority-value survivorship per field.
     QueryDef("q_golden_records", withTables { s =>
       Dedup.goldenRecords(s.table("part"), "p_partkey", "p_name",
-        linkageFields, snmWindow, snmBlockLen, linkageMNum, linkageMDen,
-        BigDecimal(linkageUpper), BigDecimal(linkageLower))
+        linkageFields, snmWindow, snmBlockLen)
     }, Some(OraclesExt.goldenRecords(linkageFields, snmWindow, snmBlockLen,
-      linkageMNum, linkageMDen, linkageUpper, linkageLower))))
+      Dedup.LinkageMNum, Dedup.LinkageMDen, Dedup.LinkageUpper.toString,
+      Dedup.LinkageLower.toString))))
 }

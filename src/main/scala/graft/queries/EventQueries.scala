@@ -7,7 +7,7 @@ import Common._
 /** Event-stream analytics over `events`: transitions, sessions,
   * windows, funnels, attribution and daily-series monitors.
   */
-object EventQueries {
+object EventQueries extends QueryFamily {
 
   private val rollingDays = 7
   private val funnelStageNames = Seq("signup", "click", "purchase")

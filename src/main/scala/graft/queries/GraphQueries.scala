@@ -9,7 +9,7 @@ import Common._
   * triangles, k-core, link prediction, association rules, PageRank,
   * HITS, communities.
   */
-object GraphQueries {
+object GraphQueries extends QueryFamily {
 
   /** Co-purchase triangle counting oracle — twin of
     * Graph.coOccurrenceEdges + triangleCounts on (order, part).
@@ -88,6 +88,8 @@ object GraphQueries {
       graft.ext.Graph.coOccurrenceEdges(
         s.table("lineitem"), "l_orderkey", "l_partkey")
     }
+
+  override val setupFrames = Seq("setup_copurchase_edges" -> coPurchaseEdges)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 — HITS hubs/authorities on the customer→part purchase

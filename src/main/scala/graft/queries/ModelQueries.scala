@@ -8,7 +8,7 @@ import Common._
 /** Classifiers and their evaluation: Naive Bayes, logistic
   * regression, agreement, calibration, AUC and gate thresholds.
   */
-object ModelQueries {
+object ModelQueries extends QueryFamily {
 
   // logistic-regression quality classifier: full-batch GD rounds +
   // learning rate (shared with OraclesExt.logregTrain/logregPredict)
@@ -28,6 +28,8 @@ object ModelQueries {
       graft.ext.LogReg.finalWeights(s.table("documents"),
         col("lang") === dsirTargetLang, iters = logregIters, lr = logregLr)
     }
+
+  override val setupFrames = Seq("setup_logreg_weights" -> logregWeightsShared)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 — label QA: Cohen's kappa between the NB self-train labels

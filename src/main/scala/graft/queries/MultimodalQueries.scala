@@ -7,7 +7,7 @@ import Common._
 /** Multimodal asset metadata: format sniffing, perceptual-hash
   * near-dups, chunk dedup and frame sampling.
   */
-object MultimodalQueries {
+object MultimodalQueries extends QueryFamily {
 
   // frame plan: 2 fps cadence on the 8 ms/byte stub clock
   private val frameIntervalMs = 500L

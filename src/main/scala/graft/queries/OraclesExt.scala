@@ -1258,7 +1258,7 @@ object OraclesExt {
     * with the exact normalized dot.
     */
   /** The corpus-adaptive nlist rule as SQL (twin of
-    * SparkEntry.adaptiveNlist): nlist ∝ √n balances the n·nlist
+    * Common.adaptiveNlist): nlist ∝ √n balances the n·nlist
     * assignment term against the nprobe·n²/nlist candidate term —
     * both O(n^1.5), the standard IVF compromise. Double sqrt/ceil on
     * an exact integer count is engine-identical.

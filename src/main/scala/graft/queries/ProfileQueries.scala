@@ -10,7 +10,7 @@ import Common._
   * information_schema scans — the reference's own generated SQL
   * (aws-athena.sh:64-125, 175-196).
   */
-object ProfileQueries {
+object ProfileQueries extends QueryFamily {
 
   private val lineitem = "lineitem"
 
@@ -40,7 +40,7 @@ object ProfileQueries {
   private val wideKeyExprs = Seq("l_orderkey * 1000000 AS wide_key", "l_quantity")
   // q_profile_diff's base and target tables
   private val (diffBase, diffTarget) = (lineitem, "orders")
-  private[graft] val diffTables = Seq(diffBase, diffTarget)
+  private val diffTables = Seq(diffBase, diffTarget)
 
   private def wideProfile(name: String, table: String, numeric: Seq[String]): QueryDef =
     QueryDef(name, withTables(TableProfiler.profileTable(_, table)),
@@ -57,6 +57,9 @@ object ProfileQueries {
     sharedFrames.getOrElseUpdate(
       (s.sparkContext.applicationId, s"profile_long_$table", sfDir),
       TableProfiler.profileLong(Tables.table(s, table)))
+
+  override val setupFrames = diffTables.map(t => s"setup_profile_long_$t" ->
+    ((s: SparkSession, sfDir: String) => profileLongShared(s, sfDir, t)))
 
   val defs: Seq[QueryDef] = Seq(
     // §2.4/§3.2 — the flagship profiler, wide (pivoted) and long forms.

@@ -13,3 +13,14 @@ final case class QueryDef(
     name: String,
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String])
+
+/** One operator family: its queries plus the one-time state they
+  * share, which set-up builds before any query is timed.
+  */
+trait QueryFamily {
+  def defs: Seq[QueryDef]
+  /** Persisted indexes (idempotent, cached per sf directory). */
+  def indexes: Seq[(SparkSession, String) => String] = Nil
+  /** Shared frames, each under the name of its `setup_*` entry. */
+  def setupFrames: Seq[(String, (SparkSession, String) => DataFrame)] = Nil
+}

@@ -6,7 +6,7 @@ import Common._
 /** Lexical and hybrid retrieval over `documents`: BM25 (in-memory
   * and indexed), proximity, fusion, feedback expansion and reranks.
   */
-object SearchQueries {
+object SearchQueries extends QueryFamily {
 
   // MMR diversified rerank: greedy picks from the candidate pool
   private val mmrQueryIds = Seq(0L, 1L, 2L)
@@ -34,6 +34,8 @@ object SearchQueries {
     cachedIndexDir(s, "search", sfDir) { d =>
       graft.ext.Search.writeSearchIndex(s.table("documents"), d)
     }
+
+  override val indexes = Seq(searchIndexDir)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 — positional proximity search (NEAR operator): docs where

@@ -8,7 +8,7 @@ import Common._
   * `spark.sql` (the `query`/`file` commands, aws-athena.sh:140,155),
   * each its own oracle, plus a few relational DataFrame shapes.
   */
-object SqlQueries {
+object SqlQueries extends QueryFamily {
 
   /** TPC-H Q1-shaped pricing summary — ANSI SQL that parses identically
     * in Spark and DuckDB, exercising the `query`/`file` SQL-passthrough

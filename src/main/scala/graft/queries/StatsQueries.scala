@@ -8,7 +8,7 @@ import Common._
 /** Statistics: tests, drift, quantiles, outliers, sketches,
   * experiments, skew handling and data checks.
   */
-object StatsQueries {
+object StatsQueries extends QueryFamily {
 
   /** Poisson-bootstrap oracle — twin of Sampling.poissonBootstrap on
     * documents.n_chars; the CDF thresholds interpolate from the SAME

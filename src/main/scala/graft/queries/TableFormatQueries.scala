@@ -8,7 +8,7 @@ import Common._
 /** Table formats and storage: TableLog history, MERGE, compaction
   * and skipping, sharding, bucketing, and CSV/JSON sources and sinks.
   */
-object TableFormatQueries {
+object TableFormatQueries extends QueryFamily {
 
   private val shardCount = 8
   // snapshot-diff synthetic edit moduli (single-sourced with the oracle)
@@ -281,6 +281,10 @@ object TableFormatQueries {
       |    round(cast(sum(cast(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 5)
       |  FROM s2)
       |SELECT * FROM agg ORDER BY version""".stripMargin
+
+  override val indexes = Seq(bloomSkipDir, tableLogDemoDir, mergeSqlDir,
+    mergeSqlCompositeDir, mergeSqlBySourceDir, tableLogSkipDir,
+    tableLogEvolveDir, tableCompactionDir)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 — consistent-hash reshard audit: the 8→10 movement matrix

@@ -7,7 +7,7 @@ import Common._
 /** Text analysis over `documents`: corpus and per-doc statistics,
   * language ID, LM scores, keywords, vocabulary curves and BPE.
   */
-object TextQueries {
+object TextQueries extends QueryFamily {
 
   private val topTokensK = 50
   private val bpePairsK = 20

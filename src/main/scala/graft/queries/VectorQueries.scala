@@ -9,7 +9,7 @@ import Common._
   * SQ8 k-NN, recall curves, semantic near-dup pairs and k-means
   * reports.
   */
-object VectorQueries {
+object VectorQueries extends QueryFamily {
 
   // k-NN probes: each query vector asks for its knnK nearest; IVF
   // splits the corpus into ivfNlist cells and probes ivfNprobe of them
@@ -74,6 +74,9 @@ object VectorQueries {
       Similarity.kmeansAssign(s.table("embeddings"),
         nlist = kmeansNlist, refine = kmeansRefine)
     }
+
+  override val indexes = Seq(ivfIndexDir, ivfPqIndexDir)
+  override val setupFrames = Seq("setup_kmeans_assign" -> kmeansAssigned)
 
   val defs: Seq[QueryDef] = Seq(
     // §7.5 extensions — similarity search over `embeddings`.
