@@ -72,13 +72,13 @@ object Bench {
       }),
       "sf" -> json(sfDir)))
     // Also persist to files: a consumer that keeps a bounded stdout tail
-    // has truncated this line mid-object before. The in-repo copy
-    // (BENCH_full.json) is the complete record.
+    // has truncated this line mid-object before. The copy in the working
+    // directory (BENCH_full.json, in the checkout Bench runs from) is the
+    // complete record.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")), line)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_full.json"), line)
-    catch { case _: Throwable => () } // read-only checkout: stdout + /tmp still carry it
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_full.json"), line)
+    catch { case _: Throwable => () } // read-only directory: stdout + /tmp still carry it
     println(line)
     spark.stop()
   }

@@ -35,7 +35,9 @@ final class QueryExecutionException(msg: String) extends RuntimeException(msg)
   *    real cancellation (`cancelJobGroup` — the reference's CANCELLED
   *    is server-side, aws-athena.sh:54-56).
   *  - [[results]] returns the stringly [[ResultSet]] (VarCharValue
-  *    model, aws-athena.sh:44-48).
+  *    model, aws-athena.sh:44-48). A statement's root ORDER BY is
+  *    finished at that client edge, as a top-K collect
+  *    ([[ResultSet.fromDataFrame]]), not as a sampled range shuffle.
   *  - [[status]] is what the reference polls, sleeping 1 s per check
   *    (aws-athena.sh:58). In-process, [[awaitTerminal]] blocks until
   *    the terminal transition instead, the state machine (not the

@@ -3,6 +3,8 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import graft.exec.ResultSet
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end drive of the [[Cli]] dispatcher — the reference's
@@ -144,7 +146,6 @@ class CliSpec extends AnyFunSuite {
       spark, new PrintStream(outB, true, "UTF-8"), System.err, workDir)
     assert(rc == 0)
     // the separate per-side renders and diff the command used to run
-    import graft.exec.ResultSet
     import graft.profile.{TableDiff, TableProfiler}
     import graft.render.TsvRenderer
     def render(df: org.apache.spark.sql.DataFrame) =
@@ -205,6 +206,157 @@ class CliSpec extends AnyFunSuite {
     assert(rc == 0)
     assert(jobs > 0, "no job counted: the listener saw nothing")
     assert(jobs <= 20, s"$jobs Spark jobs for one vimdiff")
+  }
+
+  /** Spark jobs of one successful `Cli.run query`. */
+  private def queryJobs(sql: String): Int = {
+    graft.catalog.Tables.register(spark, TestSpark.sfDir)
+    val errB = new ByteArrayOutputStream()
+    var rc = -1
+    val jobs = jobsOf {
+      rc = Cli.run(Array("query", sql), spark, new PrintStream(new ByteArrayOutputStream()),
+        new PrintStream(errB, true, "UTF-8"), Files.createTempDirectory("graft-cli-jobs"))
+    }
+    assert(rc == 0, errB.toString(StandardCharsets.UTF_8))
+    jobs
+  }
+
+  private def assertOrderByAddsNoJob(unsorted: String, orderBy: String): Unit = {
+    val (sorted, plain) = (queryJobs(unsorted + " " + orderBy), queryJobs(unsorted))
+    assert(plain > 0, "no job counted: the listener saw nothing")
+    assert(sorted == plain, s"$sorted jobs with `$orderBy`, $plain without")
+  }
+
+  test("a root ORDER BY over a GROUP BY runs the jobs of the same statement without it") {
+    assertOrderByAddsNoJob(
+      "select o_orderpriority, count(*) as n, sum(o_totalprice) as total " +
+        "from orders group by o_orderpriority",
+      "order by total desc, o_orderpriority")
+  }
+
+  test("a root ORDER BY over a key slice runs the jobs of the same statement without it") {
+    assertOrderByAddsNoJob(
+      "select o_orderkey, o_custkey, o_totalprice, o_orderdate from orders " +
+        "where o_orderkey >= 100 and o_orderkey < 4000",
+      "order by o_orderkey")
+  }
+
+  /** What `ResultSet.fromDataFrame` returned before a root ORDER BY was
+    * finished at the client edge: the stringified frame's plain collect,
+    * whose ORDER BY is a sampled range shuffle and a sort stage. */
+  private def rangeSorted(df: DataFrame): ResultSet = {
+    val rows = ResultSet.stringify(df).collect().toSeq
+      .map(r => r.toSeq.map(v => if (v == null) "" else v.toString))
+    ResultSet(df.columns.toSeq, rows)
+  }
+
+  /** A parquet-backed view over three files (three scan partitions, so
+    * the top-K merges across tasks) of NaN, ±0.0, ±Infinity, NULLs,
+    * decimals, dates, timestamps and non-ASCII strings; `id` is unique. */
+  private lazy val trickyView: String = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("d", DoubleType),
+      StructField("dec", DecimalType(10, 2)), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("s", StringType),
+      StructField("g", StringType)))
+    def row(id: Int, d: java.lang.Double, dec: String, dt: String, ts: String,
+        s: String, g: String) = Row(id, d,
+      Option(dec).map(new java.math.BigDecimal(_)).orNull,
+      Option(dt).map(java.sql.Date.valueOf).orNull,
+      Option(ts).map(java.sql.Timestamp.valueOf).orNull, s, g)
+    val rows = Seq(
+      row(1, Double.NaN, "1.50", "2024-01-03", "2024-01-03 10:00:00", "zebra", "a"),
+      row(2, -0.0, "-2.25", "1999-12-31", "1999-12-31 23:59:59.999999", "Äpfel", "b"),
+      row(3, 0.0, null, null, null, "apple", "a"),
+      row(4, Double.PositiveInfinity, "100.00", "2024-01-03", "2024-01-03 10:00:00", "Apple", "c"),
+      row(5, Double.NegativeInfinity, "1.50", "1970-01-01", "1970-01-01 00:00:00", "日本", "b"),
+      row(6, null, "0.00", "2000-02-29", "2000-02-29 12:00:00", null, "a"),
+      row(7, 2.5, "-2.25", "2024-01-03", "2024-01-03 10:00:00.5", "éclair", "c"),
+      row(8, Double.NaN, "99.99", "1900-01-01", "1900-01-01 00:00:00", "eclair", "b"),
+      row(9, -1e-300, null, "2024-12-31", null, "", "a"),
+      row(10, 1e300, "0.01", null, "2024-06-01 00:00:00", "Zebra", null),
+      row(11, 0.0, "1.50", "2024-01-03", "2024-01-03 10:00:00", "ß", "c"),
+      row(12, -0.0, "100.00", "1999-12-31", null, "APPLE", "a"),
+      row(13, null, null, "2024-01-03", "2024-01-03 10:00:00", "日本", null))
+    val dir = Files.createTempDirectory("graft-topk").resolve("tricky").toString
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .repartition(3).write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("topk_tricky")
+    "topk_tricky"
+  }
+
+  test("a root ORDER BY renders what the range sort rendered, over a total order") {
+    val t = trickyView
+    assert(spark.table(t).queryExecution.toRdd.getNumPartitions >= 2)
+    val directions = Seq("ASC NULLS FIRST", "ASC NULLS LAST", "DESC NULLS FIRST", "DESC NULLS LAST")
+    val statements =
+      (for (k <- Seq("d", "dec", "dt", "ts", "s"); dir <- directions)
+        yield s"SELECT id, $k FROM $t ORDER BY $k $dir, id") ++ Seq(
+        s"SELECT id, s FROM $t ORDER BY s COLLATE UTF8_LCASE, id DESC",
+        s"SELECT s, id, d FROM $t ORDER BY 1 DESC, 2",
+        s"SELECT id, d, dec FROM $t ORDER BY dec * 2 - id DESC, id",
+        s"SELECT s, g FROM $t ORDER BY ts DESC, id",
+        s"SELECT DISTINCT g, dec FROM $t ORDER BY g NULLS LAST, dec DESC",
+        s"SELECT id, s FROM $t UNION ALL SELECT id + 100, g FROM $t ORDER BY s, id")
+    for (sql <- statements) {
+      val df = spark.sql(sql)
+      assert(ResultSet.topK(df).isDefined, s"not finished as a top-K: $sql")
+      val expected = rangeSorted(df)
+      assert(expected.rows.size > 1, sql)
+      assert(ResultSet.fromDataFrame(df) == expected, sql)
+    }
+  }
+
+  test("LIMIT, OFFSET, inner, VALUES, one-row and unsorted statements keep the plain collect") {
+    graft.catalog.Tables.register(spark, TestSpark.sfDir)
+    val statements = Seq(
+      "select o_orderkey, o_totalprice from orders order by o_totalprice desc, o_orderkey limit 5",
+      "select o_orderkey from orders order by o_orderkey offset 1490",
+      "with c as (select o_orderkey, o_custkey from orders order by o_orderkey) " +
+        "select * from c where o_custkey < 40",
+      "select * from (select o_orderkey, o_custkey from orders order by o_custkey, o_orderkey) " +
+        "where o_custkey < 40",
+      "select * from values (3, 'c'), (1, 'a'), (2, 'b') as v(k, s) order by k",
+      "select count(*) as n from orders order by n",
+      "select o_orderkey from orders sort by o_orderkey",
+      "select o_orderkey, o_orderstatus from orders where o_orderkey < 200")
+    for (sql <- statements) {
+      val df = spark.sql(sql)
+      assert(ResultSet.topK(df).isEmpty, s"finished as a top-K: $sql")
+      var expected, actual: ResultSet = null
+      val plain = jobsOf { expected = rangeSorted(df) }
+      val edge = jobsOf { actual = ResultSet.fromDataFrame(df) }
+      assert(edge == plain, s"$edge jobs against $plain: $sql")
+      assert(actual == expected, sql)
+    }
+  }
+
+  test("a warm repeat of a root-sorted query compiles nothing") {
+    val sql = "select o_orderpriority, count(*) as n, sum(o_totalprice) as total " +
+      "from orders group by o_orderpriority order by total desc, o_orderpriority"
+    val (first, _, _) = capture("query", sql)
+    assert(first == 0)
+    val ((rc, _, err), compiles) = graft.tools.Harness.compiled(capture("query", sql))
+    assert(rc == 0, err)
+    assert(compiles == 0, s"$compiles classes compiled on a repeat")
+  }
+
+  test("a warm repeat of a vimdiff compiles nothing") {
+    graft.catalog.Tables.register(spark, TestSpark.sfDir)
+    spark.sql(
+      """SELECT n_nationkey, n_name,
+        |  CASE WHEN n_nationkey = 3 THEN n_regionkey + 1 ELSE n_regionkey END AS n_regionkey
+        |FROM nation""".stripMargin).createOrReplaceTempView("nation_perturbed")
+    def vimdiff(): Int = Cli.run(
+      Array("vimdiff", "spark_catalog.default.nation", "spark_catalog.default.nation_perturbed"),
+      spark, new PrintStream(new ByteArrayOutputStream()), System.err,
+      Files.createTempDirectory("graft-cli-vimdiff"))
+    assert(vimdiff() == 0)
+    val (rc, compiles) = graft.tools.Harness.compiled(vimdiff())
+    assert(rc == 0)
+    assert(compiles == 0, s"$compiles classes compiled on a repeat")
   }
 
   test("query with a dotted output label renders (the approx_percentile label)") {
