@@ -150,11 +150,11 @@ object Share {
     * 10.4–12.0 s vs 7.1–8.8 s).
     */
   def checkpointWide(df: DataFrame): DataFrame = {
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val ck = df.localCheckpoint()
-    if (ck.queryExecution.toRdd.getNumPartitions >= parallelism) ck
+    if (!graft.ext.Dedup.underParallel(ck)) ck
     else {
-      val re = ck.repartition(parallelism).localCheckpoint()
+      val re = ck.repartition(ck.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint()
       ck.queryExecution.analyzed match {
         case l: LogicalRDD => l.rdd.unpersist(false)
         case _ => ()

@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * name→directory mapping (`tables`), exactly the [[MergeSql.execute]]
   * posture. Each referenced (name, version) pair is registered as a
   * temp view over [[graft.ext.TableLog.read]]'s snapshot — commit-log
-  * metadata only, no data scan at registration — the clause is
+  * metadata only, no Spark job at registration — the clause is
   * rewritten to that view name, and the statement then runs through
   * [[TrinoDialect.translate]] like any other query, so time travel
   * composes with the whole dialect surface (joins against ordinary

@@ -105,18 +105,23 @@ object Dedup {
     * mins over longs) — unlike float `avg`, which is why the profiler
     * must NOT do this (TableProfiler scaladoc).
     */
-  private[ext] def spread(df: DataFrame, byCol: String): DataFrame = {
-    // conditional: a corpus-scale table already scans as thousands of
-    // tasks — repartitioning it would add a full-table exchange for
-    // nothing. Fire only when the scan is under-parallel (the few-
-    // row-group local case this guard exists for).
-    // queryExecution.toRdd, not df.rdd: both plan the physical query
-    // eagerly, but toRdd is the memoized internal-row RDD — df.rdd
-    // additionally builds a per-call deserializer stage on top of it.
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions >= parallelism) df
-    else df.repartition(parallelism, col(byCol))
-  }
+  private[ext] def spread(df: DataFrame, byCol: String): DataFrame =
+    if (!underParallel(df)) df
+    else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      col(byCol))
+
+  /** Does `df` scan as fewer partitions than the session has cores?
+    * The one rule behind every conditional respread: a corpus-scale
+    * table already scans as thousands of tasks, and repartitioning it
+    * would add a full-table exchange for nothing, so a spread fires
+    * only on an under-parallel scan (the few-row-group local case).
+    * queryExecution.toRdd, not df.rdd: both plan the physical query
+    * eagerly, but toRdd is the memoized internal-row RDD — df.rdd
+    * additionally builds a per-call deserializer stage on top of it.
+    */
+  private[graft] def underParallel(df: DataFrame): Boolean =
+    df.queryExecution.toRdd.getNumPartitions <
+      df.sparkSession.sparkContext.defaultParallelism
 
   /** Stages tokenization as a named column, then shingles from the
     * attribute. Two projections on purpose — CollapseProject keeps

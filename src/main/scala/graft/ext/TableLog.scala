@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Snapshot-isolated TABLE FORMAT over plain parquet — the
   * table-maintenance layer the loose-file operators compose into:
@@ -23,16 +23,22 @@ import org.apache.spark.sql.functions._
   *
   * Commit record (written by [[render]], read by [[parse]]):
   * `{"version":N,"op":"...","add":[...],"remove":[...],
-  * "rows_added":N,"stats":{file:{rows,cols:{col:{min,max,nulls}}}}}`.
+  * "rows_added":N,"schema":{...},
+  * "stats":{file:{rows,cols:{col:{min,max,nulls}}}}}`.
+  * Both `schema` and `stats` are harvested from the parquet FOOTERS
+  * at write time ([[TableStats.fromFooter]] — metadata-only, no data
+  * re-scan). `schema` is the Spark row schema (`StructType` JSON) of
+  * the files the commit added; a read takes its schema from the log
+  * and never infers it from the data files, so building a read starts
+  * no Spark job. A record without `schema` (written by older code)
+  * resolves it from the footer of its first live file on the driver.
   * The `stats` map carries per-file, per-column min/max/null-count
-  * zone maps harvested from the parquet FOOTERS at write time
-  * ([[TableStats.fromFooter]] — metadata-only, no data re-scan), so
-  * a selective [[readWhere]] prunes the live file list from the log
-  * alone; records without `stats` (pre-r15 tables) stay readable and
-  * simply never prune. The live file set at version v is the fold of
-  * add/remove over commits 0..v; a data file removed by a later
-  * commit stays on disk (until a caller-invoked [[vacuum]]), which is
-  * exactly what makes old versions readable.
+  * zone maps, so a selective [[readWhere]] prunes the live file list
+  * from the log alone; records without `stats` (pre-r15 tables) stay
+  * readable and simply never prune. The live file set at version v is
+  * the fold of add/remove over commits 0..v; a data file removed by a
+  * later commit stays on disk (until a caller-invoked [[vacuum]]),
+  * which is exactly what makes old versions readable.
   *
   * Snapshot isolation, single-writer: data files land under `data/`
   * BEFORE their commit record exists, and the commit record is
@@ -46,8 +52,9 @@ import org.apache.spark.sql.functions._
   * corruption — exercised against a conditional-put-only mock FS in
   * TableLogSpec).
   *
-  * Scale shape: every operation is one Spark read/write of the live
-  * file set; the log itself is commit-count-sized driver metadata
+  * Scale shape: every operation reads the log once and is then one
+  * Spark read/write of the live file set; the log itself is
+  * commit-count-sized driver metadata
   * (the same class as shard offsets / centroid lists). ALL filesystem
   * metadata — log listing/read, commit publish, data-file placement,
   * vacuum deletes — goes through the Hadoop `FileSystem` API resolved
@@ -67,17 +74,17 @@ import org.apache.spark.sql.functions._
   */
 object TableLog {
 
-  /** `columns` = the exact column names of the files this commit
-    * added (empty for pre-r15 records and file-less commits like
-    * vacuum) — the schema-evolution bookkeeping: the read path
-    * compares live commits' column lists from LOG METADATA alone and
-    * only pays parquet's read-every-footer `mergeSchema` when they
-    * actually diverge.
+  /** `schema` = the Spark row schema of the files this commit added
+    * (None for file-less commits like vacuum, and for records written
+    * by older code, whose schema the read path takes from a footer).
     */
   final case class Commit(version: Int, op: String, add: Seq[String],
       remove: Seq[String], rowsAdded: Long,
       stats: Map[String, TableStats.FileStats] = Map.empty,
-      columns: Seq[String] = Seq.empty)
+      schema: Option[StructType] = None) {
+    /** The recorded schema's column names; empty when unrecorded. */
+    def columns: Seq[String] = schema.toSeq.flatMap(_.fieldNames)
+  }
 
   private def logDir(dir: String) = new Path(dir, "_log")
   private def dataDir(dir: String) = new Path(dir, "data")
@@ -108,9 +115,8 @@ object TableLog {
     val add = o.putArray("add"); c.add.foreach(add.add)
     val rem = o.putArray("remove"); c.remove.foreach(rem.add)
     o.put("rows_added", c.rowsAdded)
-    if (c.columns.nonEmpty) {
-      val cols = o.putArray("columns"); c.columns.foreach(cols.add)
-    }
+    c.schema.foreach(sc =>
+      o.set[com.fasterxml.jackson.databind.JsonNode]("schema", m.readTree(sc.json)))
     if (c.stats.nonEmpty) {
       val st = o.putObject("stats")
       c.add.foreach { f => // add-order: files the commit created
@@ -176,7 +182,8 @@ object TableLog {
       }
     Commit(root.get("version").asInt(), root.get("op").asText(),
       strSeq("add"), strSeq("remove"), root.get("rows_added").asLong(),
-      stats, if (root.has("columns")) strSeq("columns") else Seq.empty)
+      stats, Option(root.get("schema"))
+        .map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]))
   }
 
   private def readString(fs: FileSystem, p: Path): String = {
@@ -197,18 +204,25 @@ object TableLog {
     * the chain is real corruption (writes are sequential) and errors
     * loudly.
     */
-  def commits(dir: String): Seq[Commit] = {
+  def commits(dir: String): Seq[Commit] = timedCommits(dir).map(_._1)
+
+  /** [[commits]], each with its record's modification time (= publish
+    * time: records are immutable), from one listing of the log.
+    */
+  private def timedCommits(dir: String): Seq[(Commit, Long)] = {
     val log = logDir(dir)
     val fs = fsOf(log)
     if (!fs.exists(log)) Seq.empty
     else {
       val files = fs.listStatus(log).toSeq
-        .map(_.getPath)
-        .filter(p => p.getName.startsWith("v") && p.getName.endsWith(".json"))
-        .sortBy(_.getName)
-      val parsed = files.map { p =>
-        try Right(parse(readString(fs, p)))
-        catch { case scala.util.control.NonFatal(e) => Left(p -> e) }
+        .filter { st =>
+          val n = st.getPath.getName
+          n.startsWith("v") && n.endsWith(".json")
+        }
+        .sortBy(_.getPath.getName)
+      val parsed = files.map { st =>
+        try Right((parse(readString(fs, st.getPath)), st.getModificationTime))
+        catch { case scala.util.control.NonFatal(e) => Left(st.getPath -> e) }
       }
       parsed.zipWithIndex.flatMap {
         case (Right(c), _) => Some(c)
@@ -219,9 +233,10 @@ object TableLog {
     }
   }
 
-  def currentVersion(dir: String): Int =
-    commits(dir).lastOption.map(_.version)
-      .getOrElse(sys.error(s"no table at $dir"))
+  def currentVersion(dir: String): Int = nextVersion(dir, commits(dir)) - 1
+
+  private def nextVersion(dir: String, cs: Seq[Commit]): Int =
+    cs.lastOption.map(_.version + 1).getOrElse(sys.error(s"no table at $dir"))
 
   /** The version visible at wall-clock instant `tsMillis`: the
     * LATEST committed version whose record existed then, read from
@@ -231,99 +246,82 @@ object TableLog {
     * predates the first commit.
     */
   def versionAt(dir: String, tsMillis: Long): Int = {
-    val log = logDir(dir)
-    val fs = fsOf(log)
-    val committed = commits(dir).map(_.version).toSet
-    require(committed.nonEmpty, s"no table at $dir")
-    val at = fs.listStatus(log).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("v") && n.endsWith(".json")
-      }
-      .map(st => (st.getPath.getName.stripPrefix("v")
-        .stripSuffix(".json").toInt, st.getModificationTime))
-      .filter { case (v, mt) => committed(v) && mt <= tsMillis }
-      .map(_._1).sorted
+    val cs = timedCommits(dir)
+    require(cs.nonEmpty, s"no table at $dir")
+    val at = cs.filter(_._2 <= tsMillis)
     require(at.nonEmpty,
       s"no version existed at timestamp $tsMillis (table $dir)")
-    at.last
+    at.last._1.version
   }
 
-  /** The live data files at `asOf` (default: latest), each with the
-    * per-file stats and column list its creating commit recorded
-    * (None for files from pre-r15 commits — those are never pruned
-    * and their schema is treated as unknown-but-uniform).
+  /** The live data files at `asOf` (default: latest) over the already
+    * read log `cs`, in add order, each with the commit that added it.
     */
-  private def liveEntries(dir: String, asOf: Option[Int])
-      : Seq[(String, Option[TableStats.FileStats], Option[Seq[String]])] = {
-    val cs = commits(dir)
+  private def liveAt(dir: String, cs: Seq[Commit], asOf: Option[Int])
+      : Seq[(String, Commit)] = {
     require(cs.nonEmpty, s"no table at $dir")
-    val upTo = asOf.map(v => cs.filter(_.version <= v)).getOrElse(cs)
     require(asOf.forall(v => cs.exists(_.version == v)),
       s"version ${asOf.get} does not exist (have 0..${cs.last.version})")
-    val live = scala.collection.mutable.LinkedHashMap[String,
-      (Option[TableStats.FileStats], Option[Seq[String]])]()
-    upTo.foreach { c =>
-      val cols = if (c.columns.nonEmpty) Some(c.columns) else None
-      c.add.foreach(f => live(f) = (c.stats.get(f), cols))
+    val live = scala.collection.mutable.LinkedHashMap[String, Commit]()
+    cs.filter(c => asOf.forall(c.version <= _)).foreach { c =>
+      c.add.foreach(live(_) = c)
       c.remove.foreach(live.remove)
     }
-    live.toSeq.map { case (n, (st, cols)) => (n, st, cols) }
+    live.toSeq
   }
 
-  /** The live data files at `asOf` (default: latest). */
-  private def liveFiles(dir: String, asOf: Option[Int]): Seq[String] =
-    liveEntries(dir, asOf).map(_._1)
-
-  /** Do the live files at `asOf` carry MORE than one distinct column
-    * list? Decided from log metadata alone; unknown (pre-r15) lists
-    * count as "whatever the known list is" — pre-r15 tables never
-    * evolved, so plain single-footer schema resolution stays correct
-    * and cheap for them.
+  /** One resolved version: its live files, each with the stats its
+    * commit recorded (None for pre-r15 files, which never prune), and
+    * the table schema at that version.
     */
-  private def needsMergeSchema(
-      entries: Seq[(String, Option[TableStats.FileStats], Option[Seq[String]])])
-      : Boolean = {
-    val known = entries.flatMap(_._3).map(_.map(_.toLowerCase).toSet).distinct
-    val hasUnknown = entries.exists(_._3.isEmpty)
-    // >1 known lists = evolved; 1 known + unknowns = a pre-r15 table
-    // continued by post-r15 appends, where the old files' schema is
-    // unrecorded — pay the merge to stay correct. All-unknown =
-    // a pure pre-r15 table, which never evolved: plain read.
-    known.size > 1 || (known.size == 1 && hasUnknown)
-  }
+  private final case class Snapshot(
+      files: Seq[(String, Option[TableStats.FileStats])], schema: StructType)
 
-  /** One file per distinct recorded column list (plus the first
-    * unrecorded-schema file, if any) — enough footers to resolve the
-    * table's full merged schema without touching every file.
+  /** The snapshot at `asOf` over the already read log `cs`. Its schema
+    * is the union, in first-appearance order, of the live commits'
+    * schemas; a column seen in several commits (matched
+    * case-insensitively, as Spark resolves names) must carry one type
+    * in all of them, else the read fails here, naming both types.
+    * Types compare by `catalogString`, which leaves out nullability
+    * (every read is nullable anyway). Nested structs are not widened.
     */
-  private def schemaRepresentatives(
-      entries: Seq[(String, Option[TableStats.FileStats], Option[Seq[String]])])
-      : Seq[String] = {
-    val picks = scala.collection.mutable.LinkedHashMap[Set[String], String]()
-    var unknown: Option[String] = None
-    entries.foreach { case (n, _, cols) =>
-      cols match {
-        case Some(l) =>
-          val k = l.map(_.toLowerCase).toSet
-          if (!picks.contains(k)) picks(k) = n
-        case None => if (unknown.isEmpty) unknown = Some(n)
+  private def snapshot(dir: String, cs: Seq[Commit], asOf: Option[Int])
+      : Snapshot = {
+    val live = liveAt(dir, cs, asOf)
+    val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
+    live.distinctBy(_._2.version).foreach { case (first, c) =>
+      val sc = c.schema.getOrElse( // a record from older code
+        TableStats.fromFooter(new Path(dataDir(dir), first),
+          fsOf(dataDir(dir)).getConf)._2)
+      sc.foreach { f =>
+        val key = f.name.toLowerCase
+        fields.get(key) match {
+          case None => fields(key) = f
+          case Some(g) =>
+            val (was, is) = (g.dataType.catalogString, f.dataType.catalogString)
+            require(was == is, s"column ${g.name} is $was in an earlier " +
+              s"live commit but $is in v${c.version} of $dir — a type " +
+              "change cannot be read as one table")
+        }
       }
     }
-    picks.values.toSeq ++ unknown.toSeq
+    Snapshot(live.map { case (n, c) => n -> c.stats.get(n) },
+      StructType(fields.values.toSeq))
   }
 
-  private def readFiles(spark: SparkSession, dir: String,
-      names: Seq[String], merge: Boolean): DataFrame = {
-    val r = if (merge) spark.read.option("mergeSchema", "true")
-    else spark.read
-    r.parquet(names.map(n => new Path(dataDir(dir), n).toString): _*)
-  }
+  /** The snapshot's files read with its schema — no inference, so no
+    * Spark job. With no file left (a [[readWhere]] that pruned them
+    * all), the same path-less call is an empty frame of that schema.
+    */
+  private def load(spark: SparkSession, dir: String, s: Snapshot): DataFrame =
+    spark.read.schema(s.schema)
+      .parquet(s.files.map(f => new Path(dataDir(dir), f._1).toString): _*)
 
   /** Write `df` as immutable files named
     * `v{version}-{i}-{writerToken}.parquet` under data/, via a
     * writer-unique staging dir (files are complete before any commit
-    * references them). Returns (names, row count).
+    * references them), and return the commit record that adds them
+    * and removes `remove`.
     *
     * The random writer token makes every name globally unique — the
     * Delta/Iceberg GUID-part-file rule: two writers racing the SAME
@@ -333,8 +331,8 @@ object TableLog {
     * error, not corruption" would be false on stores whose rename
     * replaces an existing destination.
     */
-  private def writeData(df: DataFrame, dir: String, version: Int)
-      : (Seq[String], Long, Map[String, TableStats.FileStats]) = {
+  private def writeData(df: DataFrame, dir: String, version: Int,
+      op: String, remove: Seq[String]): Commit = {
     val tok = java.util.UUID.randomUUID.toString.take(8)
     val staging = new Path(dir, f"_staging_v$version%08d-$tok")
     val fs = fsOf(staging)
@@ -348,15 +346,18 @@ object TableLog {
     val placed = parts.zipWithIndex.map { case (p, i) =>
       val name = f"v$version%08d-$i%05d-$tok.parquet"
       require(fs.rename(p, new Path(data, name)), s"could not place $name")
-      // footer-only stats read on the file just written: min/max/null
-      // counts for the commit record, row count for rows_added — no
-      // data pages touched, so commit cost stays O(files) not O(rows)
-      // (this also replaced the full re-count scan writeData used to
-      // pay per commit)
+      // footer-only read on the file just written: min/max/null counts
+      // and the row schema for the commit record, row count for
+      // rows_added — no data pages touched, so commit cost stays
+      // O(files) not O(rows) (this also replaced the full re-count
+      // scan writeData used to pay per commit)
       name -> TableStats.fromFooter(new Path(data, name), conf)
     }
     fs.delete(staging, true)
-    (placed.map(_._1), placed.map(_._2.rows).sum, placed.toMap)
+    Commit(version, op, placed.map(_._1), remove,
+      placed.map(_._2._1.rows).sum,
+      placed.map { case (n, (st, _)) => n -> st }.toMap,
+      placed.headOption.map(_._2._2)) // one job: every file has one schema
   }
 
   /** Publish a commit record via CREATE-IF-ABSENT on the final name —
@@ -393,21 +394,15 @@ object TableLog {
   /** Create the table at `dir` (must not exist) as version 0. */
   def init(df: DataFrame, dir: String): Int = {
     require(commits(dir).isEmpty, s"table already exists at $dir")
-    val (names, rows, stats) = writeData(df, dir, 0)
-    publish(dir, Commit(0, "init", names, Seq.empty, rows, stats,
-      df.columns.toSeq))
+    publish(dir, writeData(df, dir, 0, "init", Seq.empty))
   }
 
-  /** The table's logical column set: the union, in first-appearance
-    * order, of the live commits' recorded column lists — log metadata
-    * only. Empty for a table written entirely by pre-r15 code.
+  /** The table's logical column set at `asOf`: the snapshot schema's
+    * names (the union, in first-appearance order, of the live
+    * commits' schemas).
     */
-  def tableColumns(dir: String, asOf: Option[Int] = None): Seq[String] = {
-    val lists = liveEntries(dir, asOf).flatMap(_._3)
-    val seen = scala.collection.mutable.LinkedHashSet[String]()
-    lists.foreach(seen ++= _)
-    seen.toSeq
-  }
+  def tableColumns(dir: String, asOf: Option[Int] = None): Seq[String] =
+    snapshot(dir, commits(dir), asOf).schema.fieldNames.toSeq
 
   /** Append-only commit: new files only, nothing removed.
     *
@@ -416,16 +411,16 @@ object TableLog {
     * producer fails loudly instead of silently forking the schema.
     * With `mergeSchema = true`, added columns widen the table (old
     * files read them as NULL) and omitted columns are allowed (the
-    * new files read them as NULL); the read path notices the
-    * divergence from LOG METADATA and only then pays parquet's
-    * merge-all-footers schema resolution. Same-name type conflicts
-    * surface at read time from parquet's merge, not silently.
+    * new files read them as NULL); the read schema is the union the
+    * log records. A same-name column whose type changes makes the
+    * table fail at its next read, naming both types.
     */
   def append(df: DataFrame, dir: String,
       mergeSchema: Boolean = false): Int = {
-    val v = currentVersion(dir) + 1
-    val known = tableColumns(dir, None)
-    if (!mergeSchema && known.nonEmpty) {
+    val cs = commits(dir)
+    val v = nextVersion(dir, cs)
+    if (!mergeSchema) {
+      val known = snapshot(dir, cs, None).schema.fieldNames
       val have = df.columns.map(_.toLowerCase).toSet
       val want = known.map(_.toLowerCase).toSet
       require(have == want,
@@ -433,9 +428,7 @@ object TableLog {
           s"match table columns ${known.mkString("(", ",", ")")} — pass " +
           "mergeSchema = true to evolve the schema explicitly")
     }
-    val (names, rows, stats) = writeData(df, dir, v)
-    publish(dir, Commit(v, "append", names, Seq.empty, rows, stats,
-      df.columns.toSeq))
+    publish(dir, writeData(df, dir, v, "append", Seq.empty))
   }
 
   /** Copy-on-write MERGE: applies `changes` (payload ∪ {op}) with
@@ -444,49 +437,49 @@ object TableLog {
     * remain for time travel).
     */
   def merge(changes: DataFrame, dir: String, keyCol: String): Int =
-    commitSnapshot(Merge.applyChangeSet(read(changes.sparkSession, dir),
-      changes, keyCol), dir, "merge")
+    publish(dir, rewrite(changes.sparkSession, dir, "merge")(
+      Merge.applyChangeSet(_, changes, keyCol)))
 
   /** Copy-on-write commit of a caller-computed NEXT snapshot — the
-    * landing point [[merge]] and the MERGE-SQL compiler
-    * ([[graft.exec.MergeSql]]) share: the new version's live set is
-    * entirely the new files; the previous live set is recorded as
-    * removed (old versions stay readable).
+    * landing point the MERGE-SQL compiler ([[graft.exec.MergeSql]])
+    * uses: the new version's live set is entirely the new files; the
+    * previous live set is recorded as removed (old versions stay
+    * readable).
     */
   def commitSnapshot(next: DataFrame, dir: String, op: String): Int = {
-    val v = currentVersion(dir) + 1
-    val (names, rows, stats) = writeData(next, dir, v)
-    publish(dir, Commit(v, op, names, liveFiles(dir, None), rows, stats,
-      next.columns.toSeq))
+    val cs = commits(dir)
+    publish(dir, writeData(next, dir, nextVersion(dir, cs), op,
+      liveAt(dir, cs, None).map(_._1)))
   }
 
   /** History-preserving compaction: rewrites the live set into
     * ~`targetFiles` files; rows are untouched (rows_added = 0 marks
     * the no-op on content), old files stay readable at old versions.
+    * On an evolved table the rewrite lands one uniform schema.
     */
-  def compact(spark: SparkSession, dir: String, targetFiles: Int = 1): Int = {
-    val v = currentVersion(dir) + 1
-    val old = liveFiles(dir, None)
-    // on an evolved table the rewrite reads merged and lands ONE
-    // uniform column list — compaction doubles as schema
-    // normalization, after which reads are single-footer cheap again
-    val next = read(spark, dir).repartition(targetFiles)
-    val (names, _, stats) = writeData(next, dir, v)
-    publish(dir, Commit(v, "compact", names, old, 0L, stats,
-      next.columns.toSeq))
+  def compact(spark: SparkSession, dir: String, targetFiles: Int = 1): Int =
+    publish(dir, rewrite(spark, dir, "compact")(_.repartition(targetFiles))
+      .copy(rowsAdded = 0L))
+
+  /** The commit that replaces the latest snapshot with `f` of it: the
+    * read, the removed live set and the new version all come from one
+    * read of the log.
+    */
+  private def rewrite(spark: SparkSession, dir: String, op: String)(
+      f: DataFrame => DataFrame): Commit = {
+    val cs = commits(dir)
+    val snap = snapshot(dir, cs, None)
+    writeData(f(load(spark, dir, snap)), dir, nextVersion(dir, cs), op,
+      snap.files.map(_._1))
   }
 
-  /** Time-travel read: the table as of `asOf` (default latest).
-    * Schema-evolved tables (live files with diverging recorded
-    * column lists) read with parquet's mergeSchema — absent columns
-    * surface as NULL; uniform tables keep the cheap single-footer
-    * resolution, decided from log metadata alone.
+  /** Time-travel read: the table as of `asOf` (default latest), with
+    * the schema the log records for that version (absent columns
+    * surface as NULL). Building it starts no Spark job.
     */
   def read(spark: SparkSession, dir: String,
-      asOf: Option[Int] = None): DataFrame = {
-    val entries = liveEntries(dir, asOf)
-    readFiles(spark, dir, entries.map(_._1), needsMergeSchema(entries))
-  }
+      asOf: Option[Int] = None): DataFrame =
+    load(spark, dir, snapshot(dir, commits(dir), asOf))
 
   /** DATA-SKIPPING read (VERDICT r14 task 1): semantically identical
     * to `read(...).where(filter)`, but the live FILE LIST is pruned
@@ -504,49 +497,20 @@ object TableLog {
     * conservatively unprunable (kept), so results are ALWAYS
     * byte-identical to the unpruned read — [[TableStats.mayMatch]]
     * documents the envelope. The residual predicate is still applied
-    * (and pushed into the parquet scan) on the surviving files.
+    * (and pushed into the parquet scan) on the surviving files. On an
+    * evolved table a column younger than a file has no stats in that
+    * file, so mayMatch keeps it.
     *
-    * If every file is pruned, returns an empty frame with the
-    * table's schema (one footer read, no data scan).
+    * The result always carries the version's full schema, even when
+    * pruning drops every file (an empty frame, no file opened).
     */
   def readWhere(spark: SparkSession, dir: String, filter: String,
       asOf: Option[Int] = None): DataFrame = {
     val pred = spark.sessionState.sqlParser.parseExpression(filter)
-    val live = liveEntries(dir, asOf)
-    val merge = needsMergeSchema(live)
-    // on an evolved table, a column younger than a file has NO stats
-    // in that file and mayMatch keeps it — pruning and evolution
-    // compose without special cases. The result schema must be the
-    // FULL table schema even when pruning drops every file carrying
-    // some column, so the evolved path aligns against the schema of
-    // one representative file per distinct column list.
-    def fullSchema = readFiles(spark, dir, schemaRepresentatives(live),
-      merge = true).schema
-    val kept = live.collect {
-      case (n, st, _) if st.forall(TableStats.mayMatch(pred, _)) => n
-    }
-    val col = org.apache.spark.sql.functions.expr(filter)
-    if (kept.nonEmpty) {
-      val base = readFiles(spark, dir, kept, merge)
-      val aligned =
-        if (!merge) base
-        else {
-          val have = base.columns.map(_.toLowerCase).toSet
-          base.select(fullSchema.map(f =>
-            if (have(f.name.toLowerCase)) org.apache.spark.sql.functions.col(f.name)
-            else org.apache.spark.sql.functions.lit(null).cast(f.dataType)
-              .as(f.name)): _*)
-        }
-      aligned.where(col)
-    } else live.headOption match {
-      case Some((n, _, _)) => // schema from footers only, zero data scan
-        val schema =
-          if (merge) fullSchema
-          else spark.read.parquet(new Path(dataDir(dir), n).toString).schema
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case None => read(spark, dir, asOf).where(col) // zero-file table
-    }
+    val snap = snapshot(dir, commits(dir), asOf)
+    load(spark, dir, snap.copy(files = snap.files.filter(
+      _._2.forall(TableStats.mayMatch(pred, _)))))
+      .where(org.apache.spark.sql.functions.expr(filter))
   }
 
   /** Retention enforcement: physically delete data files that are
@@ -562,7 +526,7 @@ object TableLog {
     require(cs.exists(_.version == retainFrom),
       s"retainFrom $retainFrom does not exist")
     val keep = cs.filter(_.version >= retainFrom)
-      .flatMap(c => liveFiles(dir, Some(c.version))).toSet
+      .flatMap(c => liveAt(dir, cs, Some(c.version)).map(_._1)).toSet
     val all = cs.flatMap(_.add).toSet
     val doomed = (all -- keep).toSeq.sorted
     val data = dataDir(dir)
@@ -595,7 +559,7 @@ object TableLog {
     * pressure gauge a compaction policy reads (commit-log metadata
     * only; no filesystem listing, no data touched).
     */
-  def liveFileCount(dir: String): Int = liveFiles(dir, None).size
+  def liveFileCount(dir: String): Int = liveAt(dir, commits(dir), None).size
 
   /** [[appendStream]] with a MAINTENANCE POLICY under the commit log
     * (VERDICT r13 task 7): each micro-batch lands as an append

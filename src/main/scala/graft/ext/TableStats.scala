@@ -8,7 +8,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.types.{DateType, StringType, TimestampType, TimestampNTZType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, StructType, TimestampType, TimestampNTZType}
 
 /** Per-file column statistics for [[TableLog]] data skipping
   * (VERDICT r14 "What's missing" #1 / "Next round" #1): min/max/null
@@ -51,13 +51,18 @@ object TableStats {
 
   final case class FileStats(rows: Long, cols: Map[String, ColStats])
 
-  /** Footer-only stats for one data file; empty map when the footer
-    * carries nothing usable (never an error — stats are an optimization).
+  /** Footer-only read of one Spark-written data file: its stats
+    * (empty map when the footer carries nothing usable — never an
+    * error, stats are an optimization) and the Spark row schema its
+    * writer recorded, the schema parquet inference would return.
     */
-  def fromFooter(path: Path, conf: Configuration): FileStats = {
+  def fromFooter(path: Path, conf: Configuration): (FileStats, StructType) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
     try {
       val footer = reader.getFooter
+      val rowSchema = Option(footer.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+        .getOrElse(sys.error(s"$path carries no Spark row schema"))
       val blocks = scala.jdk.CollectionConverters
         .ListHasAsScala(footer.getBlocks).asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -81,10 +86,10 @@ object TableStats {
           acc(name) = next
         }
       }
-      FileStats(rows, acc.collect {
+      (FileStats(rows, acc.collect {
         case (name, Some((mn, mx, nu))) if mn.isDefined || nu.isDefined =>
           name -> ColStats(mn, mx, nu)
-      }.toMap)
+      }.toMap), DataType.fromJson(rowSchema).asInstanceOf[StructType])
     } finally reader.close()
   }
 

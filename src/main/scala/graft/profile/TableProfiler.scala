@@ -197,10 +197,9 @@ object TableProfiler {
     // whole query at sf0.1). The sketch merges are associative (HLL
     // registers merge bitwise; KLL/GK summary merge is the documented
     // approximate path), so parallel partials are safe here.
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val spreadDf =
-      if (df.queryExecution.toRdd.getNumPartitions >= parallelism) df
-      else df.repartition(parallelism)
+      if (!graft.ext.Dedup.underParallel(df)) df
+      else df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     val aggs = baseStats(cols) ++
       cols.zipWithIndex.map { case (c, i) => distinctAgg(c).as(s"c${i}_2") } ++
       cols.zipWithIndex.map { case (c, i) => medianAgg(c).as(s"c${i}_6") }
@@ -256,20 +255,14 @@ object TableProfiler {
     // string at every exchange this plan reuses
     val stackArgs = cols.zipWithIndex
       .map { case (c, i) => s"$i, cast(`$c` as double)" }.mkString(", ")
-    // spread first: inputs with few row groups would otherwise run the
-    // whole stack+shuffle-write in one scan task; everything downstream
-    // is partitioning-independent, so this is safe (unlike the old
-    // avg/stddev_samp subtree). CONDITIONAL: a real 100 TB table
-    // already scans as thousands of tasks — inserting a full-table
-    // round-robin exchange there would only add I/O, so the spread
-    // fires only when the scan is under-parallel.
+    // spread first (Dedup.underParallel): inputs with few row groups
+    // would otherwise run the whole stack+shuffle-write in one scan
+    // task; everything downstream is partitioning-independent, so this
+    // is safe (unlike the old avg/stddev_samp subtree)
     val spark = df.sparkSession
-    val parallelism = spark.sparkContext.defaultParallelism
-    // toRdd, not df.rdd — see Dedup.spread: same partition count, no
-    // extra per-call deserializer RDD on top of the planned query
     val spreadDf =
-      if (df.queryExecution.toRdd.getNumPartitions >= parallelism) df
-      else df.repartition(parallelism)
+      if (!graft.ext.Dedup.underParallel(df)) df
+      else df.repartition(spark.sparkContext.defaultParallelism)
     // The value-counts relation is SHARED (persist, executor block
     // store, memory-then-disk): its two whole-job consumers — the stats
     // collect and the σ+median pass below — would otherwise each

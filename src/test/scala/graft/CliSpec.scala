@@ -3,6 +3,7 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import graft.TestSpark.jobsOf
 import graft.exec.ResultSet
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -160,34 +161,6 @@ class CliSpec extends AnyFunSuite {
     assert(outB.toString(StandardCharsets.UTF_8) ==
       diffs + "\nwrote base_result.tsv target_result.tsv\n")
     assert(diffs.contains("n_regionkey"))
-  }
-
-  /** Spark jobs started while `body` ran, counted by a listener. A
-    * marker job after `body` closes the count: the listener bus
-    * delivers in order, so once the marker's start is seen every
-    * earlier job start has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.concurrent.{Await, Promise}
-    import scala.concurrent.duration._
-    val sc = spark.sparkContext
-    val Marker = "graft.spec.marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markerSeen = Promise[Unit]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty(Marker) != null)
-          markerSeen.trySuccess(())
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty(Marker, "1")
-      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(Marker, null)
-      Await.result(markerSeen.future, 1.minute)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a vimdiff runs at most 20 Spark jobs") {

@@ -490,4 +490,141 @@ class TableLogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       TableLog.read(spark, dir, Some(7))) // version never committed
   }
+
+  // The live data files at `asOf`, folded from the log in add order:
+  // the file list a parquet-inference reference read starts from.
+  private def liveFiles(dir: String, asOf: Option[Int] = None): Seq[String] = {
+    val live = scala.collection.mutable.LinkedHashSet[String]()
+    TableLog.commits(dir).filter(c => asOf.forall(c.version <= _))
+      .foreach { c => live ++= c.add; live --= c.remove }
+    live.toSeq.map(n => s"$dir/data/$n")
+  }
+
+  // Rows by `id`; Row equality compares binary cells by content.
+  private def rowsById(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.sortBy(_.getAs[Long]("id"))
+
+  // The log-recorded read against parquet inference over the same files.
+  private def assertInferred(dir: String, asOf: Option[Int] = None,
+      mergeSchema: Boolean = false): Unit = {
+    val got = TableLog.read(spark, dir, asOf)
+    val r = if (mergeSchema) spark.read.option("mergeSchema", "true")
+      else spark.read
+    val ref = r.parquet(liveFiles(dir, asOf): _*)
+    assert(got.schema == ref.schema, s"schema at $asOf")
+    assert(rowsById(got) == rowsById(ref), s"rows at $asOf")
+  }
+
+  test("recorded schema: every read equals parquet inference over its live files") {
+    val dir = freshDir()
+    TableLog.init(base.repartition(2), dir)
+    assertInferred(dir)
+    TableLog.append(Seq((5L, "e", 50.0)).toDF("id", "tag", "v"), dir)
+    assertInferred(dir)
+    TableLog.merge(Seq((1L, "x", 0.0, Merge.Delete), (6L, "f", 60.0, Merge.Upsert))
+      .toDF("id", "tag", "v", Merge.OpCol), dir, "id")
+    assertInferred(dir)
+    TableLog.compact(spark, dir)
+    assertInferred(dir)
+    (0 to 2).foreach(v => assertInferred(dir, Some(v)))
+    // an evolved table: widening and subset appends under the flag
+    val ev = freshDir()
+    TableLog.init(base.coalesce(1), ev)
+    TableLog.append(Seq((9L, "x", 9.0, "EX")).toDF("id", "tag", "v", "extra"),
+      ev, mergeSchema = true)
+    TableLog.append(Seq((10L, "y")).toDF("id", "tag"), ev, mergeSchema = true)
+    assertInferred(ev, mergeSchema = true)
+    assertInferred(ev, Some(1), mergeSchema = true)
+    TableLog.compact(spark, ev)
+    assertInferred(ev)
+    // a type matrix: every Spark type a table column can carry
+    val matrix = spark.range(0, 6).selectExpr(
+      "id", "CAST(id AS TINYINT) AS c_tinyint",
+      "CAST(id AS SMALLINT) AS c_smallint", "CAST(id AS INT) AS c_int",
+      "CAST(id AS FLOAT) / 3 AS c_float", "CAST(id AS DOUBLE) / 3 AS c_double",
+      "CAST(id / 3 AS DECIMAL(10,2)) AS c_dec10",
+      "CAST(id * 1e20 AS DECIMAL(38,1)) AS c_dec38",
+      "id % 2 = 0 AS c_boolean", "CAST(id AS STRING) AS c_string",
+      "CAST(CAST(id AS STRING) AS BINARY) AS c_binary",
+      "DATE_ADD(DATE'2024-02-28', CAST(id AS INT)) AS c_date",
+      "TIMESTAMP'2024-02-28 12:00:00' + MAKE_INTERVAL(0, 0, 0, 0, 0, 0, id) AS c_ts",
+      "TIMESTAMP_NTZ'2024-02-28 12:00:00' + MAKE_INTERVAL(0, 0, 0, 0, 0, 0, id) AS c_ts_ntz",
+      "ARRAY(id, NULL) AS c_array", "MAP(CAST(id AS STRING), id) AS c_map",
+      "NAMED_STRUCT('a', id, 'b', ARRAY(CAST(id AS STRING))) AS c_struct",
+      "CAST(CAST(id AS STRING) AS CHAR(3)) AS c_char",
+      "CAST(CAST(id AS STRING) AS VARCHAR(5)) AS c_varchar")
+    val mt = freshDir()
+    TableLog.init(matrix.repartition(2), mt)
+    assert(TableLog.read(spark, mt).columns.length == 19)
+    assertInferred(mt)
+  }
+
+  test("recorded schema: building a read starts no Spark job") {
+    import TestSpark.jobsOf
+    val dir = freshDir()
+    TableLog.init(base.repartition(2), dir)
+    TableLog.append(Seq((5L, "e", 50.0)).toDF("id", "tag", "v"), dir)
+    assert(jobsOf(TableLog.read(spark, dir)) == 0, "current version")
+    assert(jobsOf(TableLog.read(spark, dir, Some(0))) == 0, "older version")
+    var kept: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { kept = TableLog.readWhere(spark, dir, "id >= 5") } == 0,
+      "readWhere keeping a file")
+    assert(kept.inputFiles.length == 1 && kept.count() == 1)
+    var none: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { none = TableLog.readWhere(spark, dir, "id > 1000") } == 0,
+      "readWhere pruning every file")
+    assert(none.inputFiles.isEmpty && none.count() == 0 &&
+      none.schema == TableLog.read(spark, dir).schema)
+    var asOf: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { asOf = graft.exec.TableLogSql.select(spark,
+      "SELECT count(*) FROM t FOR VERSION AS OF 0", Map("t" -> dir)) } == 0,
+      "FOR VERSION AS OF select")
+    assert(asOf.collect().head.getLong(0) == 4L)
+  }
+
+  test("recorded schema: records from older code read the same, job-free") {
+    import TestSpark.jobsOf
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    // "columns": the previous record format; neither field: pre-r15
+    // (which had no stats either)
+    for (format <- Seq("columns", "pre-r15")) {
+      val dir = freshDir()
+      TableLog.init(base.coalesce(1), dir)
+      TableLog.append(Seq((9L, "x", 9.0, "EX")).toDF("id", "tag", "v", "extra"),
+        dir, mergeSchema = true)
+      def reads = Seq(TableLog.read(spark, dir), TableLog.read(spark, dir, Some(0)),
+        TableLog.readWhere(spark, dir, "id >= 4"))
+      val want = reads.map(df => (df.schema, rowsById(df)))
+      val log = new java.io.File(dir, "_log")
+      log.listFiles().filter(_.getName.endsWith(".json")).foreach { f =>
+        val node = m.readTree(java.nio.file.Files.readString(f.toPath))
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        val cols = TableLog.commits(dir).find(c => f.getName == f"v${c.version}%08d.json")
+          .get.columns
+        node.remove("schema")
+        if (format == "columns") {
+          val arr = node.putArray("columns"); cols.foreach(arr.add)
+        } else node.remove("stats")
+        java.nio.file.Files.writeString(f.toPath, m.writeValueAsString(node))
+        new java.io.File(log, s".${f.getName}.crc").delete()
+      }
+      assert(log.listFiles().filter(_.getName.endsWith(".json")).forall(f =>
+        !java.nio.file.Files.readString(f.toPath).contains("\"schema\"")))
+      var got: Seq[org.apache.spark.sql.DataFrame] = Nil
+      assert(jobsOf { got = reads } == 0, s"$format records")
+      assert(got.map(df => (df.schema, rowsById(df))) == want, s"$format records")
+    }
+  }
+
+  test("recorded schema: a retyped column fails the read when it is built") {
+    val dir = freshDir()
+    TableLog.init(base.coalesce(1), dir) // v is double
+    TableLog.append(Seq((9L, "x", "nine")).toDF("id", "tag", "V"), dir,
+      mergeSchema = true)
+    val e = intercept[IllegalArgumentException](TableLog.read(spark, dir))
+    assert(e.getMessage.contains("column v is double") &&
+      e.getMessage.contains("but string"), e.getMessage)
+    // each version alone is still one type
+    assert(TableLog.read(spark, dir, Some(0)).count() == 4)
+  }
 }
