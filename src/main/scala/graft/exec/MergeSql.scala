@@ -1,6 +1,15 @@
 package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.parser.{AbstractSqlParser, AstBuilder, ParseException}
+import org.apache.spark.sql.catalyst.parser.SqlBaseParser.QueryContext
+import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, InsertAction,
+  LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction}
+import org.antlr.v4.runtime.ParserRuleContext
+import org.antlr.v4.runtime.misc.Interval
 import org.apache.spark.sql.functions._
 
 /** ANSI/Trino `MERGE INTO` over [[graft.ext.TableLog]] tables — the
@@ -11,6 +20,14 @@ import org.apache.spark.sql.functions._
   * lives in table formats), so this module parses the statement and
   * compiles it onto the engine's own table format: one snapshot read,
   * relational algebra, one copy-on-write commit.
+  *
+  * The statement is translated once ([[TrinoDialect.translate]], so
+  * Trino spellings work inside the clauses too) and parsed by Spark's
+  * own SQL grammar into a `MergeIntoTable`. Names come from its
+  * relations; every condition, SET value, VALUES item and USING
+  * subquery in [[Stmt]] is the exact source text of its node, so
+  * literals, comments and `CASE WHEN` anywhere in the statement are
+  * the grammar's business, not a scanner's.
   *
   * Supported shape (the CDC MERGE everyone writes; loud errors on
   * anything else, the [[TrinoDialect]] scoping posture):
@@ -26,10 +43,13 @@ import org.apache.spark.sql.functions._
   *   [WHEN NOT MATCHED BY SOURCE AND <cond> THEN DELETE]      -- extension
   *   [WHEN NOT MATCHED BY SOURCE THEN UPDATE SET c = <expr>]  -- extension
   * }}}
-  * at least one WHEN clause; when both DELETE and UPDATE are present
-  * (in either the MATCHED or the BY SOURCE family) the DELETE must be
-  * written first (first-match-wins is honored by refusing the order
-  * this compiler would silently reorder).
+  * Spark's grammar takes the clause families in the order shown,
+  * requires at least one WHEN clause and refuses a clause without a
+  * condition that is not the last of its family. The MATCHED and the
+  * BY SOURCE family each take one of: nothing, a DELETE, an
+  * unconditional UPDATE, or a conditional DELETE followed by an
+  * unconditional UPDATE (first-match-wins is honored by refusing the
+  * order this compiler would silently reorder).
   *
   * `WHEN NOT MATCHED BY SOURCE` — target rows with NO source match —
   * is a Delta/SQL-Server EXTENSION, not ANSI (Trino rejects it);
@@ -58,14 +78,10 @@ import org.apache.spark.sql.functions._
   * against the snapshot (broadcast-class for a day's changes vs a
   * 100 TB table — the [[graft.ext.Merge.applyChangeSet]] posture) and
   * a shuffle-free UNION; the commit is [[graft.ext.TableLog]]'s
-  * staged copy-on-write write. Condition/assignment fragments pass
-  * through [[TrinoDialect.translate]], so Trino spellings work inside
-  * the clauses too.
+  * staged copy-on-write write.
   *
-  * Known scope limits, by design: equality-only ON (no range/expr
-  * match conditions), and an expression containing the exact token
-  * sequence `WHEN MATCHED` / `WHEN NOT MATCHED` at top parenthesis
-  * level cannot appear inside a clause (wrap it in parens).
+  * Known scope limit, by design: equality-only ON (no range/expr
+  * match conditions).
   */
 object MergeSql {
 
@@ -74,7 +90,9 @@ object MergeSql {
   /** `keys` = (target column, source column) per ON conjunct — one
     * entry for a simple key, several for a composite business key
     * (VERDICT r14 task 5). `targetKey`/`sourceKey` are the simple-key
-    * accessors kept for the single-equality shape.
+    * accessors kept for the single-equality shape. Every text field
+    * (source query, conditions, SET and VALUES expressions) is Spark
+    * SQL, as [[parse]] returns it after translation.
     */
   final case class Stmt(
       target: String, targetAlias: String,
@@ -89,104 +107,80 @@ object MergeSql {
     def sourceKey: String = keys.head._2
   }
 
-  private val Ident = "[A-Za-z_][A-Za-z0-9_]*"
-
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"MERGE: $msg")
 
-  /** First top-level (paren-depth 0, outside literals/comments)
-    * occurrence of whole-word `kw` at/after `from`; -1 if none.
+  /** Spark's SQL parser, keeping the exact source text of each
+    * expression and query it builds. A node's own origin can be
+    * narrower than its text (`IS NULL` in `x IS NULL`, the `ORDER BY`
+    * of a sorted query) or another statement's (the shared `true`
+    * literal).
     */
-  private def topLevelKeyword(sql: String, mask: Array[Boolean],
-      kw: String, from: Int): Int = {
-    var i = from; var depth = 0
-    while (i < sql.length) {
-      if (!mask(i)) sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && TrinoDialect.isKeywordAt(sql, i, kw)) return i
-      }
-      i += 1
+  private final class SpanParser extends AbstractSqlParser {
+    private val spans = new java.util.IdentityHashMap[AnyRef, String]
+    def text(n: AnyRef): String = spans.getOrDefault(n, n.toString)
+    private def kept[T <: AnyRef](ctx: ParserRuleContext, n: T): T = {
+      spans.put(n, ctx.start.getInputStream.getText(
+        Interval.of(ctx.start.getStartIndex, ctx.stop.getStopIndex)))
+      n
     }
-    -1
+    val astBuilder: AstBuilder = new AstBuilder {
+      override def expression(ctx: ParserRuleContext): Expression =
+        kept(ctx, super.expression(ctx))
+      override def visitQuery(ctx: QueryContext): LogicalPlan =
+        kept(ctx, super.visitQuery(ctx))
+    }
   }
 
-  /** Clause boundaries: every top-level `WHEN` that introduces a
-    * MATCHED / NOT MATCHED clause (a `CASE WHEN` inside a clause
-    * expression is not followed by those keywords, so it never
-    * splits).
-    */
-  private def whenStarts(sql: String, mask: Array[Boolean],
-      from: Int): Seq[Int] = {
-    val out = Seq.newBuilder[Int]
-    var i = from
-    while (i < sql.length) {
-      val hit = topLevelKeyword(sql, mask, "WHEN", i)
-      if (hit < 0) return out.result()
-      val rest = sql.substring(hit + 4)
-      if (rest.matches("(?is)\\s+(MATCHED|NOT\\s+MATCHED)\\b.*")) out += hit
-      i = hit + 4
+  def parse(sql: String): Stmt = {
+    val parser = new SpanParser
+    import parser.text
+    val m = (try parser.parsePlan(TrinoDialect.translate(sql))
+      catch { case e: ParseException => fail(e.getMessage.trim) }) match {
+      case m: MergeIntoTable if !m.withSchemaEvolution => m
+      case _ => fail("statement must start with MERGE INTO <name> [AS alias]")
     }
-    out.result()
-  }
-
-  def parse(sqlRaw: String): Stmt = {
-    val sql = sqlRaw.trim.stripSuffix(";").trim
-    val mask = TrinoDialect.literalMask(sql)
-    val head = ("(?is)^MERGE\\s+INTO\\s+(" + Ident + "(?:\\." + Ident +
-      ")*)\\s*(?:AS\\s+)?(" + Ident + ")?\\s*").r
-    val h = head.findFirstMatchIn(sql)
-      .getOrElse(fail("statement must start with MERGE INTO <name> [AS alias]"))
-    val target = h.group(1)
-    // search USING from the statement head: the greedy alias group may
-    // have swallowed the keyword itself when no alias was written
-    val usingAt = topLevelKeyword(sql, mask, "USING", 0)
-    if (usingAt < 0) fail("missing USING")
-    // alias text sits between the target name and USING
-    val targetAlias = Option(h.group(2))
-      .filter(a => !a.equalsIgnoreCase("USING"))
-      .getOrElse(target.split('.').last)
-    val onAt = topLevelKeyword(sql, mask, "ON", usingAt)
-    if (onAt < 0) fail("missing ON")
-    val usingText = sql.substring(usingAt + 5, onAt).trim
-    val (source, isSub, aliasText) =
-      if (usingText.startsWith("(")) {
-        val end = TrinoDialect.closingParen(usingText, 0,
-          TrinoDialect.literalMask(usingText))
-        if (end < 0) fail("unbalanced parentheses in USING subquery")
-        (usingText.substring(1, end).trim, true,
-          usingText.substring(end + 1).trim)
-      } else {
-        val m = ("(?s)^(" + Ident + "(?:\\." + Ident + ")*)(.*)$").r
-          .findFirstMatchIn(usingText)
-          .getOrElse(fail(s"cannot parse USING clause: $usingText"))
-        (m.group(1), false, m.group(2).trim)
-      }
-    val sourceAlias = ("(?is)^(?:AS\\s+)?(" + Ident + ")$").r
-      .findFirstMatchIn(aliasText).map(_.group(1))
-      .getOrElse(
-        if (aliasText.isEmpty && !isSub) source.split('.').last
-        else fail(s"cannot parse USING alias: '$aliasText'"))
-    val whens = whenStarts(sql, mask, onAt)
-    if (whens.isEmpty) fail("at least one WHEN clause is required")
-    val onText = sql.substring(onAt + 2, whens.head).trim
-    // the ON clause is a CONJUNCTION of alias-qualified equalities —
-    // one conjunct for a simple key, several for a composite business
-    // key (the standard CDC shape). Split on top-level AND (literal
-    // masking + paren depth, so an AND inside a quoted string or a
-    // parenthesized fragment never splits).
-    val onMask = TrinoDialect.literalMask(onText)
-    val andAts = Iterator.iterate(topLevelKeyword(onText, onMask, "AND", 0))(
-      at => if (at < 0) -1 else topLevelKeyword(onText, onMask, "AND", at + 3))
-      .takeWhile(_ >= 0).toSeq
-    val conjuncts = (Seq(-3) ++ andAts :+ onText.length)
-      .sliding(2).map { case Seq(a, b) => onText.substring(a + 3, b).trim }
-      .toSeq
-    val onRe = ("(?is)^(" + Ident + ")\\.(" + Ident + ")\\s*=\\s*(" +
-      Ident + ")\\.(" + Ident + ")$").r
-    val keys: Seq[(String, String)] = conjuncts.map {
-      case onRe(q1, c1, q2, c2) =>
+    def column(e: Expression): String = e match {
+      case UnresolvedAttribute(Seq(c)) => c
+      case _ => fail(s"expected a column name, got: ${text(e)}")
+    }
+    def sets(as: Seq[logical.Assignment]): Seq[Assignment] =
+      as.map(a => Assignment(column(a.key), text(a.value)))
+    // a table reference's name and alias (the name's last part when no
+    // alias is written)
+    def named(p: LogicalPlan): Option[(String, String)] = p match {
+      case SubqueryAlias(a, u: UnresolvedRelation) => Some((u.tableName, a.name))
+      case u: UnresolvedRelation => Some((u.tableName, u.multipartIdentifier.last))
+      case _ => None
+    }
+    // one MATCHED or BY SOURCE family as (DELETE condition, UPDATE SET)
+    def deleteThenUpdate(family: String, actions: Seq[MergeAction])
+        : (Option[Option[String]], Option[Seq[Assignment]]) = actions match {
+      case Seq() => (None, None)
+      case Seq(DeleteAction(c)) => (Some(c.map(text)), None)
+      case Seq(UpdateAction(None, as, _)) => (None, Some(sets(as)))
+      case Seq(DeleteAction(c), UpdateAction(None, as, _)) =>
+        (Some(c.map(text)), Some(sets(as)))
+      case _ => fail(s"unsupported WHEN $family clauses: write at most " +
+        "[AND <cond>] THEN DELETE, then one unconditional UPDATE SET " +
+        "<col> = <expr>, ... (no UPDATE SET *, no conditional UPDATE, no " +
+        "DELETE after the UPDATE)")
+    }
+    val (target, targetAlias) = named(m.targetTable)
+      .getOrElse(fail("MERGE INTO needs a table name"))
+    val (source, isSub, sourceAlias) = named(m.sourceTable)
+      .map { case (n, a) => (n, false, a) }
+      .getOrElse(m.sourceTable match {
+        case SubqueryAlias(a, q) => (text(q), true, a.name)
+        case _ => fail("a USING subquery needs an alias")
+      })
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case _ => Seq(e)
+    }
+    val onText = text(m.mergeCondition)
+    val keys = conjuncts(m.mergeCondition).map {
+      case EqualTo(UnresolvedAttribute(Seq(q1, c1)), UnresolvedAttribute(Seq(q2, c2))) =>
         if (q1.equalsIgnoreCase(targetAlias) &&
           q2.equalsIgnoreCase(sourceAlias)) (c1, c2)
         else if (q1.equalsIgnoreCase(sourceAlias) &&
@@ -195,85 +189,19 @@ object MergeSql {
           s"<$sourceAlias>.<col>, got: $onText")
       case bad => fail("each ON conjunct must be a single " +
         "alias-qualified equality (AND-combined for composite keys), " +
-        s"got: $bad")
+        s"got: ${text(bad)}")
     }
     if (keys.map(_._1.toLowerCase).distinct.size != keys.size)
       fail(s"duplicate target column in composite ON: $onText")
-    // clause spans
-    val spans = whens.zipAll(whens.drop(1), -1, sql.length)
-      .map { case (a, b) => sql.substring(a + 4, b).trim }
-    var deleteCond: Option[Option[String]] = None
-    var updateSet: Option[Seq[Assignment]] = None
-    var insert: Option[(Seq[String], Seq[String], Option[String])] = None
-    var bySourceDelete: Option[Option[String]] = None
-    var bySourceUpdate: Option[Seq[Assignment]] = None
-    var deleteSeen = -1; var updateSeen = -1
-    var bsDeleteSeen = -1; var bsUpdateSeen = -1
-    val delCondRe = "(?is)^MATCHED\\s+AND\\s+(.*?)\\s+THEN\\s+DELETE$".r
-    val delRe = "(?is)^MATCHED\\s+THEN\\s+DELETE$".r
-    val updRe = "(?is)^MATCHED\\s+THEN\\s+UPDATE\\s+SET\\s+(.*)$".r
-    val insRe = ("(?is)^NOT\\s+MATCHED\\s*(?:BY\\s+TARGET\\s*)?" +
-      "(?:AND\\s+(.*?)\\s*)?THEN\\s+" +
-      "INSERT\\s*\\((.*?)\\)\\s*VALUES\\s*\\((.*)\\)$").r
-    val bsDelCondRe = ("(?is)^NOT\\s+MATCHED\\s+BY\\s+SOURCE\\s+AND\\s+" +
-      "(.*?)\\s+THEN\\s+DELETE$").r
-    val bsDelRe = "(?is)^NOT\\s+MATCHED\\s+BY\\s+SOURCE\\s+THEN\\s+DELETE$".r
-    val bsUpdRe = ("(?is)^NOT\\s+MATCHED\\s+BY\\s+SOURCE\\s+THEN\\s+" +
-      "UPDATE\\s+SET\\s+(.*)$").r
-    def parseSets(sets: String): Seq[Assignment] = {
-      val assignRe = ("(?s)^\\s*(" + Ident + ")\\s*=\\s*(.*?)\\s*$").r
-      TrinoDialect.splitTopLevel(sets).map {
-        case assignRe(c, e) => Assignment(c, e)
-        case bad => fail(s"cannot parse SET assignment: $bad")
-      }
-    }
-    spans.zipWithIndex.foreach { case (span, ix) =>
-      span match {
-        case delCondRe(c) =>
-          if (deleteCond.isDefined) fail("duplicate DELETE clause")
-          deleteCond = Some(Some(c)); deleteSeen = ix
-        case delRe() =>
-          if (deleteCond.isDefined) fail("duplicate DELETE clause")
-          deleteCond = Some(None); deleteSeen = ix
-        case updRe(sets) =>
-          if (updateSet.isDefined) fail("duplicate UPDATE clause")
-          updateSet = Some(parseSets(sets))
-          updateSeen = ix
-        // BY SOURCE family before the INSERT pattern: both start with
-        // NOT MATCHED
-        case bsDelCondRe(c) =>
-          if (bySourceDelete.isDefined) fail("duplicate BY SOURCE DELETE clause")
-          bySourceDelete = Some(Some(c)); bsDeleteSeen = ix
-        case bsDelRe() =>
-          if (bySourceDelete.isDefined) fail("duplicate BY SOURCE DELETE clause")
-          bySourceDelete = Some(None); bsDeleteSeen = ix
-        case bsUpdRe(sets) =>
-          if (bySourceUpdate.isDefined) fail("duplicate BY SOURCE UPDATE clause")
-          bySourceUpdate = Some(parseSets(sets))
-          bsUpdateSeen = ix
-        case insRe(c, cols, vals) =>
-          if (insert.isDefined) fail("duplicate INSERT clause")
-          insert = Some((
-            TrinoDialect.splitTopLevel(cols).map(_.trim),
-            TrinoDialect.splitTopLevel(vals).map(_.trim),
-            Option(c)))
-        case bad => fail(s"unsupported WHEN clause: WHEN $bad")
-      }
-    }
-    if (deleteCond.contains(None) && updateSet.isDefined)
-      fail("UPDATE is unreachable after an unconditional DELETE")
-    if (deleteSeen >= 0 && updateSeen >= 0 && updateSeen < deleteSeen)
-      fail("write the DELETE clause before UPDATE — ANSI first-match-" +
-        "wins would route delete-condition rows into the UPDATE")
-    if (bySourceDelete.contains(None) && bySourceUpdate.isDefined)
-      fail("BY SOURCE UPDATE is unreachable after an unconditional " +
-        "BY SOURCE DELETE")
-    if (bsDeleteSeen >= 0 && bsUpdateSeen >= 0 && bsUpdateSeen < bsDeleteSeen)
-      fail("write the BY SOURCE DELETE clause before BY SOURCE UPDATE — " +
-        "first-match-wins would route delete-condition rows into the UPDATE")
-    insert.foreach { case (cols, vals, _) =>
-      if (cols.size != vals.size)
-        fail(s"INSERT lists ${cols.size} columns but ${vals.size} values")
+    val (deleteCond, updateSet) = deleteThenUpdate("MATCHED", m.matchedActions)
+    val (bySourceDelete, bySourceUpdate) =
+      deleteThenUpdate("NOT MATCHED BY SOURCE", m.notMatchedBySourceActions)
+    val insert = m.notMatchedActions match {
+      case Seq() => None
+      case Seq(InsertAction(c, as)) =>
+        Some((as.map(a => column(a.key)), as.map(a => text(a.value)), c.map(text)))
+      case _ => fail("WHEN NOT MATCHED takes one [AND <cond>] THEN INSERT " +
+        "(cols) VALUES (exprs) clause (no INSERT *)")
     }
     Stmt(target, targetAlias, source, isSub, sourceAlias, keys,
       deleteCond, updateSet, insert, bySourceDelete, bySourceUpdate)
@@ -285,7 +213,7 @@ object MergeSql {
     */
   def compile(spark: SparkSession, stmt: Stmt, base: DataFrame): DataFrame = {
     val src =
-      if (stmt.sourceIsSubquery) spark.sql(TrinoDialect.translate(stmt.source))
+      if (stmt.sourceIsSubquery) spark.sql(stmt.source)
       else spark.table(stmt.source)
     // ANSI duplicate-match rule: a TARGET row matched by multiple
     // source rows is an error. The probe therefore counts only source
@@ -312,12 +240,11 @@ object MergeSql {
     val targetCols = base.columns.toSeq
     val types = base.schema.fields.map(f => f.name -> f.dataType).toMap
     def shaped(c: String, e: Column): Column = e.cast(types(c)).as(c)
-    def frag(text: String): Column = expr(TrinoDialect.translate(text))
     def applySets(rows: DataFrame, assigns: Seq[Assignment]): DataFrame = {
       val unknown = assigns.map(_.column).filterNot(targetCols.contains)
       if (unknown.nonEmpty)
         fail(s"SET assigns unknown column(s): ${unknown.mkString(", ")}")
-      val setMap = assigns.map(a => a.column -> frag(a.expr)).toMap
+      val setMap = assigns.map(a => a.column -> expr(a.expr)).toMap
       rows.select(targetCols.map(c => shaped(c,
         setMap.getOrElse(c, col(s"${stmt.targetAlias}.$c")))): _*)
     }
@@ -327,7 +254,7 @@ object MergeSql {
     val survivorsRaw = t.join(sl, keyEq, "left_anti")
     val survivorsKept = stmt.bySourceDelete match {
       case Some(Some(cond)) =>
-        survivorsRaw.where(!coalesce(frag(cond), lit(false)))
+        survivorsRaw.where(!coalesce(expr(cond), lit(false)))
       case Some(None) => survivorsRaw.where(lit(false))
       case None => survivorsRaw
     }
@@ -342,7 +269,7 @@ object MergeSql {
       // to the next clause (ANSI three-valued clause routing), so the
       // negation must coalesce — a bare !NULL would drop the row
       case Some(Some(cond)) =>
-        matched.where(!coalesce(frag(cond), lit(false)))
+        matched.where(!coalesce(expr(cond), lit(false)))
       case Some(None) => matched.where(lit(false))
       case None => matched
     }
@@ -358,11 +285,11 @@ object MergeSql {
         if (unknown.nonEmpty)
           fail(s"INSERT names unknown column(s): ${unknown.mkString(", ")}")
         val unmatched = sl.join(t, keyEq, "left_anti")
-        val kept = condOpt.map(c => unmatched.where(frag(c)))
+        val kept = condOpt.map(c => unmatched.where(expr(c)))
           .getOrElse(unmatched)
         val valMap = cols.zip(vals).toMap
         kept.select(targetCols.map(c => shaped(c,
-          valMap.get(c).map(frag).getOrElse(lit(null)))): _*)
+          valMap.get(c).map(expr).getOrElse(lit(null)))): _*)
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base.schema)

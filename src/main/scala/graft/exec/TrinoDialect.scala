@@ -91,7 +91,7 @@ object TrinoDialect {
   /** Index of the bracket closing the `(` or `[` at `open`, honoring
     * nesting, string literals, and comments; -1 if unbalanced.
     */
-  private[exec] def closingParen(sql: String, open: Int,
+  private def closingParen(sql: String, open: Int,
       lit: Array[Boolean]): Int = {
     val (opens, closes) = if (sql.charAt(open) == '[') ('[', ']') else ('(', ')')
     var j = open; var depth = 0
@@ -109,7 +109,7 @@ object TrinoDialect {
   /** Split an argument list at top-level commas (quote / comment /
     * paren / bracket aware).
     */
-  private[exec] def splitTopLevel(args: String): Seq[String] = {
+  private def splitTopLevel(args: String): Seq[String] = {
     val lit = literalMask(args)
     val out = Seq.newBuilder[String]
     var start = 0; var depth = 0; var i = 0
@@ -138,7 +138,7 @@ object TrinoDialect {
     * are masked too, so a column literally named `varchar` or
     * `unnest` is never treated as a keyword by later rewrites.
     */
-  private[exec] def literalMask(sql: String): Array[Boolean] = {
+  private def literalMask(sql: String): Array[Boolean] = {
     val m = new Array[Boolean](sql.length)
     var i = 0
     while (i < sql.length) {
@@ -184,7 +184,7 @@ object TrinoDialect {
   /** True iff `sql(at)` starts keyword `kw` at a word boundary on both
     * sides (case-insensitive).
     */
-  private[exec] def isKeywordAt(sql: String, at: Int, kw: String): Boolean = {
+  private def isKeywordAt(sql: String, at: Int, kw: String): Boolean = {
     def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     at >= 0 && at + kw.length <= sql.length &&
       sql.regionMatches(true, at, kw, 0, kw.length) &&

@@ -554,11 +554,11 @@ class TrinoParitySpec extends AnyFunSuite {
     rejects("MERGE INTO t AS a USING s AS b ON a.k = b.k " +
       "WHEN NOT MATCHED BY SOURCE THEN DELETE " +
       "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 1",
-      "unreachable")
+      "NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION")
     rejects("MERGE INTO t AS a USING s AS b ON a.k = b.k " +
       "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 1 " +
       "WHEN NOT MATCHED BY SOURCE AND a.v < 0 THEN DELETE",
-      "before BY SOURCE UPDATE")
+      "NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION")
   }
 
   test("merge sql: out-of-scope shapes fail loudly, not silently") {
@@ -578,12 +578,14 @@ class TrinoParitySpec extends AnyFunSuite {
       "WHEN MATCHED THEN DELETE", "duplicate target column")
     rejects("MERGE INTO t AS a USING s AS b ON a.k = b.k " +
       "WHEN MATCHED THEN DELETE WHEN MATCHED THEN UPDATE SET v = b.v",
-      "unreachable")
+      "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION")
     rejects("MERGE INTO t AS a USING s AS b ON a.k = b.k " +
       "WHEN MATCHED THEN UPDATE SET v = b.v " +
-      "WHEN MATCHED AND b.v < 0 THEN DELETE", "before UPDATE")
+      "WHEN MATCHED AND b.v < 0 THEN DELETE",
+      "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION")
     rejects("MERGE INTO t AS a USING s AS b ON a.k = b.k " +
-      "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (b.k)", "1 values")
+      "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (b.k)",
+      "The number of inserted values cannot match the fields")
   }
 
   test("merge sql: compile routes clauses with ANSI semantics (incl. NULL cond)") {
@@ -628,5 +630,121 @@ class TrinoParitySpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       MergeSql.compile(spark, stmt, base))
     assert(e.getMessage.contains("duplicate"))
+  }
+
+  /** (id, v) after compiling `sql` against a three-row target; the
+    * source view `merge_grammar_src` has a boolean column `matched`.
+    */
+  private def mergeGrammarRows(sql: String): Seq[(Long, Double)] = {
+    import spark.implicits._
+    import graft.exec.MergeSql
+    Seq((1L, 11.0, true, false, "WHEN NOT MATCHED"), (2L, 22.0, false, true, "x"),
+      (4L, 44.0, true, false, "y"))
+      .toDF("id", "v", "matched", "d", "tag").createOrReplaceTempView("merge_grammar_src")
+    val base = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "v")
+    MergeSql.compile(spark, MergeSql.parse(sql), base)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
+  test("merge sql: a CASE WHEN over a column named matched is one SET value") {
+    import graft.exec.MergeSql
+    val sql = "MERGE INTO tbl AS t USING merge_grammar_src AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = CASE WHEN matched THEN s.v ELSE 0 END"
+    assert(MergeSql.parse(sql).updateSet == Some(Seq(
+      MergeSql.Assignment("v", "CASE WHEN matched THEN s.v ELSE 0 END"))))
+    assert(mergeGrammarRows(sql) == Seq((1L, 11.0), (2L, 0.0), (3L, 30.0)))
+  }
+
+  test("merge sql: comments between WHEN clauses are not clause text") {
+    import graft.exec.MergeSql
+    for (comment <- Seq("-- drop departed\n", "/* drop departed */")) {
+      val sql = "MERGE INTO tbl AS t USING merge_grammar_src AS s ON t.id = s.id " +
+        s"WHEN MATCHED AND s.d THEN DELETE $comment " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
+      val stmt = MergeSql.parse(sql)
+      assert(stmt.deleteCond == Some(Some("s.d")), comment)
+      assert(stmt.updateSet == Some(Seq(MergeSql.Assignment("v", "s.v"))), comment)
+      assert(mergeGrammarRows(sql) == Seq((1L, 11.0), (3L, 30.0), (4L, 44.0)), comment)
+    }
+  }
+
+  test("merge sql: a literal spelling a clause inside a condition is data") {
+    import graft.exec.MergeSql
+    val sql = "MERGE INTO tbl AS t USING merge_grammar_src AS s ON t.id = s.id " +
+      "WHEN MATCHED AND s.tag = 'WHEN NOT MATCHED' THEN DELETE " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v"
+    assert(MergeSql.parse(sql).deleteCond == Some(Some("s.tag = 'WHEN NOT MATCHED'")))
+    assert(mergeGrammarRows(sql) == Seq((2L, 22.0), (3L, 30.0)))
+  }
+
+  test("merge sql: shapes Stmt cannot express and out-of-order clause families are refused") {
+    import graft.exec.MergeSql
+    val head = "MERGE INTO t AS a USING s AS b ON a.k = b.k "
+    for ((sql, needle) <- Seq(
+        head + "WHEN MATCHED AND b.v > 0 THEN UPDATE SET v = b.v " +
+          "WHEN MATCHED THEN DELETE" -> "unsupported WHEN MATCHED clauses",
+        head + "WHEN MATCHED THEN UPDATE SET *" -> "no UPDATE SET *",
+        head + "WHEN NOT MATCHED THEN INSERT *" -> "no INSERT *",
+        head + "WHEN MATCHED AND b.v > 0 THEN UPDATE SET v = b.v" -> "no conditional UPDATE",
+        "MERGE INTO t AS a USING (SELECT k FROM s) ON a.k = k " +
+          "WHEN MATCHED THEN DELETE" -> "needs an alias",
+        "MERGE WITH SCHEMA EVOLUTION INTO t AS a USING s AS b ON a.k = b.k " +
+          "WHEN MATCHED THEN DELETE" -> "MERGE INTO",
+        // Spark's grammar takes the MATCHED, NOT MATCHED and BY SOURCE
+        // families in that order
+        head + "WHEN NOT MATCHED THEN INSERT (k) VALUES (b.k) " +
+          "WHEN MATCHED THEN DELETE" -> "PARSE_SYNTAX_ERROR")) {
+      val e = intercept[IllegalArgumentException](MergeSql.parse(sql))
+      assert(e.getMessage.startsWith("MERGE: ") && e.getMessage.contains(needle),
+        s"expected '$needle' in: ${e.getMessage}")
+    }
+  }
+
+  /** A TableLog table `tbl`: version 0 holds ids 1-4, version 1 adds
+    * id 5; `betweenTs` falls between the two commits.
+    */
+  private lazy val (timeTravelTables, betweenTs) = {
+    import spark.implicits._
+    import graft.ext.TableLog
+    val dir = java.nio.file.Files.createTempDirectory("graft-ttgrammar").toString
+    TableLog.init(Seq((1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0))
+      .toDF("id", "v"), dir)
+    Thread.sleep(60L) // separate commit mtimes for the timestamp rule
+    val ts = new java.sql.Timestamp(System.currentTimeMillis()).toString
+    Thread.sleep(60L)
+    TableLog.append(Seq((5L, 50.0)).toDF("id", "v"), dir)
+    (Map("tbl" -> dir), ts)
+  }
+
+  private def timeTravelCount(sql: String): Long =
+    graft.exec.TableLogSql.select(spark, sql, timeTravelTables).head.getLong(0)
+
+  test("time-travel sql: a quoted name and VERSION AS OF without FOR resolve") {
+    assert(timeTravelCount("SELECT count(*) FROM `tbl` FOR VERSION AS OF 0") == 4L)
+    assert(timeTravelCount("SELECT count(*) FROM \"tbl\" FOR VERSION AS OF 0") == 4L)
+    assert(timeTravelCount("SELECT count(*) FROM tbl VERSION AS OF 0") == 4L)
+    assert(timeTravelCount("SELECT count(*) FROM tbl FOR VERSION AS OF '0'") == 4L)
+    assert(intercept[RuntimeException](timeTravelCount(
+      "SELECT count(*) FROM tbl FOR VERSION AS OF 'v0'"))
+      .getMessage.contains("cannot parse version 'v0'"))
+  }
+
+  test("time-travel sql: clauses in CTEs and subqueries resolve, clauses in comments do not") {
+    assert(timeTravelCount(
+      "WITH old AS (SELECT * FROM tbl FOR VERSION AS OF 0) SELECT count(*) FROM old") == 4L)
+    assert(timeTravelCount("SELECT count(*) - " +
+      "(SELECT count(*) FROM tbl FOR VERSION AS OF 0) FROM tbl") == 1L)
+    assert(timeTravelCount("SELECT count(*) FROM tbl -- tbl FOR VERSION AS OF 0\n") == 5L)
+    assert(timeTravelCount(
+      "SELECT count(*) /* FROM tbl FOR VERSION AS OF 0 */ FROM tbl") == 5L)
+    assert(timeTravelCount(
+      s"SELECT count(*) FROM tbl FOR TIMESTAMP AS OF TIMESTAMP '$betweenTs'") == 4L)
+    // a character outside the BMP before the clause (the parser counts
+    // code points, a Java string UTF-16 units)
+    assert(timeTravelCount(
+      "SELECT count(*) FROM tbl FOR VERSION AS OF 0 WHERE '\uD83D\uDE00' <> ''") == 4L)
+    assert(timeTravelCount("SELECT count(*) FROM (SELECT '\uD83D\uDE00' AS e) x, " +
+      "tbl FOR VERSION AS OF 0") == 4L)
   }
 }
